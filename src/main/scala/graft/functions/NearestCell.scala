@@ -23,10 +23,16 @@ import org.apache.spark.sql.types._
   * Exactness: the per-cell distance is the same sequential
   * left-to-right fold as [[Dist2]] (identical doubles), and the
   * lexicographic (d2, id) minimum is the same total order as
-  * `min_by(id, struct(d2, id))` — iterating the id-sorted cells array
-  * with a strict `<` keeps the smallest id on ties. Cells with a
-  * ragged/null vector are skipped (the fold form yields a NULL d2
-  * there, which min_by never selects ahead of a real distance).
+  * `min_by(id, struct(d2, id))` over the cells that have a distance —
+  * `java.lang.Double.compare` ranks NaN above every real distance, as
+  * Spark's double ordering does, and the id breaks ties. Cells with a
+  * null id or a ragged/null vector (or a null element in either
+  * vector) are SKIPPED. That is where the two forms differ: the fold
+  * form yields a NULL d2 for such a cell, and `min_by`'s struct order
+  * puts that NULL first, so it would pick the degenerate cell; this
+  * kernel picks the nearest well-formed one, and returns NULL when
+  * none is. Uniform-dimension, null-free corpora never reach the
+  * difference.
   *
   * Input: `v array<double>`, `cells array<struct<id bigint,
   * cv array<double>>>` (field names free). Output:
@@ -69,7 +75,8 @@ case class NearestCell(left: Expression, right: Expression)
 }
 
 object NearestCell {
-  /** Static kernel (codegen delegates here): argmin by (d2, id). */
+  /** Static kernel (codegen delegates here): argmin by (d2, id) over
+    * the well-formed cells, NaN ranked last. */
   def compute(v: ArrayData, cells: ArrayData): InternalRow = {
     val k = cells.numElements()
     val n = v.numElements()
@@ -78,8 +85,8 @@ object NearestCell {
     var found = false
     var i = 0
     while (i < k) {
-      if (!cells.isNullAt(i)) {
-        val c = cells.getStruct(i, 2)
+      val c = if (cells.isNullAt(i)) null else cells.getStruct(i, 2)
+      if (c != null && !c.isNullAt(0) && !c.isNullAt(1)) {
         val cv = c.getArray(1)
         if (cv.numElements() == n) {
           var acc = 0.0
@@ -95,7 +102,8 @@ object NearestCell {
           }
           if (ok) {
             val id = c.getLong(0)
-            if (!found || acc < bestD2 || (acc == bestD2 && id < bestId)) {
+            val cmp = java.lang.Double.compare(acc, bestD2)
+            if (!found || cmp < 0 || (cmp == 0 && id < bestId)) {
               found = true; bestD2 = acc; bestId = id
             }
           }

@@ -8,7 +8,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * `ewm(span=n, adjust=False)`: e_0 = x_0; e_t = α·x_t + (1−α)·e_{t-1}
   * with α = 2/(n+1). EMA is the one inherently-sequential operator in the
-  * suite; it is distributed as a segmented scan:
+  * suite. [[macd]] runs it as one exact fold per symbol (a symbol's
+  * 5-minute series grows with its history, not with tick volume). The
+  * EMA chains of the other indicators (ADX, TRIX, Keltner, …) are
+  * distributed as a segmented scan:
   *
   *  1. bars are chunked by TIME — `chunk = bar_ts div (chunkBars·5min)` —
   *     so the chunk id needs no per-symbol row numbering (no per-symbol
@@ -44,7 +47,7 @@ object Ema extends Serializable {
   // no safe unpersist point inside the builders themselves.
   //
   // CONTRACT: call [[unpersistAll]] after the terminal action on each
-  // macd/emaSegmented result. A caller that never does is still bounded:
+  // segmented-scan result. A caller that never does is still bounded:
   // the registry caps itself at MaxTracked entries by evicting (and
   // unpersisting) the oldest — an evicted intermediate that is somehow
   // still live just recomputes on its next action.
@@ -66,7 +69,7 @@ object Ema extends Serializable {
   }
 
   /** Release every intermediate this object has persisted. Call after
-    * the terminal action on a [[macd]]/[[emaSegmented]] result; a
+    * the terminal action on a segmented-scan result; a
     * subsequent action on an old result simply re-materializes. */
   def unpersistAll(): Unit = {
     var d = persistedSets.poll()
@@ -237,8 +240,8 @@ object Ema extends Serializable {
         })
   }
 
-  /** Distributed segmented-scan EMA over `close` for one span — the same
-    * machinery as [[macd]] with a single recurrence. */
+  /** Distributed segmented-scan EMA over `close` for one span — the
+    * scan in the object header with a single recurrence. */
   def emaSegmented(bars: DataFrame, span: Int, chunkBars: Int = 1024,
       fanout: Int = 1024, sorted: Boolean = true): DataFrame = {
     val alpha = 2.0 / (span + 1); val beta = 1.0 - alpha
@@ -289,11 +292,10 @@ object Ema extends Serializable {
   /** K independent `ewm(adjust=False)` recursions over K input columns
     * in ONE segmented scan — the [[emaSegmented]] machinery with the
     * per-chunk summaries carrying K (decay, partial, firstExit) entries
-    * (the [[ChunkSum]] arrays were built for exactly this; [[macd]] is
-    * the K=2 instance over a single input). Used by the EMA-chain
-    * indicators (ADX smooths TR/+DM/−DM jointly; the Chaikin oscillator
-    * runs EMA3 and EMA10 of the A/D line together): one pass over the
-    * data per chain STAGE instead of one per recursion.
+    * (the [[ChunkSum]] arrays were built for exactly this). Used by the
+    * EMA-chain indicators (ADX smooths TR/+DM/−DM jointly; the Chaikin
+    * oscillator runs EMA3 and EMA10 of the A/D line together): one pass
+    * over the data per chain STAGE instead of one per recursion.
     *
     * `alphas(j)` is recursion j's α; β = 1−α is computed here once so
     * callers (and their oracle SQL, written as `1 - a/b` literals) agree
@@ -389,13 +391,13 @@ object Ema extends Serializable {
   case class LinkChunk(symbol: String, chunk: Long,
       ts: Array[Long], carry: Array[Array[Double]])
 
-  /** Two-stage LINKED segmented scan — the [[macd]] shape generalized:
-    * K channels smoothed jointly (stage 1, independent linear
-    * recursions), a pointwise `link` function of the smoothed state
-    * producing C carried series, and a second EMA (α = `alpha2`) over
-    * carried series `linkIdx` (stage 2). ADX is the instance: smooth
-    * TR/+DM/−DM, link to DI±/DX (ratios — NONLINEAR, so the chain has
-    * no affine form and [[emaChain]] cannot fuse it), smooth DX → ADX.
+  /** Two-stage LINKED segmented scan: K channels smoothed jointly
+    * (stage 1, independent linear recursions), a pointwise `link`
+    * function of the smoothed state producing C carried series, and a
+    * second EMA (α = `alpha2`) over carried series `linkIdx` (stage 2).
+    * ADX is the instance: smooth TR/+DM/−DM, link to DI±/DX (ratios —
+    * NONLINEAR, so the chain has no affine form and [[emaChain]] cannot
+    * fuse it), smooth DX → ADX.
     *
     * Shuffle discipline (the reason this exists): ONE bar-scale
     * exchange total — the initial chunk materialization. Stage-1
@@ -802,30 +804,18 @@ object Ema extends Serializable {
         outCols.zipWithIndex.map { case (n, j) => col("es")(j).as(n) }: _*)
   }
 
-  /** MACD(12,26,9) on the [[linkedScan]] two-stage device: EMA12 and
-    * EMA26 smoothed jointly (stage 1), macd = e12 − e26 linked
-    * pointwise, EMA9 of macd (stage 2) over the persisted per-chunk
-    * arrays — ONE bar-scale shuffle; summaries, both seed cascades and
-    * the signal pass run at chunk/metadata scale. β = 1 − α here is
-    * bit-equal to the oracle's 11/13- and 25/27-style literals (exact
-    * for these denominators). hist = macd − signal at the output edge,
-    * the same double op the in-task emit ran. */
-  def macd(bars: DataFrame, chunkBars: Int = 1024, fanout: Int = 1024): DataFrame =
-    linkedScan(bars.select(col("symbol"), col("bar_ts"), col("close")),
-        valueCols = Seq("close", "close"), alphas = Seq(A12, A26),
-        link = e => Array(e(0) - e(1)),
-        carryCols = Seq("m_raw"), linkIdx = 0, alpha2 = A9, outCol = "sig",
-        chunkBars = chunkBars, fanout = fanout)
-      .select(col("symbol"), col("bar_ts"),
-        round(col("m_raw") + lit(5e-9), 4).as("macd"),
-        round(col("sig") + lit(5e-9), 4).as("macd_signal"),
-        round(col("m_raw") - col("sig") + lit(5e-9), 4).as("macd_hist"))
-      .orderBy(col("symbol"), col("bar_ts"))
-
-  /** Single-task-per-symbol sequential MACD — retained as the spec
-    * comparator for [[macd]] (bit-level drift bound) and as the simpler
-    * path when each symbol's series is known to fit one task. */
-  def macdSequential(bars: DataFrame): DataFrame = {
+  /** MACD(12,26,9) as ONE exact fold per symbol: the bars' single
+    * `groupByKey(symbol)` exchange hands each symbol's series to one
+    * task, which folds EMA12/EMA26 and the EMA9 signal of their
+    * difference in bar_ts order — then the output sort. Three exchanges
+    * (bars aggregate, symbol group, output sort), no persist, nothing
+    * for [[unpersistAll]] to release. One task per symbol is enough: a
+    * symbol's 5-minute series holds at most 105,120 bars a year (the
+    * same one-row-per-5-minutes premise the chunked scans key on), so a
+    * decade is ~1 M (ts, close) pairs in one task. The float ops are
+    * the oracle's sequential fold with its 11/13-style β literals, and
+    * hist = macd − signal is the same double subtraction. */
+  def macd(bars: DataFrame): DataFrame = {
     val spark = bars.sparkSession
     import spark.implicits._
     val ds = bars.select(col("symbol"), col("bar_ts"), col("close"))

@@ -303,8 +303,11 @@ object Similarity {
     * replacing the N×K crossJoin → corpus-scale min_by aggregate
     * exchange → vec_id re-join exchange shape (guide §2.4: remove
     * shuffles outright). Same (d2, cent_id) lexicographic argmin over
-    * the same sequential [[graft.functions.Dist2]] fold — bit-identical
-    * cells ([[graft.functions.NearestCell]] doc), oracle unchanged. */
+    * the same sequential [[graft.functions.Dist2]] fold — identical
+    * cells for well-formed centroids, oracle unchanged. Ragged and
+    * null-`cv` centroids are skipped, where `min_by`'s null-first
+    * struct order would pick them ([[graft.functions.NearestCell]]
+    * doc). */
   private def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
     e.crossJoin(broadcast(cellsRow(cents)))
       .select(col("vec_id"), col("v"),
@@ -638,7 +641,10 @@ object Similarity {
     * codeword array — no N×M×Ks row stream and no (vec_id, m)
     * aggregate exchange (the previous min_by shape paid both). Same
     * (d2, code_id) lexicographic order over the same sequential
-    * distance fold — bit-identical codes. Carries (vec_id, m, code, d2). */
+    * distance fold — identical codes for well-formed codewords; ragged
+    * and null-`csub` codewords are skipped, where `min_by`'s null-first
+    * struct order would pick them ([[graft.functions.NearestCell]]
+    * doc). Carries (vec_id, m, code, d2). */
   private def pqAssign(e: DataFrame, cb: DataFrame): DataFrame =
     e.withColumn("m", explode(sequence(lit(0), lit(PqM - 1))))
       .select(col("vec_id"), col("m"),

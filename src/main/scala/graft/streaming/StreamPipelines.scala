@@ -408,7 +408,7 @@ object StreamPipelines {
 
   /** Streaming MACD(12,26,9): per-symbol EMA recursion state carried
     * across micro-batches via flatMapGroupsWithState — the streaming
-    * analogue of the batch segmented scan (graft.operators.Ema.macd).
+    * twin of the batch per-symbol fold (graft.operators.Ema.macd).
     * Within a micro-batch rows fold in bar_ts order; with in-order
     * arrival the emitted values equal the batch recursion exactly
     * (spec-proven at 4dp across a two-batch replay). */

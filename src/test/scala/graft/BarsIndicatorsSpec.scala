@@ -94,8 +94,16 @@ class BarsIndicatorsSpec extends SparkSpec {
   test("segmented MACD matches sequential at 4dp, forces multi-level seeds, no per-symbol window") {
     val bars = Bars.ohlcv(Tables.events(spark, sf()))
     // chunkBars=16 over weeks of 5-min bars → hundreds of chunks per
-    // symbol, and fanout=32 forces ≥2 linearSeeds recursion levels
-    val seg = Ema.macd(bars, chunkBars = 16, fanout = 32)
+    // symbol, and fanout=32 forces ≥2 linearSeeds recursion levels;
+    // the linked scan runs MACD's alphas, link and 4dp rounding
+    val seg = Ema.linkedScan(bars.select(col("symbol"), col("bar_ts"), col("close")),
+        valueCols = Seq("close", "close"), alphas = Seq(2.0 / 13.0, 2.0 / 27.0),
+        link = e => Array(e(0) - e(1)), carryCols = Seq("m_raw"), linkIdx = 0,
+        alpha2 = 2.0 / 10.0, outCol = "sig", chunkBars = 16, fanout = 32)
+      .select(col("symbol"), col("bar_ts"),
+        round(col("m_raw") + lit(5e-9), 4).as("macd"),
+        round(col("sig") + lit(5e-9), 4).as("macd_signal"),
+        round(col("m_raw") - col("sig") + lit(5e-9), 4).as("macd_hist"))
     // the distributed plan must not contain a per-symbol Window stage
     // (chunk ids are time-derived, seeds come from the recursive scan)
     val plan = seg.queryExecution.executedPlan.toString
@@ -103,7 +111,7 @@ class BarsIndicatorsSpec extends SparkSpec {
     val segRows = seg.collect()
       .map(r => (r.getString(0), r.getTimestamp(1)) ->
         (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
-    val refRows = Ema.macdSequential(bars).collect()
+    val refRows = Ema.macd(bars).collect()
     assert(refRows.length === segRows.size && refRows.length > 500)
     refRows.foreach { r =>
       val (m, s, h) = segRows((r.getString(0), r.getTimestamp(1)))

@@ -369,14 +369,14 @@ class OpsExtraSpec extends SparkSpec {
     spark.catalog.clearCache()
     assert(spark.sharedState.cacheManager.isEmpty)
     val bars = Bars.ohlcv(Tables.events(spark, sf()))
-    val first = Ema.macd(bars).collect()
+    val first = Ema.emaSegmented(bars, 26).collect()
     assert(!spark.sharedState.cacheManager.isEmpty,
-      "macd should persist its intermediates while in use")
+      "emaSegmented should persist its intermediates while in use")
     Ema.unpersistAll()
     assert(spark.sharedState.cacheManager.isEmpty,
       "unpersistAll must drain the registry")
     // a released query still recomputes correctly
-    assert(Ema.macd(bars).collect().map(_.toSeq) === first.map(_.toSeq))
+    assert(Ema.emaSegmented(bars, 26).collect().map(_.toSeq) === first.map(_.toSeq))
     Ema.unpersistAll()
   }
 

@@ -161,11 +161,11 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   // Exchange-count regression gate for the r9 linked-scan rewrites: the
-  // q_adx/q_macd fusions (one bar-scale shuffle + levels-1 cascades +
-  // compose/unfold exchange reuse) planned 14/13 exchanges where the r8
-  // shapes planned 23/21. The bound has slack for planner drift but
-  // trips long before the old two-full-scan shape (or a lost
-  // ReusedExchange) could sneak back.
+  // q_adx fusion (one bar-scale shuffle + levels-1 cascades +
+  // compose/unfold exchange reuse) planned 14 exchanges where the r8
+  // shape planned 23. The bound has slack for planner drift but trips
+  // long before the old two-full-scan shape (or a lost ReusedExchange)
+  // could sneak back.
   // Same device for the round-12 layout/recursive plans: PLANS.md rows
   // are 3/5/4/2 shuffles; the bounds carry planner-drift slack but trip
   // long before a lost cache (the 4x-scan prune shape) or a collapsed
@@ -175,11 +175,8 @@ class PlanShapeSpec extends SparkSpec {
   // edge list persisted ONCE (Ema.persistTracked) — the bound trips if
   // a future edit drops the cache and the kNN edge derivation re-plans
   // per expansion round (~+4 exchanges per round).
-  for ((name, bound) <- Seq("q_adx" -> 17, "q_macd" -> 16,
-      "q_hilbert_layout" -> 5, "q_prune_sim" -> 8,
-      "q_layout_compare" -> 7, "q_sql_recursive" -> 5,
-      "q_ann_graph" -> 17))
-    test(s"$name plans at most $bound exchanges (linked-scan fusion holds)") {
+  private def exchangeGate(name: String, bound: Int, shape: String): Unit =
+    test(s"$name plans at most $bound exchanges ($shape holds)") {
       val fn = SparkEntry.queries(name)
       try {
         val df = fn(spark, sf())
@@ -187,11 +184,23 @@ class PlanShapeSpec extends SparkSpec {
         val exchanges = nodes.map(_.simpleString(60))
           .count(_.startsWith("Exchange"))
         assert(exchanges <= bound,
-          s"$name plans $exchanges exchanges (> $bound): the segmented-scan" +
-            " fusion or exchange reuse has regressed")
+          s"$name plans $exchanges exchanges (> $bound): the $shape" +
+            " or its exchange reuse has regressed")
       } finally {
         graft.operators.Ema.unpersistAll()
         spark.catalog.clearCache()
       }
     }
+
+  for ((name, bound) <- Seq("q_adx" -> 17,
+      "q_hilbert_layout" -> 5, "q_prune_sim" -> 8,
+      "q_layout_compare" -> 7, "q_sql_recursive" -> 5,
+      "q_ann_graph" -> 17))
+    exchangeGate(name, bound, "linked-scan fusion")
+
+  // q_macd is ONE exact fold per symbol: the bars aggregate, the
+  // groupByKey(symbol) fold and the output sort — exactly 3 planned
+  // exchanges, no slack, so any seed cascade or extra pass (a
+  // segmented-scan MACD plans 13+) trips it.
+  exchangeGate("q_macd", 3, "per-symbol fold")
 }

@@ -290,7 +290,7 @@ class StreamingSpec extends SparkSpec {
     val got = spark.table("macd_out").collect()
       .map(r => (r.getString(0), r.getTimestamp(1)) ->
         (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
-    val exp = graft.operators.Ema.macdSequential(
+    val exp = graft.operators.Ema.macd(
       graft.operators.Bars.ohlcv(events)).collect()
     assert(exp.length === got.size && exp.length > 500)
     def r4(x: Double) = math.round((x + 5e-9) * 1e4) / 1e4
@@ -374,7 +374,7 @@ class StreamingSpec extends SparkSpec {
       val got = spark.table("macd_rocks").collect()
         .map(r => (r.getString(0), r.getTimestamp(1)) ->
           (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
-      val exp = graft.operators.Ema.macdSequential(
+      val exp = graft.operators.Ema.macd(
         graft.operators.Bars.ohlcv(events)).collect()
       assert(exp.length === got.size && exp.length > 500)
       def r4(x: Double) = math.round((x + 5e-9) * 1e4) / 1e4
