@@ -3982,7 +3982,7 @@ object OracleSql {
       FROM a ORDER BY symbol, bar_ts""",
 
     // EMA20 midline = the exact recursion (list fold seeds on the first
-    // element, matching Ema.emaSegmented's e_1 = x_1)
+    // element, matching the per-symbol Ema.fold's e_1 = x_1)
     "q_keltner" -> s"""
       WITH $barsCte, $rnCte,
       tp AS (SELECT symbol, bar_ts, "close", high, low, rn,
@@ -4425,8 +4425,8 @@ object OracleSql {
     // window is truncated to 1000 rows (0.8^999 ≈ 1e-97, invisible at
     // 4dp — the q_keltner/q_holt device) so the list cells stay O(rows)
     // at every scale factor; the out_of_control flag compares the
-    // 4dp-rounded-with-nudge values on BOTH sides so a ~1e-13 cross-
-    // engine ewma re-association at the band edge cannot flip it
+    // 4dp-rounded-with-nudge values on BOTH sides so a last-ulp cross-
+    // engine difference at the band edge cannot flip it
     "q_ewma_chart" -> s"""
       WITH $barsCte,
       w1 AS (

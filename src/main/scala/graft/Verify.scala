@@ -45,8 +45,8 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
-        // Release per-query persisted intermediates (segmented-scan
-        // caches) so the 60-query dump session stays flat.
+        // Release per-query persisted intermediates (the operators'
+        // tracked caches) so the 60-query dump session stays flat.
         graft.operators.Ema.unpersistAll()
         spark.catalog.clearCache()
       }

@@ -22,10 +22,11 @@ import org.apache.spark.sql.functions._
   *    mean, a window-of-window shape neither engine can nest; both sides
   *    fold the same 20-element frame list sequentially (Spark `aggregate`
   *    with a 0.0 seed ≡ DuckDB `list_reduce` over a 0.0-prepended list).
-  *  - Keltner's EMA20 midline and Heikin-Ashi's open recursion
-  *    (`ha_open' = (ha_open + ha_close)/2` = a linear recurrence with
-  *    α = 0.5) both run on [[Ema.emaSegmented]] — the distributed
-  *    prefix-scan scale path, bit-equal to the sequential recursion.
+  *  - Every EMA-family recursion here — Keltner's EMA20 midline,
+  *    Heikin-Ashi's open (`ha_open' = (ha_open + ha_close)/2`, an EMA with
+  *    α = 0.5), ADX, TRIX, the Chaikin oscillator, the EWMA chart and
+  *    Holt — is one [[Ema.fold]] per symbol whose step runs the oracle's
+  *    float ops, bit-equal to the sequential recursion the oracle folds.
   */
 object IndicatorsExt {
 
@@ -40,6 +41,12 @@ object IndicatorsExt {
 
   private val PosBase = 10000000000L // 10^10: rn slot in the encoded key
   private val CentCap = 100000000L   // 10^8 cents = prices < $1M
+
+  /** Wilder's true range from the previous close — the exact
+    * `greatest(h − l, |h − pc|, |l − pc|)` the oracle evaluates (a max
+    * picks one operand, so no rounding is involved). */
+  private def trueRange(h: Double, l: Double, pc: Double): Double =
+    math.max(h - l, math.max(math.abs(h - pc), math.abs(l - pc)))
 
   /** Rolling market correlation(20): per-bar Pearson correlation
     * between the symbol's close and the equal-share market index (the
@@ -218,27 +225,18 @@ object IndicatorsExt {
           .as("uo")) ++ keep: _*)
   }
 
-  /** Keltner channels: EMA20 of the typical price ± 2·ATR(10). The EMA
-    * midline runs on the segmented prefix-scan device ([[Ema.emaSegmented]]
-    * — no per-symbol single-task recursion), the ATR band is a bounded
-    * 10-row frame, and the two derivations meet in one (symbol, bar_ts)
-    * equi-join. */
+  /** Keltner channels: EMA20 of the typical price ± 2·ATR(10). One
+    * [[Ema.fold]] per symbol smooths the typical price and takes the true
+    * range against the close it carries from the previous bar; the ATR
+    * band is then a bounded 10-row frame over the fold's output. */
   def keltner(bars: DataFrame): DataFrame = {
-    val prevClose = lag(col("close"), 1).over(w)
-    val trRaw = when(prevClose.isNull, lit(null)).otherwise(
-      greatest(col("high") - col("low"),
-        abs(col("high") - prevClose), abs(col("low") - prevClose)))
-    // One segmented scan: typical price smoothed at α=2/21, with `close`
-    // and `tr` carried through as α=1.0 IDENTITY channels (e = x·1 + e·0
-    // = x bit-exactly for finite x; the rn=1 null tr rides as 0.0 and is
-    // re-nulled after — a NaN sentinel would poison the recursion) — the
-    // OHLCV derivation executes once, no two-sided self-join. The ATR10
-    // frame runs AFTER the scan on the carried tr.
-    val derived = bars.select(col("symbol"), col("bar_ts"),
-      ((col("high") + col("low") + col("close")) / lit(3.0)).as("tp"),
-      col("close"), coalesce(trRaw, lit(0.0)).as("tr"))
-    val scanned = Ema.emaMulti(derived, Seq("tp", "close", "tr"),
-      Seq(2.0 / 21.0, 1.0, 1.0), Seq("ema", "close", "tr0"))
+    val a = 2.0 / 21.0; val b = 1.0 - a
+    val scanned = Ema.fold(
+        bars.withColumn("tp", (col("high") + col("low") + col("close")) / lit(3.0)),
+        Seq("tp", "high", "low", "close"), Seq("ema", "tr0", "close"))(
+      // state: EMA, true range (0.0 on the first bar, re-nulled below), close
+      x => Array(x(0), 0.0, x(3)),
+      (e, x) => Array(x(0) * a + e(0) * b, trueRange(x(1), x(2), e(2)), x(3)))
     val atrSide = scanned
       .select(col("symbol"), col("bar_ts"), col("close"), col("ema"),
         rn.as("rn"), col("tr0"))
@@ -255,86 +253,56 @@ object IndicatorsExt {
   }
 
   /** Heikin-Ashi candles. `ha_close = (o+h+l+c)/4` is per-row; the
-    * recursive `ha_open_t = (ha_open_{t-1} + ha_close_{t-1})/2` is a
-    * linear recurrence with α = 0.5 over the LAGGED ha_close series
-    * (seeded `(o_1+c_1)/2`), i.e. exactly [[Ema.emaSegmented]] with
-    * span 3 (α = 2/(3+1) = 0.5) over the shifted series — the recursion
-    * distributes across (symbol, chunk) tasks instead of one sequential
-    * pass per symbol. */
-  def heikinAshi(bars: DataFrame): DataFrame = {
-    val hc = (col("open") + col("high") + col("low") + col("close")) / lit(4.0)
-    val shifted = bars
-      .select(col("symbol"), col("bar_ts"), col("open"), col("close"),
-        hc.as("hc"), rn.as("rn"))
-      .select(col("symbol"), col("bar_ts"),
-        when(col("rn") === 1, (col("open") + col("close")) / lit(2.0))
-          .otherwise(lag(col("hc"), 1).over(w)).as("close"))
-    val haOpen = Ema.emaSegmented(shifted, 3, sorted = false)
-      .select(col("symbol").as("o_symbol"), col("bar_ts").as("o_ts"),
-        col("ema").as("ha_open_raw"))
-    val base = bars.select(col("symbol"), col("bar_ts"), col("high"),
-      col("low"), hc.as("ha_close_raw"))
-    base.join(haOpen,
-        base("symbol") === haOpen("o_symbol") && base("bar_ts") === haOpen("o_ts"))
+    * recursive `ha_open_t = (ha_open_{t-1} + ha_close_{t-1})/2` is an
+    * EMA with α = β = 0.5 over the PREVIOUS bar's ha_close, seeded
+    * `(o_1+c_1)/2` — one [[Ema.fold]] per symbol that carries ha_close
+    * (and high/low for the candle bounds) to the next bar, so no lag
+    * window and no join back. */
+  def heikinAshi(bars: DataFrame): DataFrame =
+    Ema.fold(
+        bars.withColumn("ho", (col("open") + col("close")) / lit(2.0))
+          .withColumn("hc", (col("open") + col("high") + col("low") + col("close")) / lit(4.0)),
+        Seq("ho", "hc", "high", "low"), Seq("ha_open_raw", "ha_close_raw", "high", "low"))(
+      // state: ha_open, ha_close, high, low
+      x => x,
+      (e, x) => Array(e(1) * 0.5 + e(0) * 0.5, x(1), x(2), x(3)))
       .select(col("symbol"), col("bar_ts"),
         round(col("ha_open_raw") + lit(5e-9), 4).as("ha_open"),
         round(greatest(col("high"), col("ha_open_raw"), col("ha_close_raw")) + lit(5e-9), 4).as("ha_high"),
         round(least(col("low"), col("ha_open_raw"), col("ha_close_raw")) + lit(5e-9), 4).as("ha_low"),
         round(col("ha_close_raw") + lit(5e-9), 4).as("ha_close"))
       .orderBy(col("symbol"), col("bar_ts"))
-  }
 
-  /** ADX(14) — Wilder's directional movement system as a two-stage EMA
-    * chain on [[Ema.emaMulti]]: TR / +DM / −DM derive from one-bar lags,
-    * are smoothed JOINTLY in a single segmented scan (K=3 recursions,
-    * one pass over bars — Wilder's `rma(α=1/n)` IS `ewm(adjust=False)`
-    * with that α, seeded at the first value like every EMA here), the
-    * directional indexes divide pointwise, and DX runs through a second
-    * single-recursion scan for ADX. No per-symbol sequential stage
-    * anywhere: both smoothing passes distribute across (symbol, chunk).
-    * Zero-denominator rule: DI is 0 when smoothed TR is 0; DX is 0 when
-    * DI⁺+DI⁻ is 0. */
+  /** ADX(14) — Wilder's directional movement system as one [[Ema.fold]]
+    * per symbol: each step takes TR / +DM / −DM against the previous
+    * bar it carries, smooths them (Wilder's `rma(α=1/n)` IS
+    * `ewm(adjust=False)` with that α, seeded at the first value like
+    * every EMA here), divides the directional indexes pointwise and
+    * smooths DX into ADX. Zero-denominator rule: DI is 0 when smoothed
+    * TR is 0; DX is 0 when DI⁺+DI⁻ is 0. */
   def adx(bars: DataFrame, n: Int = 14): DataFrame = {
-    val alpha = 1.0 / n
-    val prevClose = lag(col("close"), 1).over(w)
-    val prevHigh = lag(col("high"), 1).over(w)
-    val prevLow = lag(col("low"), 1).over(w)
-    val up = col("high") - col("p_high")
-    val down = col("p_low") - col("low")
-    val derived = bars
-      .select(col("symbol"), col("bar_ts"), col("high"), col("low"),
-        col("close"), prevClose.as("p_close"), prevHigh.as("p_high"),
-        prevLow.as("p_low"))
-      .select(col("symbol"), col("bar_ts"),
-        when(col("p_close").isNull, col("high") - col("low"))
-          .otherwise(greatest(col("high") - col("low"),
-            abs(col("high") - col("p_close")),
-            abs(col("low") - col("p_close")))).as("tr"),
-        when(col("p_high").isNull, lit(0.0))
-          .otherwise(when(up > down && up > lit(0.0), up).otherwise(lit(0.0)))
-          .as("pdm"),
-        when(col("p_low").isNull, lit(0.0))
-          .otherwise(when(down > up && down > lit(0.0), down).otherwise(lit(0.0)))
-          .as("mdm"))
-    // ONE linkedScan replaces r8's two chained emaMulti passes: stage 1
-    // smooths TR/+DM/−DM jointly, the link computes DI±/DX per row with
-    // the identical left-associated double ops the old Catalyst
-    // projection ran, stage 2 smooths DX → ADX over the persisted chunk
-    // arrays. Bar-scale shuffles drop 4 → 2 (lag window + chunk build);
-    // total exchanges 23 → 15 (PLANS.md), and no identity channels are
-    // needed — the carried DI±/DX live in the chunk arrays.
-    Ema.linkedScan(derived, Seq("tr", "pdm", "mdm"),
-        Seq(alpha, alpha, alpha),
-        link = e => {
-          val str = e(0)
-          val dip = if (str > 0.0) 100.0 * e(1) / str else 0.0
-          val dim = if (str > 0.0) 100.0 * e(2) / str else 0.0
-          val s = dip + dim
-          val dx = if (s > 0.0) 100.0 * math.abs(dip - dim) / s else 0.0
-          Array(dip, dim, dx)
-        },
-        carryCols = Seq("di_plus", "di_minus", "dx"),
-        linkIdx = 2, alpha2 = alpha, outCol = "adx")
+    val a = 1.0 / n; val b = 1.0 - a
+    // DI+, DI−, DX from the smoothed TR, +DM, −DM
+    val di: (Double, Double, Double) => Array[Double] = (str, spdm, smdm) => {
+      val dip = if (str > 0.0) 100.0 * spdm / str else 0.0
+      val dim = if (str > 0.0) 100.0 * smdm / str else 0.0
+      val s = dip + dim
+      Array(dip, dim, if (s > 0.0) 100.0 * math.abs(dip - dim) / s else 0.0)
+    }
+    Ema.fold(bars, Seq("high", "low", "close"), Seq("di_plus", "di_minus", "dx", "adx"))(
+      // state: DI+, DI−, DX, ADX | smoothed TR, +DM, −DM | high, low, close
+      x => {
+        val d = di(x(0) - x(1), 0.0, 0.0)
+        Array(d(0), d(1), d(2), d(2), x(0) - x(1), 0.0, 0.0, x(0), x(1), x(2))
+      },
+      (e, x) => {
+        val up = x(0) - e(7); val down = e(8) - x(1)
+        val str = trueRange(x(0), x(1), e(9)) * a + e(4) * b
+        val spdm = (if (up > down && up > 0.0) up else 0.0) * a + e(5) * b
+        val smdm = (if (down > up && down > 0.0) down else 0.0) * a + e(6) * b
+        val d = di(str, spdm, smdm)
+        Array(d(0), d(1), d(2), d(2) * a + e(3) * b, str, spdm, smdm, x(0), x(1), x(2))
+      })
       .select(col("symbol"), col("bar_ts"),
         round(col("di_plus") + lit(5e-9), 4).as("di_plus"),
         round(col("di_minus") + lit(5e-9), 4).as("di_minus"),
@@ -343,24 +311,25 @@ object IndicatorsExt {
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
-  /** TRIX(15) — 1-bar rate of change of a TRIPLE-smoothed EMA. The
-    * three chained recursions run as ONE [[Ema.emaChain]] segmented
-    * scan (a lower-triangular affine map per chunk instead of three
-    * full passes — one chunk pass + one regeneration pass total, never
-    * a sequential task per symbol), then a single lag for the ROC.
-    * First row is null (no previous triple EMA). */
+  /** TRIX(15) — 1-bar rate of change of a TRIPLE-smoothed EMA. One
+    * [[Ema.fold]] per symbol runs the three chained recursions in one
+    * step and carries the previous triple EMA for the ROC. First row is
+    * null (no previous triple EMA). */
   def trix(bars: DataFrame, span: Int = 15): DataFrame = {
-    val a = 2.0 / (span + 1)
-    val e3 = Ema.emaChain(
-      bars.select(col("symbol"), col("bar_ts"), col("close")),
-      Seq(a, a, a), Seq("e1", "e2", "ema"))
-      .select(col("symbol"), col("bar_ts"), col("ema"))
-    val prev = lag(col("ema"), 1).over(w)
-    e3.select(col("symbol"), col("bar_ts"), col("ema"), prev.as("p_ema"))
+    val a = 2.0 / (span + 1); val b = 1.0 - a
+    Ema.fold(bars, Seq("close"), Seq("ema", "p_ema"))(
+      // state: EMA3, previous EMA3 (NaN on the first bar) | EMA1, EMA2
+      x => Array(x(0), Double.NaN, x(0), x(0)),
+      (e, x) => {
+        val e1 = x(0) * a + e(2) * b
+        val e2 = e1 * a + e(3) * b
+        Array(e2 * a + e(0) * b, e(0), e1, e2)
+      })
       .select(col("symbol"), col("bar_ts"),
         round(col("ema") + lit(5e-9), 4).as("ema3"),
-        round(lit(100.0) * (col("ema") - col("p_ema")) / col("p_ema")
-          + lit(5e-9), 4).as("trix"))
+        when(!isnan(col("p_ema")),
+          round(lit(100.0) * (col("ema") - col("p_ema")) / col("p_ema")
+            + lit(5e-9), 4)).as("trix"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -370,8 +339,8 @@ object IndicatorsExt {
     * bit-equal across engines (a running double sum would expose each
     * engine's window-aggregation association; DuckDB's segment trees
     * re-associate). The oscillator is EMA3 − EMA10 of the line, both
-    * recursions in ONE [[Ema.emaMulti]] segmented scan. Flat bars
-    * (high = low) contribute zero flow. */
+    * recursions in one [[Ema.fold]] per symbol that also carries the
+    * 4dp line. Flat bars (high = low) contribute zero flow. */
   def adLine(bars: DataFrame): DataFrame = {
     val mfm = when(col("high") === col("low"), lit(0.0))
       .otherwise(((col("close") - col("low")) - (col("high") - col("close")))
@@ -383,16 +352,17 @@ object IndicatorsExt {
       .select(col("symbol"), col("bar_ts"),
         sum(col("mfv6")).over(w.rowsBetween(Window.unboundedPreceding,
           Window.currentRow)).as("ad_exact"))
-    val osc = Ema.emaMulti(
-      adSide.select(col("symbol"), col("bar_ts"),
-        col("ad_exact").cast("double").as("ad")),
-      Seq("ad", "ad"), Seq(2.0 / 4.0, 2.0 / 11.0), Seq("e3", "e10"))
-      .select(col("symbol").as("o_symbol"), col("bar_ts").as("o_ts"),
-        col("e3"), col("e10"))
-    adSide.join(osc,
-        adSide("symbol") === osc("o_symbol") && adSide("bar_ts") === osc("o_ts"))
-      .select(col("symbol"), col("bar_ts"),
-        round(col("ad_exact"), 4).cast("double").as("ad"),
+    val a3 = 2.0 / 4.0; val b3 = 1.0 - a3
+    val a10 = 2.0 / 11.0; val b10 = 1.0 - a10
+    Ema.fold(
+        adSide.select(col("symbol"), col("bar_ts"),
+          col("ad_exact").cast("double").as("x"),
+          round(col("ad_exact"), 4).cast("double").as("ad")),
+        Seq("x", "ad"), Seq("e3", "e10", "ad"))(
+      // state: EMA3, EMA10, the 4dp line
+      x => Array(x(0), x(0), x(1)),
+      (e, x) => Array(x(0) * a3 + e(0) * b3, x(0) * a10 + e(1) * b10, x(1)))
+      .select(col("symbol"), col("bar_ts"), col("ad"),
         round(col("e3") - col("e10") + lit(5e-9), 4).as("chaikin_osc"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
@@ -504,20 +474,20 @@ object IndicatorsExt {
     * process-monitoring view of the EMA — smoothed close vs
     * `μ ± L·σ·√(λ/(2−λ))` control bands from the per-symbol exact
     * DECIMAL moments (the q_zscore_anomaly stats device, broadcast).
-    * The smoothing runs on [[Ema.emaMulti]] with close carried through
-    * as an α=1.0 identity channel, so the OHLCV lineage executes once
-    * and the stats aggregate reuses the scan's persisted chunk cache.
+    * The smoothing is one [[Ema.fold]] per symbol that carries close
+    * through, so the EMA side needs no join back to the bars.
     * Steady-state (large-t) limits keep the width constant — the
     * time-varying `(1−λ)^{2t}` factor needs `pow`, whose last-ulp
     * differs between engines (SURVEY §5); √ and / are IEEE-exact. */
   def ewmaChart(bars: DataFrame, lambda: Double = 0.2,
       sigmas: Double = 3.0): DataFrame = {
-    val scanned = Ema.emaMulti(
-      bars.select(col("symbol"), col("bar_ts"), col("close")),
-      Seq("close", "close"), Seq(lambda, 1.0), Seq("ewma", "close"))
+    val b = 1.0 - lambda
+    val scanned = Ema.fold(bars, Seq("close"), Seq("ewma", "close"))(
+      x => Array(x(0), x(0)),
+      (e, x) => Array(x(0) * lambda + e(0) * b, x(0)))
     val x = col("close").cast("decimal(9,2)")
-    // moments from the cheap pre-scan bars projection (aggregating the
-    // scan output would replay its cogroup pass a second time)
+    // moments from the bars themselves (aggregating the fold output
+    // would wait on the per-symbol fold for no reason)
     val stats = bars.groupBy(col("symbol").as("s_symbol"))
       .agg(count(lit(1)).as("n"), sum(x).as("sx"), sum(x * x).as("sx2"))
     val nD = col("n").cast("double")
@@ -533,10 +503,10 @@ object IndicatorsExt {
         round(mean + lit(5e-9), 4).as("center"),
         round(mean + width + lit(5e-9), 4).as("ucl"),
         round(mean - width + lit(5e-9), 4).as("lcl"),
-        // flag on the 4dp-rounded-with-nudge values (the repo's standard
-        // boundary device): the segmented-scan ewma differs from the
-        // oracle's sequential fold by ~1e-13 seed re-association, so a
-        // raw-double compare could flip cross-engine at the band edge
+        // flag on the 4dp-rounded-with-nudge values, the compare the
+        // oracle makes: the flag agrees with the printed ewma/ucl/lcl
+        // cells, and a last-ulp difference in either engine's band
+        // arithmetic cannot flip it at the edge
         (round(col("ewma") + lit(5e-9), 4) > round(mean + width + lit(5e-9), 4) ||
           round(col("ewma") + lit(5e-9), 4) < round(mean - width + lit(5e-9), 4))
           .as("out_of_control"))
@@ -544,35 +514,23 @@ object IndicatorsExt {
   }
 
   /** Holt double-exponential (level + trend) smoothing per symbol —
-    * the first FORECASTING surface, and the operator that exercises
-    * [[Ema.affineScan]]'s full coupled-state generality (level and
-    * trend each read the OTHER's previous value, so no EMA-chain
-    * ordering exists; the recursion is the 2×2 affine map
-    * `v' = M·v + c·x` with M = [[1−α, 1−α], [−αβ, β(1−α)+1−β]],
-    * c = [α, αβ]).
+    * the first FORECASTING surface: level and trend each read the
+    * OTHER's previous value (a coupled 2-state recursion), folded once
+    * per symbol by [[Ema.fold]] with the oracle's exact float ops.
     *
     *   l_t = α·x_t + (1−α)(l_{t−1} + b_{t−1})
     *   b_t = β(l_t − l_{t−1}) + (1−β)b_{t−1},  l₀ = x₀, b₀ = 0
     *
-    * `forecast` is the one-step-ahead prediction l + b. Distribution:
-    * chunk summaries compress to one (M-power, offset) affine map each,
-    * [[Ema.affineSeeds]] composes them in O(log) depth, and per-row
-    * values inside every chunk re-run the EXACT sequential float ops
-    * (the oracle folds the identical expressions; α=0.3, β=0.2 chosen
-    * with spectral radius √0.7 ≈ 0.84 so seed re-association is damped
-    * ~1e-13 within a chunk — same contract as the EMA family). */
+    * `forecast` is the one-step-ahead prediction l + b. */
   def holt(bars: DataFrame, alpha: Double = 0.3, beta: Double = 0.2): DataFrame = {
     val a = alpha; val bt = beta
-    val m = Array(1 - a, 1 - a, -(a * bt), bt * (1 - a) + (1 - bt))
-    val cv = Array(a, a * bt)
-    Ema.affineScan(bars, m, cv,
-        init = x => Array(x, 0.0),
-        step = (e, x) => {
-          val l1 = a * x + (1 - a) * (e(0) + e(1))
+    Ema.fold(bars, Seq("close"), Seq("level", "trend"))(
+        x => Array(x(0), 0.0),
+        (e, x) => {
+          val l1 = a * x(0) + (1 - a) * (e(0) + e(1))
           val b1 = bt * (l1 - e(0)) + (1 - bt) * e(1)
           Array(l1, b1)
-        },
-        Seq("level", "trend"))
+        })
       .select(col("symbol"), col("bar_ts"),
         round(col("level") + lit(5e-9), 4).as("level"),
         round(col("trend") + lit(5e-9), 4).as("trend"),

@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * app/dashboard.py:84-145 computes per-symbol series), which is correct
   * but caps parallelism at the number of symbols: the test feed carries
   * FIVE event types, so a 10-year tick history would funnel through five
-  * window tasks no matter how many executors exist. The EMA family
-  * already solved this for *sequential recursion* (Ema.scala segmented
-  * scans); this operator solves it for *finite row frames*
+  * window tasks no matter how many executors exist. (The EMA family
+  * keeps one task per symbol on purpose: `Ema.fold` runs a sequential
+  * recursion over a series that grows by ~10^5 bars a year.) This
+  * operator splits *finite row frames*
   * (`ROWS BETWEEN k-1 PRECEDING AND CURRENT ROW`):
   *
   *  1. exact per-symbol row index WITHOUT a per-symbol global window —

@@ -61,6 +61,12 @@ class BarsIndicatorsSpec extends SparkSpec {
       r.getAs[Double]("bb_lower") === 50.0))
   }
 
+  /** Single EMA of close at `span` through the per-symbol fold. */
+  private def emaFold(bars: DataFrame, span: Int): DataFrame = {
+    val a = 2.0 / (span + 1); val b = 1.0 - a
+    Ema.fold(bars, Seq("close"), Seq("ema"))(x => x, (e, x) => Array(x(0) * a + e(0) * b))
+  }
+
   test("macd: constant series gives zero macd/signal/hist") {
     val rows = (1 to 40).map(i =>
       (i.toLong, f"2024-01-01 ${10 + i / 12}%02d:${(i % 12) * 5}%02d:00", "A", 42.0))
@@ -72,7 +78,7 @@ class BarsIndicatorsSpec extends SparkSpec {
 
   test("segmented-scan EMA matches the exact sequential recursion") {
     val bars = Bars.ohlcv(Tables.events(spark, sf()))
-    val seg = Ema.emaSegmented(bars, span = 12, chunkBars = 64)
+    val seg = emaFold(bars, span = 12)
       .collect().map(r => (r.getString(0), r.getTimestamp(1)) -> r.getDouble(2)).toMap
     // exact per-symbol recursion computed driver-side
     val rows = bars.select("symbol", "bar_ts", "close").collect()
@@ -91,56 +97,12 @@ class BarsIndicatorsSpec extends SparkSpec {
     assert(checked > 500)
   }
 
-  test("segmented MACD matches sequential at 4dp, forces multi-level seeds, no per-symbol window") {
-    val bars = Bars.ohlcv(Tables.events(spark, sf()))
-    // chunkBars=16 over weeks of 5-min bars → hundreds of chunks per
-    // symbol, and fanout=32 forces ≥2 linearSeeds recursion levels;
-    // the linked scan runs MACD's alphas, link and 4dp rounding
-    val seg = Ema.linkedScan(bars.select(col("symbol"), col("bar_ts"), col("close")),
-        valueCols = Seq("close", "close"), alphas = Seq(2.0 / 13.0, 2.0 / 27.0),
-        link = e => Array(e(0) - e(1)), carryCols = Seq("m_raw"), linkIdx = 0,
-        alpha2 = 2.0 / 10.0, outCol = "sig", chunkBars = 16, fanout = 32)
-      .select(col("symbol"), col("bar_ts"),
-        round(col("m_raw") + lit(5e-9), 4).as("macd"),
-        round(col("sig") + lit(5e-9), 4).as("macd_signal"),
-        round(col("m_raw") - col("sig") + lit(5e-9), 4).as("macd_hist"))
-    // the distributed plan must not contain a per-symbol Window stage
-    // (chunk ids are time-derived, seeds come from the recursive scan)
-    val plan = seg.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), "segmented MACD must not use a window")
-    val segRows = seg.collect()
-      .map(r => (r.getString(0), r.getTimestamp(1)) ->
-        (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
-    val refRows = Ema.macd(bars).collect()
-    assert(refRows.length === segRows.size && refRows.length > 500)
-    refRows.foreach { r =>
-      val (m, s, h) = segRows((r.getString(0), r.getTimestamp(1)))
-      assert(m === r.getDouble(2) && s === r.getDouble(3) && h === r.getDouble(4),
-        s"${r.getString(0)} ${r.getTimestamp(1)}")
-    }
-  }
-
-  test("linearSeeds recursion: multi-level fanout agrees with single-level") {
-    val bars = Bars.ohlcv(Tables.events(spark, sf()))
-    // tiny fanout forces ≥2 recursion levels over the chunk summaries
-    import spark.implicits._
-    val a = Ema.emaSegmented(bars, span = 26, chunkBars = 8, fanout = 16)
-      .as[(String, java.sql.Timestamp, Double)].collect()
-      .map(t => (t._1, t._2) -> t._3).toMap
-    val b = Ema.emaSegmented(bars, span = 26, chunkBars = 512)
-      .as[(String, java.sql.Timestamp, Double)].collect()
-    assert(b.length === a.size && b.length > 500)
-    b.foreach { t =>
-      assert(math.abs(a((t._1, t._2)) - t._3) < 1e-9, s"${t._1} ${t._2}")
-    }
-  }
-
   test("segmented drift is orders of magnitude inside the rounding margin") {
-    // the oracle gate rounds at 4dp(+5e-9 nudge); the segmented scan's
-    // re-association drift must sit far below every cell's distance to
-    // its nearest rounding boundary, or a data refresh could flip a cell
+    // the oracle gate rounds at 4dp(+5e-9 nudge); the fold's drift from
+    // the sequential recursion must sit far below every cell's distance
+    // to its nearest rounding boundary, or a data refresh could flip a cell
     val bars = Bars.ohlcv(Tables.events(spark, sf()))
-    val seg = Ema.emaSegmented(bars, span = 26, chunkBars = 64)
+    val seg = emaFold(bars, span = 26)
       .collect().map(r => (r.getString(0), r.getTimestamp(1)) -> r.getDouble(2)).toMap
     val rows = bars.select("symbol", "bar_ts", "close").collect()
       .map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2)))

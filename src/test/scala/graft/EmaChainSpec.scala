@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Ema, IndicatorsExt}
 
-/** The multi-recursion EMA device ([[Ema.emaMulti]]) and the EMA-chain
-  * indicators built on it (ADX, TRIX, Chaikin A/D): device identity
-  * against the proven single-recursion scan, and exact agreement with
-  * plain sequential folds on multi-chunk series.
+/** The per-symbol EMA fold ([[Ema.fold]]) and the EMA-chain indicators
+  * built on it (ADX, TRIX, Chaikin A/D): fold identities (K recursions
+  * in one fold vs one; a chained step vs chained folds), and exact
+  * agreement with plain sequential folds.
   */
 class EmaChainSpec extends SparkSpec {
 
@@ -34,15 +34,42 @@ class EmaChainSpec extends SparkSpec {
     rows.toDF("symbol", "bar_ts", "high", "low", "close", "volume")
   }
 
+  /** Single EMA of `close` at `span` (α = 2/(span+1)) as one fold. */
+  private def emaSegmented(df: DataFrame, span: Int): DataFrame = {
+    val a = 2.0 / (span + 1); val b = 1.0 - a
+    Ema.fold(df, Seq("close"), Seq("ema"))(x => x, (e, x) => Array(x(0) * a + e(0) * b))
+  }
+
+  /** K independent EMAs, recursion j over `valueCols(j)` at `alphas(j)`,
+    * in one fold. */
+  private def emaMulti(df: DataFrame, valueCols: Seq[String], alphas: Seq[Double],
+      outCols: Seq[String]): DataFrame = {
+    val as = alphas.toArray; val bs = alphas.map(1.0 - _).toArray
+    Ema.fold(df, valueCols, outCols)(x => x,
+      (e, x) => Array.tabulate(as.length)(j => x(j) * as(j) + e(j) * bs(j)))
+  }
+
+  /** A chain of EMAs in one fold step: stage j smooths stage j−1's
+    * current value, every stage seeded at the first input. */
+  private def emaChain(df: DataFrame, alphas: Seq[Double], outCols: Seq[String]): DataFrame = {
+    val as = alphas.toArray; val bs = alphas.map(1.0 - _).toArray
+    Ema.fold(df, Seq("close"), outCols)(x => Array.fill(as.length)(x(0)),
+      (e, x) => {
+        val out = new Array[Double](as.length)
+        var p = x(0)
+        for (j <- as.indices) { out(j) = p * as(j) + e(j) * bs(j); p = out(j) }
+        out
+      })
+  }
+
   test("emaMulti K=1 is bit-identical to emaSegmented at the same alpha") {
     val bars = mkBars(Seq("AAA", "BBB"), 300)
-    // chunkBars=16 forces ~19 chunks per symbol: the seeds path is live
-    val multi = Ema.emaMulti(bars.select(col("symbol"), col("bar_ts"), col("close")),
-        Seq("close"), Seq(2.0 / 16.0), Seq("ema"), chunkBars = 16)
+    val multi = emaMulti(bars.select(col("symbol"), col("bar_ts"), col("close")),
+        Seq("close"), Seq(2.0 / 16.0), Seq("ema"))
       .select("symbol", "bar_ts", "ema").collect()
       .map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2))).sortBy(t => (t._1, t._2.getTime))
-    val single = Ema.emaSegmented(bars.select(col("symbol"), col("bar_ts"), col("close")),
-        span = 15, chunkBars = 16)
+    val single = emaSegmented(bars.select(col("symbol"), col("bar_ts"), col("close")),
+        span = 15)
       .select("symbol", "bar_ts", "ema").collect()
       .map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2))).sortBy(t => (t._1, t._2.getTime))
     assert(multi.length == single.length && multi.length == 600)
@@ -54,15 +81,13 @@ class EmaChainSpec extends SparkSpec {
   test("emaChain matches three chained emaSegmented passes across chunk seams") {
     val bars = mkBars(Seq("AAA", "BBB"), 400).select(col("symbol"), col("bar_ts"), col("close"))
     val a = 2.0 / 16.0
-    // chunkBars=16 → ~25 chunks/symbol: both the affine compose tree and
-    // the scalar seeds path are live
-    val chain = Ema.emaChain(bars, Seq(a, a, a), Seq("e1", "e2", "e3"), chunkBars = 16)
+    val chain = emaChain(bars, Seq(a, a, a), Seq("e1", "e2", "e3"))
       .collect().map(r => ((r.getString(0), r.getTimestamp(1).getTime), r.getDouble(4))).toMap
-    val s1 = Ema.emaSegmented(bars, 15, chunkBars = 16, sorted = false)
+    val s1 = emaSegmented(bars, 15)
       .select(col("symbol"), col("bar_ts"), col("ema").as("close"))
-    val s2 = Ema.emaSegmented(s1, 15, chunkBars = 16, sorted = false)
+    val s2 = emaSegmented(s1, 15)
       .select(col("symbol"), col("bar_ts"), col("ema").as("close"))
-    val s3 = Ema.emaSegmented(s2, 15, chunkBars = 16)
+    val s3 = emaSegmented(s2, 15)
       .collect().map(r => ((r.getString(0), r.getTimestamp(1).getTime), r.getDouble(2)))
     assert(s3.length == 800)
     s3.foreach { case (key, v) =>

@@ -364,19 +364,21 @@ class OpsExtraSpec extends SparkSpec {
   }
 
   test("Ema.unpersistAll releases every segmented-scan cache entry") {
-    import graft.operators.{Bars, Ema}
+    import graft.operators.{Bars, Ema, SegmentedWindows}
     Ema.unpersistAll()
     spark.catalog.clearCache()
     assert(spark.sharedState.cacheManager.isEmpty)
     val bars = Bars.ohlcv(Tables.events(spark, sf()))
-    val first = Ema.emaSegmented(bars, 26).collect()
+    // the segmented SMA persists its range-partitioned bars through
+    // Ema.persistTracked (the EMA folds themselves persist nothing)
+    val first = SegmentedWindows.smaSegmented(bars).collect()
     assert(!spark.sharedState.cacheManager.isEmpty,
-      "emaSegmented should persist its intermediates while in use")
+      "smaSegmented should persist its intermediates while in use")
     Ema.unpersistAll()
     assert(spark.sharedState.cacheManager.isEmpty,
       "unpersistAll must drain the registry")
     // a released query still recomputes correctly
-    assert(Ema.emaSegmented(bars, 26).collect().map(_.toSeq) === first.map(_.toSeq))
+    assert(SegmentedWindows.smaSegmented(bars).collect().map(_.toSeq) === first.map(_.toSeq))
     Ema.unpersistAll()
   }
 

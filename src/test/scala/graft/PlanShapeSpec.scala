@@ -160,16 +160,12 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  // Exchange-count regression gate for the r9 linked-scan rewrites: the
-  // q_adx fusion (one bar-scale shuffle + levels-1 cascades +
-  // compose/unfold exchange reuse) planned 14 exchanges where the r8
-  // shape planned 23. The bound has slack for planner drift but trips
-  // long before the old two-full-scan shape (or a lost ReusedExchange)
-  // could sneak back.
-  // Same device for the round-12 layout/recursive plans: PLANS.md rows
-  // are 3/5/4/2 shuffles; the bounds carry planner-drift slack but trip
-  // long before a lost cache (the 4x-scan prune shape) or a collapsed
-  // exchange reuse could sneak back.
+  // Exchange-count regression gates. Every bound is the query's
+  // measured count: a revert to an older, wider plan shape trips it.
+  // Round-12 layout/recursive plans: PLANS.md rows are 3/5/4/2 shuffles;
+  // those bounds carry planner-drift slack but trip long before a lost
+  // cache (the 4x-scan prune shape) or a collapsed exchange reuse could
+  // sneak back.
   // q_ann_graph (r13, judge item): the graph BUILD's capped pair join +
   // bounded-degree rank and the beam rounds plan 14 exchanges with the
   // edge list persisted ONCE (Ema.persistTracked) — the bound trips if
@@ -192,15 +188,28 @@ class PlanShapeSpec extends SparkSpec {
       }
     }
 
-  for ((name, bound) <- Seq("q_adx" -> 17,
+  for ((name, bound) <- Seq(
       "q_hilbert_layout" -> 5, "q_prune_sim" -> 8,
       "q_layout_compare" -> 7, "q_sql_recursive" -> 5,
       "q_ann_graph" -> 17))
     exchangeGate(name, bound, "linked-scan fusion")
 
-  // q_macd is ONE exact fold per symbol: the bars aggregate, the
-  // groupByKey(symbol) fold and the output sort — exactly 3 planned
-  // exchanges, no slack, so any seed cascade or extra pass (a
-  // segmented-scan MACD plans 13+) trips it.
-  exchangeGate("q_macd", 3, "per-symbol fold")
+  // Every EMA-family query is ONE exact fold per symbol (Ema.fold): the
+  // bars aggregate, the groupByKey(symbol) fold and the output sort,
+  // plus Keltner's ATR window, the A/D line's running-sum window and the
+  // EWMA chart's moments aggregate around the fold. No
+  // slack: a seed cascade or an extra pass (the segmented scans planned
+  // 13+ each) trips these.
+  for ((name, bound) <- Seq("q_macd" -> 3, "q_adx" -> 3, "q_trix" -> 3,
+      "q_heikin_ashi" -> 3, "q_holt" -> 3, "q_keltner" -> 4,
+      "q_ad_line" -> 4, "q_ewma_chart" -> 5))
+    exchangeGate(name, bound, "per-symbol fold")
+
+  // Round-14 fused nearest-cell assignment (NearestCell): the IVF/PQ
+  // assignment passes need no exchange, so these bounds sit at the
+  // fused kernel's measured counts; a revert to the crossJoin →
+  // min_by → re-join assignment trips them.
+  for ((name, bound) <- Seq("q_ann_ivfpq" -> 4, "q_ann_ivfpq_res" -> 8,
+      "q_ann_pq_t" -> 4, "q_semdedup" -> 3))
+    exchangeGate(name, bound, "fused nearest-cell assignment")
 }

@@ -4,9 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Bars, Bpe, Dedup, Ema, TrainingData}
 
-/** Round-12 specs: the affineScan no-clone invariant under an in-place-
-  * mutating step (the documented Spark-internal dependency made loud),
-  * and kernel-builder argument guards. */
+/** Round-12 specs: the per-symbol fold's per-row state copy under an
+  * in-place-mutating step, and kernel-builder argument guards. */
 class Round12OpsSpec extends SparkSpec {
 
   private def bars001 = Bars.ohlcv(Tables.events(spark, sf()))
@@ -14,23 +13,19 @@ class Round12OpsSpec extends SparkSpec {
   test("affineScan: an in-place-mutating step still yields per-row values") {
     import spark.implicits._
     val bars = bars001
-    // The no-clone emit depends on SerializeFromObject deep-copying the
-    // shared scratch array before the iterator's next element mutates
-    // it. This spec PLANTS a step that mutates its input in place (the
-    // worst case the affineScan contract allows) — if a Spark upgrade
-    // or an inserted object-space operator ever broke the invariant,
-    // every row in a chunk would carry the chunk's FINAL state and the
-    // per-row assertions below fail loudly (ADVICE r11, Ema.scala:780).
-    val scanned = Ema.affineScan(bars,
-      Array(0.7, 0.7, -0.06, 0.2 * 0.7 + 0.8), Array(0.3, 0.06),
-      init = x => Array(x, 0.0),
+    // Ema.fold emits a fresh copy of the state for every row. This spec
+    // PLANTS a step that mutates its input in place (the worst case the
+    // fold contract allows) — if the per-row copy were ever dropped,
+    // every row of a symbol would carry the symbol's FINAL state and
+    // the per-row assertions below fail loudly.
+    val scanned = Ema.fold(bars, Seq("close"), Seq("level", "trend"))(
+      init = x => Array(x(0), 0.0),
       step = (e, x) => {
-        val l1 = 0.3 * x + 0.7 * (e(0) + e(1))
+        val l1 = 0.3 * x(0) + 0.7 * (e(0) + e(1))
         val b1 = 0.2 * (l1 - e(0)) + 0.8 * e(1)
         e(0) = l1; e(1) = b1
         e // same array instance — deliberate in-place mutation
-      },
-      Seq("level", "trend"), chunkBars = 64)
+      })
     val got = scanned.select("symbol", "bar_ts", "level", "trend")
       .as[(String, java.sql.Timestamp, Double, Double)]
       .collect().groupBy(_._1)

@@ -44,16 +44,12 @@ class Round8OpsSpec extends SparkSpec {
   test("holt matches the sequential level/trend fold, incl. many-chunk seams") {
     import spark.implicits._
     val bars = bars001
-    // 64-bar chunks force ~3+ seam crossings per symbol at sf0.001, so
-    // the affine seed composition (not just firstExit) is on the path
-    val scanned = graft.operators.Ema.affineScan(bars,
-      Array(0.7, 0.7, -0.06, 0.2 * 0.7 + 0.8), Array(0.3, 0.06),
-      init = x => Array(x, 0.0),
+    val scanned = graft.operators.Ema.fold(bars, Seq("close"), Seq("level", "trend"))(
+      init = x => Array(x(0), 0.0),
       step = (e, x) => {
-        val l1 = 0.3 * x + 0.7 * (e(0) + e(1))
+        val l1 = 0.3 * x(0) + 0.7 * (e(0) + e(1))
         Array(l1, 0.2 * (l1 - e(0)) + 0.8 * e(1))
-      },
-      Seq("level", "trend"), chunkBars = 64)
+      })
     val got = scanned.select("symbol", "bar_ts", "level", "trend")
       .as[(String, java.sql.Timestamp, Double, Double)]
       .collect().groupBy(_._1)
