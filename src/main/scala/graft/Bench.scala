@@ -37,12 +37,17 @@ object Bench {
       graft.operators.Ema.unpersistAll()
       spark.catalog.clearCache()
     }
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeOnce(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       // cleanup in finally: a failed query must not leak its persisted
       // intermediates into the next timed run (and its cost is not timed).
+      // A failure still reads -1 in the JSON; stderr says why.
       try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        -1.0
+      }
       finally cleanup()
     }
     // Locale-pinned formatting: the default-locale f interpolator writes
@@ -266,7 +271,7 @@ object Bench {
     // reader tell session noise from a real per-query regression without
     // a re-run (r5's q_macd artifact outlier needed a judge re-measure).
     val canaryFn = SparkEntry.queries.get("q1_agg")
-    def canary(): Double = canaryFn.map(timeOnce).getOrElse(-1.0)
+    def canary(): Double = canaryFn.map(timeOnce("q1_agg", _)).getOrElse(-1.0)
     // One untimed canary pass first: the generic warmup above doesn't
     // cover the canary's own scan/codegen, and charging one-time JIT
     // warmup to the START sample would fake a wide spread on quiet runs.
@@ -277,8 +282,8 @@ object Bench {
     var canaryMid = -1.0
     val firstPass = ordered.zipWithIndex.map { case ((name, fn), idx) =>
       if (idx == mid) canaryMid = canary()
-      val a = timeOnce(fn)
-      val b = timeOnce(fn)
+      val a = timeOnce(name, fn)
+      val b = timeOnce(name, fn)
       sinceGc += 1
       if (sinceGc >= 8) { System.gc(); sinceGc = 0 } // drive ContextCleaner
       name -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
@@ -289,7 +294,7 @@ object Bench {
     val heavies = firstPass.filter(_._2 > 0).sortBy(-_._2).take(10).map(_._1).toSet
     val results = firstPass.map { case (name, t) =>
       if (heavies(name)) {
-        val c = timeOnce(selected(name))
+        val c = timeOnce(name, selected(name))
         name -> (if (c > 0) math.min(t, c) else t)
       } else name -> t
     }

@@ -60,26 +60,6 @@ object OracleSql {
         CASE WHEN rn >= 200 THEN round(sum(CAST("close" AS DECIMAL(18,6))) ${wf("ROWS BETWEEN 199 PRECEDING AND CURRENT ROW")}::DOUBLE / 200 + 5e-9, 4) END AS sma200
       FROM b ORDER BY symbol, bar_ts""",
 
-    // identical SQL to q_sma: the segmented variant's contract is
-    // bit-equality with the per-symbol-window form
-    "q_sma_seg" -> s"""
-      WITH $barsCte, $rnCte
-      SELECT symbol, bar_ts, "close",
-        CASE WHEN rn >= 20 THEN round(sum(CAST("close" AS DECIMAL(18,6))) $w20::DOUBLE / 20 + 5e-9, 4) END AS sma20,
-        CASE WHEN rn >= 50 THEN round(sum(CAST("close" AS DECIMAL(18,6))) ${wf("ROWS BETWEEN 49 PRECEDING AND CURRENT ROW")}::DOUBLE / 50 + 5e-9, 4) END AS sma50,
-        CASE WHEN rn >= 200 THEN round(sum(CAST("close" AS DECIMAL(18,6))) ${wf("ROWS BETWEEN 199 PRECEDING AND CURRENT ROW")}::DOUBLE / 200 + 5e-9, 4) END AS sma200
-      FROM b ORDER BY symbol, bar_ts""",
-
-    // identical SQL to q_bollinger: the segmented variant's contract is
-    // bit-equality with the per-symbol-window form
-    "q_bollinger_seg" -> s"""
-      WITH $barsCte, $rnCte
-      SELECT symbol, bar_ts, "close",
-        CASE WHEN rn >= 20 THEN round(sum(CAST("close" AS DECIMAL(18,6))) $w20::DOUBLE / 20 + 5e-9, 4) END AS sma20,
-        CASE WHEN rn >= 20 THEN round(sum(CAST("close" AS DECIMAL(18,6))) $w20::DOUBLE / 20 + stddev_samp("close") $w20 * 2 + 5e-9, 4) END AS bb_upper,
-        CASE WHEN rn >= 20 THEN round(sum(CAST("close" AS DECIMAL(18,6))) $w20::DOUBLE / 20 - stddev_samp("close") $w20 * 2 + 5e-9, 4) END AS bb_lower
-      FROM b ORDER BY symbol, bar_ts""",
-
     "q_bollinger" -> s"""
       WITH $barsCte, $rnCte
       SELECT symbol, bar_ts, "close",
@@ -4521,29 +4501,5 @@ object OracleSql {
       FROM s ORDER BY symbol, bar_ts"""
   )
 
-  private val merged: Map[String, String] = core ++ textOps ++ vectorOps ++ extOps
-
-  // Segmented-device variants share the base query's SQL VERBATIM: the
-  // seg contract is bit-equality with the per-symbol-window form, so a
-  // single source of SQL truth also guards against the two drifting.
-  private val segAliases: Map[String, String] = Seq(
-    "q_rsi_seg" -> "q_rsi",
-    "q_atr_seg" -> "q_atr",
-    "q_stochastic_seg" -> "q_stochastic",
-    "q_williams_r_seg" -> "q_williams_r",
-    "q_donchian_seg" -> "q_donchian",
-    "q_mfi_seg" -> "q_mfi",
-    "q_momentum_seg" -> "q_momentum",
-    "q_obv_seg" -> "q_obv",
-    "q_vwap_seg" -> "q_vwap",
-    "q_drawdown_seg" -> "q_drawdown",
-    "q_aroon_seg" -> "q_aroon",
-    "q_cci_seg" -> "q_cci",
-    "q_cmf_seg" -> "q_cmf",
-    "q_ultimate_osc_seg" -> "q_ultimate_osc",
-    "q_cusum_seg" -> "q_cusum",
-    "q_rolling_corr_seg" -> "q_rolling_corr")
-    .map { case (seg, base) => seg -> merged(base) }.toMap
-
-  val all: Map[String, String] = merged ++ segAliases
+  val all: Map[String, String] = core ++ textOps ++ vectorOps ++ extOps
 }

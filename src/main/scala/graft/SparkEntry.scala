@@ -38,20 +38,6 @@ object SparkEntry {
     "q_processed_table" -> ((s, d) => Market.processedTable(bars(s, d))),
     // B. technical indicators
     "q_sma" -> ((s, d) => Indicators.sma(bars(s, d))),
-    // the bounded-task-size variant of q_sma (chunked series; same
-    // output contract, oracle-gated against the identical SQL)
-    "q_sma_seg" -> ((s, d) => SegmentedWindows.smaSegmented(bars(s, d))),
-    "q_bollinger_seg" -> ((s, d) => SegmentedWindows.bollingerSegmented(bars(s, d))),
-    "q_rsi_seg" -> ((s, d) => SegmentedWindows.rsiSegmented(bars(s, d))),
-    "q_atr_seg" -> ((s, d) => SegmentedWindows.atrSegmented(bars(s, d))),
-    "q_stochastic_seg" -> ((s, d) => SegmentedWindows.stochasticSegmented(bars(s, d))),
-    "q_williams_r_seg" -> ((s, d) => SegmentedWindows.williamsRSegmented(bars(s, d))),
-    "q_donchian_seg" -> ((s, d) => SegmentedWindows.donchianSegmented(bars(s, d))),
-    "q_mfi_seg" -> ((s, d) => SegmentedWindows.mfiSegmented(bars(s, d))),
-    "q_momentum_seg" -> ((s, d) => SegmentedWindows.momentumSegmented(bars(s, d))),
-    "q_obv_seg" -> ((s, d) => SegmentedWindows.obvSegmented(bars(s, d))),
-    "q_vwap_seg" -> ((s, d) => SegmentedWindows.vwapSegmented(bars(s, d))),
-    "q_drawdown_seg" -> ((s, d) => SegmentedWindows.drawdownSegmented(bars(s, d))),
     "q_bollinger" -> ((s, d) => Indicators.bollinger(bars(s, d))),
     "q_rsi" -> ((s, d) => Indicators.rsi(bars(s, d))),
     "q_macd" -> ((s, d) => Ema.macd(bars(s, d))),
@@ -90,14 +76,8 @@ object SparkEntry {
     "q_winsorize" -> ((s, d) => IndicatorsExt.winsorize(bars(s, d))),
     "q_roll_spread" -> ((s, d) => IndicatorsExt.rollSpread(bars(s, d))),
     "q_rolling_corr" -> ((s, d) => IndicatorsExt.rollingCorr(bars(s, d))),
-    "q_rolling_corr_seg" -> ((s, d) => SegmentedWindows.rollingCorrSegmented(bars(s, d))),
     "q_pagerank" -> ((s, d) => Relational.pagerankTransitions(Tables.events(s, d))),
     "q_cusum" -> ((s, d) => IndicatorsExt.cusum(bars(s, d))),
-    "q_cusum_seg" -> ((s, d) => SegmentedWindows.cusumSegmented(bars(s, d))),
-    "q_aroon_seg" -> ((s, d) => SegmentedWindows.aroonSegmented(bars(s, d))),
-    "q_cci_seg" -> ((s, d) => SegmentedWindows.cciSegmented(bars(s, d))),
-    "q_cmf_seg" -> ((s, d) => SegmentedWindows.cmfSegmented(bars(s, d))),
-    "q_ultimate_osc_seg" -> ((s, d) => SegmentedWindows.ultimateOscSegmented(bars(s, d))),
     // T. temporal / warehouse ops over the tick stream
     "q_twap" -> ((s, d) => Temporal.twap(Tables.events(s, d))),
     "q_scd2" -> ((s, d) => Temporal.scd2(Tables.events(s, d))),

@@ -25,11 +25,11 @@ object Ema extends Serializable {
   private val A9 = 2.0 / 10.0; private val B9 = 8.0 / 10.0
 
   // Persisted intermediates of the operators that reuse one lineage
-  // across passes (Similarity, SegmentedWindows, Relational, Dedup, ...;
-  // the EMA folds persist nothing), so a long-lived session (bench
-  // harness, notebook, service) can release them between queries: the
-  // returned DataFrames are lazy, so there is no safe unpersist point
-  // inside the builders themselves.
+  // across passes (Similarity, Relational, Layout, Unigram, Dedup,
+  // TrainingData; the EMA folds persist nothing), so a long-lived
+  // session (bench harness, notebook, service) can release them
+  // between queries: the returned DataFrames are lazy, so there is no
+  // safe unpersist point inside the builders themselves.
   //
   // CONTRACT: call [[unpersistAll]] after the terminal action on each
   // such result. A caller that never does is still bounded:

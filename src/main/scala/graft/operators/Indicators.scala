@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Technical-indicator suite over per-symbol OHLCV bars.
@@ -21,7 +21,10 @@ import org.apache.spark.sql.functions._
   * `PARTITION BY symbol ORDER BY bar_ts` — a single hash exchange on
   * symbol feeds the whole suite, frames are row-bounded (no unbounded
   * buffering except the cumulative VWAP prefix sums), and everything stays
-  * inside whole-stage codegen (no UDFs).
+  * inside whole-stage codegen (no UDFs). One window task per symbol is
+  * the scale unit, as for [[Ema.fold]]: a symbol's 5-minute series grows
+  * with wall-clock time, not tick volume (at most 105,120 bars a year;
+  * 8,640 in the reference's 30-day bar retention).
   */
 object Indicators {
 
@@ -79,77 +82,51 @@ object Indicators {
   /** RSI(14), simple-moving-average variant (app/dashboard.py:107-112).
     * First delta is treated as zero gain/loss, exactly like
     * `delta.where(delta > 0, 0)` does for the leading NaN in pandas. */
-  def rsi(bars: DataFrame): DataFrame =
-    rsiCore(bars, w, rn, Nil).orderBy(col("symbol"), col("bar_ts"))
-
-  /** [[rsi]]'s expression body, parameterized by the series window
-    * `spec` (per-symbol, or SegmentedWindows' bounded (symbol, _chunk)
-    * window), the global row number `rnc`, and `keep` passthrough
-    * columns threaded through every stage (the segmented driver's
-    * chunk/carry markers). Identical expressions in both modes, so
-    * outputs are bit-equal wherever frame contents agree.
-    * Dependency depth: 14 preceding rows (a 14-row gain frame whose
-    * oldest gain lags one more close). */
-  private[operators] def rsiCore(df: DataFrame, spec: WindowSpec,
-      rnc: Column, keep: Seq[Column]): DataFrame = {
-    val delta = col("close") - lag(col("close"), 1).over(spec)
+  def rsi(bars: DataFrame): DataFrame = {
+    val delta = col("close") - lag(col("close"), 1).over(w)
     val gain = when(delta > 0, delta).otherwise(lit(0.0))
     val loss = when(delta < 0, -delta).otherwise(lit(0.0))
-    val f14 = spec.rowsBetween(-13, 0)
-    df.select(Seq(col("symbol"), col("bar_ts"), col("close"),
-        gain.as("gain"), loss.as("loss"), rnc.as("rn")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), col("close"),
-        avg(col("gain")).over(f14).as("avg_gain"),
-        avg(col("loss")).over(f14).as("avg_loss"), col("rn")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), col("close"),
+    bars.select(col("symbol"), col("bar_ts"), col("close"),
+        gain.as("gain"), loss.as("loss"), rn.as("rn"))
+      .select(col("symbol"), col("bar_ts"), col("close"),
+        avg(col("gain")).over(wr(14)).as("avg_gain"),
+        avg(col("loss")).over(wr(14)).as("avg_loss"), col("rn"))
+      .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") < 14, lit(null))
           .when(col("avg_loss") === 0, lit(100.0))
           .otherwise(round(lit(100) - lit(100) / (lit(1) + col("avg_gain") / col("avg_loss")) + lit(5e-9), 4))
-          .as("rsi")) ++ keep: _*)
+          .as("rsi"))
+      .orderBy(col("symbol"), col("bar_ts"))
   }
 
   /** ATR(14) over the true range (app/dashboard.py:120-126). The first
     * bar has no previous close, so its TR is null and the 14-bar mean is
     * only emitted once 14 non-null TRs exist (rn >= 15), matching the
     * pandas min_periods gate. */
-  def atr(bars: DataFrame): DataFrame =
-    atrCore(bars, w, rn, Nil).orderBy(col("symbol"), col("bar_ts"))
-
-  /** [[atr]]'s expression body — see [[rsiCore]] for the
-    * parameterization contract. Dependency depth: 14 preceding rows. */
-  private[operators] def atrCore(df: DataFrame, spec: WindowSpec,
-      rnc: Column, keep: Seq[Column]): DataFrame = {
-    val prevClose = lag(col("close"), 1).over(spec)
+  def atr(bars: DataFrame): DataFrame = {
+    val prevClose = lag(col("close"), 1).over(w)
     val tr = when(prevClose.isNull, lit(null)).otherwise(
       greatest(col("high") - col("low"),
         abs(col("high") - prevClose),
         abs(col("low") - prevClose)))
-    df.select(Seq(col("symbol"), col("bar_ts"), tr.as("tr"), rnc.as("rn")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), round(col("tr") + lit(5e-9), 4).as("tr"),
-        when(col("rn") >= 15, round(avg(col("tr")).over(spec.rowsBetween(-13, 0)) + lit(5e-9), 4)).as("atr")) ++ keep: _*)
+    bars.select(col("symbol"), col("bar_ts"), tr.as("tr"), rn.as("rn"))
+      .select(col("symbol"), col("bar_ts"), round(col("tr") + lit(5e-9), 4).as("tr"),
+        when(col("rn") >= 15, round(avg(col("tr")).over(wr(14)) + lit(5e-9), 4)).as("atr"))
+      .orderBy(col("symbol"), col("bar_ts"))
   }
 
   /** Stochastic oscillator %K(14) / %D(3) (app/dashboard.py:128-132). */
-  def stochastic(bars: DataFrame): DataFrame =
-    stochasticCore(bars, w, rn, Nil).orderBy(col("symbol"), col("bar_ts"))
-
-  /** [[stochastic]]'s expression body — see [[rsiCore]] for the
-    * parameterization contract. Dependency depth: 15 preceding rows
-    * (%D averages the 3 latest %K values, the oldest of which reads a
-    * 14-row extrema frame). */
-  private[operators] def stochasticCore(df: DataFrame, spec: WindowSpec,
-      rnc: Column, keep: Seq[Column]): DataFrame = {
-    val f14 = spec.rowsBetween(-13, 0)
-    val lo14 = min(col("low")).over(f14)
-    val hi14 = max(col("high")).over(f14)
-    val k = when(rnc < 14, lit(null))
+  def stochastic(bars: DataFrame): DataFrame = {
+    val lo14 = min(col("low")).over(wr(14))
+    val hi14 = max(col("high")).over(wr(14))
+    val k = when(rn < 14, lit(null))
       .when(hi14 === lo14, lit(null))
       .otherwise((col("close") - lo14) / (hi14 - lo14) * 100)
-    val w3 = spec.rowsBetween(-2, 0)
-    df.select(Seq(col("symbol"), col("bar_ts"), k.as("k_raw"), rnc.as("rn")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), round(col("k_raw") + lit(5e-9), 4).as("stoch_k"),
-        when(col("rn") >= 16 && count(col("k_raw")).over(w3) === 3,
-          round(avg(col("k_raw")).over(w3) + lit(5e-9), 4)).as("stoch_d")) ++ keep: _*)
+    bars.select(col("symbol"), col("bar_ts"), k.as("k_raw"), rn.as("rn"))
+      .select(col("symbol"), col("bar_ts"), round(col("k_raw") + lit(5e-9), 4).as("stoch_k"),
+        when(col("rn") >= 16 && count(col("k_raw")).over(wr(3)) === 3,
+          round(avg(col("k_raw")).over(wr(3)) + lit(5e-9), 4)).as("stoch_d"))
+      .orderBy(col("symbol"), col("bar_ts"))
   }
 
   /** Cumulative VWAP per symbol (app/dashboard.py:377). */
@@ -160,18 +137,13 @@ object Indicators {
       .orderBy(col("symbol"), col("bar_ts"))
 
   /** Rate-of-change(10) and Momentum(10) (app/dashboard.py:503-504). */
-  def momentum(bars: DataFrame): DataFrame =
-    momentumCore(bars, w, rn, Nil).orderBy(col("symbol"), col("bar_ts"))
-
-  /** [[momentum]]'s expression body — see [[rsiCore]] for the
-    * parameterization contract. Dependency depth: 10 preceding rows. */
-  private[operators] def momentumCore(df: DataFrame, spec: WindowSpec,
-      rnc: Column, keep: Seq[Column]): DataFrame = {
-    val lag10 = lag(col("close"), 10).over(spec)
-    df.select(Seq(col("symbol"), col("bar_ts"), col("close"),
+  def momentum(bars: DataFrame): DataFrame = {
+    val lag10 = lag(col("close"), 10).over(w)
+    bars.select(col("symbol"), col("bar_ts"), col("close"),
         when(lag10.isNotNull && lag10 =!= 0,
           round((col("close") / lag10 - 1) * 100 + lit(5e-9), 4)).as("roc"),
-        round(col("close") - lag10 + lit(5e-9), 4).as("mom")) ++ keep: _*)
+        round(col("close") - lag10 + lit(5e-9), 4).as("mom"))
+      .orderBy(col("symbol"), col("bar_ts"))
   }
 
   /** On-balance volume: running Σ sign(Δclose)·volume per symbol — the
@@ -190,20 +162,14 @@ object Indicators {
 
   /** Williams %R(14): (hi14 − close)/(hi14 − lo14)·(−100), the inverted
     * stochastic companion indicator. */
-  def williamsR(bars: DataFrame): DataFrame =
-    williamsRCore(bars, w, rn, Nil).orderBy(col("symbol"), col("bar_ts"))
-
-  /** [[williamsR]]'s expression body — see [[rsiCore]] for the
-    * parameterization contract. Dependency depth: 13 preceding rows. */
-  private[operators] def williamsRCore(df: DataFrame, spec: WindowSpec,
-      rnc: Column, keep: Seq[Column]): DataFrame = {
-    val f14 = spec.rowsBetween(-13, 0)
-    val lo14 = min(col("low")).over(f14)
-    val hi14 = max(col("high")).over(f14)
-    val r = when(rnc < 14, lit(null))
+  def williamsR(bars: DataFrame): DataFrame = {
+    val lo14 = min(col("low")).over(wr(14))
+    val hi14 = max(col("high")).over(wr(14))
+    val r = when(rn < 14, lit(null))
       .when(hi14 === lo14, lit(null))
       .otherwise(round((hi14 - col("close")) / (hi14 - lo14) * -100 + lit(5e-9), 4))
-    df.select(Seq(col("symbol"), col("bar_ts"), col("close"), r.as("williams_r")) ++ keep: _*)
+    bars.select(col("symbol"), col("bar_ts"), col("close"), r.as("williams_r"))
+      .orderBy(col("symbol"), col("bar_ts"))
   }
 
   /** Min/avg/max summary of OHLCV per symbol (app/dashboard.py:623-636). */
@@ -518,21 +484,14 @@ object Indicators {
   /** Donchian channels (20-bar): rolling extrema of high/low plus the
     * dyadic midline — max/min carry no float drift and /2 is exact, so
     * every cell is bit-deterministic. Same single symbol exchange. */
-  def donchian(bars: DataFrame, n: Int = 20): DataFrame =
-    donchianCore(n)(bars, w, rn, Nil).orderBy(col("symbol"), col("bar_ts"))
-
-  /** [[donchian]]'s expression body — see [[rsiCore]] for the
-    * parameterization contract. Dependency depth: n−1 preceding rows. */
-  private[operators] def donchianCore(n: Int)(df: DataFrame, spec: WindowSpec,
-      rnc: Column, keep: Seq[Column]): DataFrame = {
-    val f = spec.rowsBetween(-(n - 1), 0)
-    val upper = max(col("high")).over(f)
-    val lower = min(col("low")).over(f)
-    def g(c: Column): Column = when(rnc >= n, c)
-    df.select(Seq(col("symbol"), col("bar_ts"), col("close"),
-        g(round(upper + lit(5e-9), 4)).as("dc_upper"),
-        g(round(lower + lit(5e-9), 4)).as("dc_lower"),
-        g(round((upper + lower) / 2 + lit(5e-9), 4)).as("dc_mid")) ++ keep: _*)
+  def donchian(bars: DataFrame, n: Int = 20): DataFrame = {
+    val upper = max(col("high")).over(wr(n))
+    val lower = min(col("low")).over(wr(n))
+    bars.select(col("symbol"), col("bar_ts"), col("close"),
+        gated(n)(round(upper + lit(5e-9), 4)).as("dc_upper"),
+        gated(n)(round(lower + lit(5e-9), 4)).as("dc_lower"),
+        gated(n)(round((upper + lower) / 2 + lit(5e-9), 4)).as("dc_mid"))
+      .orderBy(col("symbol"), col("bar_ts"))
   }
 
   /** Money Flow Index MFI(14) — the volume-weighted RSI analogue. All
@@ -545,35 +504,28 @@ object Indicators {
     * positive flow is maximally positive (100); a fully flat window
     * (pos = neg = 0) is the indeterminate 0/0 and reports the neutral
     * 50 rather than an arbitrary extreme. */
-  def mfi(bars: DataFrame, n: Int = 14): DataFrame =
-    mfiCore(n)(bars, w, rn, Nil).orderBy(col("symbol"), col("bar_ts"))
-
-  /** [[mfi]]'s expression body — see [[rsiCore]] for the
-    * parameterization contract. Dependency depth: n preceding rows
-    * (an n-row flow frame whose oldest flow lags one more bar). */
-  private[operators] def mfiCore(n: Int)(df: DataFrame, spec: WindowSpec,
-      rnc: Column, keep: Seq[Column]): DataFrame = {
+  def mfi(bars: DataFrame, n: Int = 14): DataFrame = {
     val tp3 = (col("high") + col("low") + col("close")).cast("decimal(18,6)")
     val zero = lit(0).cast("decimal(38,6)")
-    val fr = spec.rowsBetween(-(n - 1), 0)
-    val base = df.select(Seq(col("symbol"), col("bar_ts"), col("volume"),
-      tp3.as("tp3"), lag(tp3, 1).over(spec).as("prev_tp3"), rnc.as("rn")) ++ keep: _*)
+    val base = bars.select(col("symbol"), col("bar_ts"), col("volume"),
+      tp3.as("tp3"), lag(tp3, 1).over(w).as("prev_tp3"), rn.as("rn"))
     val mf = (col("tp3") * col("volume")).cast("decimal(38,6)")
-    val flows = base.select(Seq(col("symbol"), col("bar_ts"), col("rn"),
+    val flows = base.select(col("symbol"), col("bar_ts"), col("rn"),
       when(col("prev_tp3").isNotNull && col("tp3") > col("prev_tp3"), mf)
         .otherwise(zero).as("pos_mf"),
       when(col("prev_tp3").isNotNull && col("tp3") < col("prev_tp3"), mf)
-        .otherwise(zero).as("neg_mf")) ++ keep: _*)
-    flows.select(Seq(col("symbol"), col("bar_ts"),
-        sum(col("pos_mf")).over(fr).as("pos"),
-        sum(col("neg_mf")).over(fr).as("neg"), col("rn")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"),
+        .otherwise(zero).as("neg_mf"))
+    flows.select(col("symbol"), col("bar_ts"),
+        sum(col("pos_mf")).over(wr(n)).as("pos"),
+        sum(col("neg_mf")).over(wr(n)).as("neg"), col("rn"))
+      .select(col("symbol"), col("bar_ts"),
         when(col("rn") < n + 1, lit(null).cast("double"))
           .when(col("neg") === 0 && col("pos") === 0, lit(50.0))
           .when(col("neg") === 0, lit(100.0))
           .otherwise(round(lit(100.0) - lit(100.0) /
             (lit(1.0) + col("pos").cast("double") / col("neg").cast("double"))
-            + lit(5e-9), 4)).as("mfi")) ++ keep: _*)
+            + lit(5e-9), 4)).as("mfi"))
+      .orderBy(col("symbol"), col("bar_ts"))
   }
 
   /** Candlestick pattern flags: doji, hammer, and bullish/bearish

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * suite (reference app/dashboard.py:84-145) with the standard indicators
   * a user of a market-analytics engine expects next: Aroon, CCI, Chaikin
   * Money Flow, Ultimate Oscillator, Keltner channels, and Heikin-Ashi
-  * candles. Same contract as [[Indicators]]: per-symbol windows over 5-min
-  * bars, row-bounded frames, divisions guarded, doubles rounded 4dp at the
-  * output edge only.
+  * candles. Same contract as [[Indicators]]: one window task per symbol
+  * over 5-min bars, row-bounded frames, divisions guarded, doubles rounded
+  * 4dp at the output edge only.
   *
   * Cross-engine parity devices used here (SURVEY.md §5):
   *  - Aroon's rolling argmax/argmin positions are encoded into ONE BIGINT
@@ -62,69 +62,43 @@ object IndicatorsExt {
     * signed-zero canonicalization (`+ 0.0`). Scale: one bar_ts index
     * aggregate + equi-join (dense per timestamp), then the standard
     * per-symbol window exchange; all frames bounded at 20 rows. */
-  def rollingCorr(bars: DataFrame, n: Int = 20): DataFrame =
-    rollingCorrCore(n)(withMarketIndex(bars), w, rn, Nil)
-      .orderBy(col("symbol"), col("bar_ts"))
-
-  /** The per-bar_ts equal-share index join shared by [[rollingCorr]]
-    * and its segmented variant. */
-  private[operators] def withMarketIndex(bars: DataFrame): DataFrame =
-    bars.join(
-      bars.groupBy(col("bar_ts"))
-        .agg(sum(col("close").cast("decimal(9,2)")).cast("decimal(12,2)").as("idx")),
-      Seq("bar_ts"))
-
-  /** [[rollingCorr]]'s expression body — the [[aroonCore]]
-    * parameterization contract (input frame must carry `idx`).
-    * Dependency depth: n−1 preceding rows. */
-  private[operators] def rollingCorrCore(n: Int)(df: DataFrame,
-      spec: org.apache.spark.sql.expressions.WindowSpec,
-      rnc: Column, keep: Seq[Column]): DataFrame = {
-    val fr = spec.rowsBetween(-(n - 1), 0)
+  def rollingCorr(bars: DataFrame, n: Int = 20): DataFrame = {
+    val fr = wr(n)
     val nD = col("nw").cast("double")
     val num = nD * col("sxy").cast("double") - col("sx").cast("double") * col("sy").cast("double")
     val denx = nD * col("sx2").cast("double") - col("sx").cast("double") * col("sx").cast("double")
     val deny = nD * col("sy2").cast("double") - col("sy").cast("double") * col("sy").cast("double")
-    df.select(Seq(col("symbol"), col("bar_ts"), col("close"), rnc.as("rn"),
-        col("close").cast("decimal(9,2)").as("x"), col("idx").as("y")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), col("close"), col("rn"),
+    val idx = bars.groupBy(col("bar_ts"))
+      .agg(sum(col("close").cast("decimal(9,2)")).cast("decimal(12,2)").as("idx"))
+    bars.join(idx, Seq("bar_ts"))
+      .select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
+        col("close").cast("decimal(9,2)").as("x"), col("idx").as("y"))
+      .select(col("symbol"), col("bar_ts"), col("close"), col("rn"),
         count(lit(1)).over(fr).as("nw"),
         sum(col("x")).over(fr).as("sx"), sum(col("y")).over(fr).as("sy"),
         sum(col("x") * col("y")).over(fr).as("sxy"),
         sum(col("x") * col("x")).over(fr).as("sx2"),
-        sum(col("y") * col("y")).over(fr).as("sy2")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), col("close"),
+        sum(col("y") * col("y")).over(fr).as("sy2"))
+      .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") >= n && denx > 0 && deny > 0,
           round(num / sqrt(denx * deny) + lit(5e-9), 4) + lit(0.0))
-          .as("mkt_corr")) ++ keep: _*)
+          .as("mkt_corr"))
+      .orderBy(col("symbol"), col("bar_ts"))
   }
 
   /** Aroon(25): % of the 25-bar window since the rolling high/low.
     * `aroon_up = 100·(25 − bars_since_high)/25`, most-recent bar wins
     * extremum ties (the conventional definition). Values are exact
     * multiples of 4 — no float drift. */
-  def aroon(bars: DataFrame, n: Int = 25): DataFrame =
-    aroonCore(n)(bars, w, rn, Nil).orderBy(col("symbol"), col("bar_ts"))
-
-  /** [[aroon]]'s expression body — parameterized by (window spec, row
-    * number, passthrough cols) per the [[Indicators.rsiCore]] contract so
-    * `SegmentedWindows.rollingSegmented` can run it against bounded
-    * (symbol, chunk) partitions. The row number MUST be the exact global
-    * per-symbol index (it is, in both modes) — it enters the encoded
-    * extremum key, so positions stay correct across chunk boundaries.
-    * Dependency depth: n−1 preceding rows. */
-  private[operators] def aroonCore(n: Int)(df: DataFrame,
-      spec: org.apache.spark.sql.expressions.WindowSpec,
-      rnc: Column, keep: Seq[Column]): DataFrame = {
-    val fr = spec.rowsBetween(-(n - 1), 0)
+  def aroon(bars: DataFrame, n: Int = 25): DataFrame = {
     val hiKey = cents(col("high")) * PosBase + col("rn")
     val loKey = (lit(CentCap) - cents(col("low"))) * PosBase + col("rn")
-    df.select(Seq(col("symbol"), col("bar_ts"), col("close"), rnc.as("rn"),
-        col("high"), col("low")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), col("close"), col("rn"),
-        (max(hiKey).over(fr) % PosBase).as("hi_pos"),
-        (max(loKey).over(fr) % PosBase).as("lo_pos")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), col("close"),
+    bars.select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
+        col("high"), col("low"))
+      .select(col("symbol"), col("bar_ts"), col("close"), col("rn"),
+        (max(hiKey).over(wr(n)) % PosBase).as("hi_pos"),
+        (max(loKey).over(wr(n)) % PosBase).as("lo_pos"))
+      .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") >= n,
           round(lit(100.0) * (lit(n) - (col("rn") - col("hi_pos"))) / n + lit(5e-9), 4))
           .as("aroon_up"),
@@ -133,7 +107,8 @@ object IndicatorsExt {
           .as("aroon_down"),
         when(col("rn") >= n,
           round(lit(100.0) * (col("hi_pos") - col("lo_pos")) / n + lit(5e-9), 4) + lit(0.0))
-          .as("aroon_osc")) ++ keep: _*)
+          .as("aroon_osc"))
+      .orderBy(col("symbol"), col("bar_ts"))
   }
 
   /** CCI(20) over the typical price: `(tp − SMA(tp)) / (0.015·MAD)`.
@@ -141,88 +116,66 @@ object IndicatorsExt {
     * the divisors, the MFI device); the frame mean divides once at the
     * edge and the mean-absolute-deviation folds the frame list in frame
     * order on both engines. */
-  def cci(bars: DataFrame, n: Int = 20): DataFrame =
-    cciCore(n)(bars, w, rn, Nil).orderBy(col("symbol"), col("bar_ts"))
-
-  /** [[cci]]'s expression body — see [[aroonCore]] for the
-    * parameterization contract. Dependency depth: n−1 preceding rows. */
-  private[operators] def cciCore(n: Int)(df: DataFrame,
-      spec: org.apache.spark.sql.expressions.WindowSpec,
-      rnc: Column, keep: Seq[Column]): DataFrame = {
-    val fr = spec.rowsBetween(-(n - 1), 0)
+  def cci(bars: DataFrame, n: Int = 20): DataFrame = {
     val tp3 = (col("high") + col("low") + col("close")).cast("decimal(18,6)")
-    df.select(Seq(col("symbol"), col("bar_ts"), col("close"), rnc.as("rn"),
-        tp3.as("tp3")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), col("close"), col("rn"), col("tp3"),
-        (sum(col("tp3")).over(fr).cast("double") / lit(3.0 * n)).as("sma_tp"),
-        collect_list(col("tp3").cast("double")).over(fr).as("tp_lst")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), col("close"), col("rn"),
+    bars.select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
+        tp3.as("tp3"))
+      .select(col("symbol"), col("bar_ts"), col("close"), col("rn"), col("tp3"),
+        (sum(col("tp3")).over(wr(n)).cast("double") / lit(3.0 * n)).as("sma_tp"),
+        collect_list(col("tp3").cast("double")).over(wr(n)).as("tp_lst"))
+      .select(col("symbol"), col("bar_ts"), col("close"), col("rn"),
         col("tp3"), col("sma_tp"),
         (aggregate(col("tp_lst"), lit(0.0),
-          (acc, x) => acc + abs(x / lit(3.0) - col("sma_tp"))) / n).as("mad")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), col("close"),
+          (acc, x) => acc + abs(x / lit(3.0) - col("sma_tp"))) / n).as("mad"))
+      .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") >= n && col("mad") =!= 0.0,
           round((col("tp3").cast("double") / lit(3.0) - col("sma_tp"))
             / (lit(0.015) * col("mad")) + lit(5e-9), 4) + lit(0.0))
-          .as("cci")) ++ keep: _*)
+          .as("cci"))
+      .orderBy(col("symbol"), col("bar_ts"))
   }
 
   /** Chaikin Money Flow(21): Σ(money-flow volume)/Σ(volume) over 21 bars.
     * The money-flow multiplier `((c−l)−(h−c))/(h−l)` is zero on flat bars
     * (h = l), per the standard convention. */
-  def cmf(bars: DataFrame, n: Int = 21): DataFrame =
-    cmfCore(n)(bars, w, rn, Nil).orderBy(col("symbol"), col("bar_ts"))
-
-  /** [[cmf]]'s expression body — see [[aroonCore]] for the
-    * parameterization contract. Dependency depth: n−1 preceding rows. */
-  private[operators] def cmfCore(n: Int)(df: DataFrame,
-      spec: org.apache.spark.sql.expressions.WindowSpec,
-      rnc: Column, keep: Seq[Column]): DataFrame = {
-    val fr = spec.rowsBetween(-(n - 1), 0)
+  def cmf(bars: DataFrame, n: Int = 21): DataFrame = {
     val mfm = when(col("high") > col("low"),
       ((col("close") - col("low")) - (col("high") - col("close")))
         / (col("high") - col("low"))).otherwise(lit(0.0))
-    df.select(Seq(col("symbol"), col("bar_ts"), col("close"), rnc.as("rn"),
-        (mfm * col("volume").cast("double")).as("mfv"), col("volume")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), col("close"),
+    bars.select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
+        (mfm * col("volume").cast("double")).as("mfv"), col("volume"))
+      .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") >= n,
-          round(sum(col("mfv")).over(fr)
-            / sum(col("volume")).over(fr).cast("double") + lit(5e-9), 4) + lit(0.0))
-          .as("cmf")) ++ keep: _*)
+          round(sum(col("mfv")).over(wr(n))
+            / sum(col("volume")).over(wr(n)).cast("double") + lit(5e-9), 4) + lit(0.0))
+          .as("cmf"))
+      .orderBy(col("symbol"), col("bar_ts"))
   }
 
   /** Ultimate Oscillator(7,14,28): weighted blend of buying-pressure /
     * true-range ratios at three horizons. The first bar has no previous
     * close, so BP/TR are null there and the gate opens once 28 non-null
     * rows exist (rn ≥ 29), mirroring the ATR warmup convention. */
-  def ultimateOsc(bars: DataFrame): DataFrame =
-    uoCore(bars, w, rn, Nil).orderBy(col("symbol"), col("bar_ts"))
-
-  /** [[ultimateOsc]]'s expression body — see [[aroonCore]] for the
-    * parameterization contract. Dependency depth: 28 preceding rows
-    * (a 28-row TR frame whose oldest TR lags one more close). */
-  private[operators] def uoCore(df: DataFrame,
-      spec: org.apache.spark.sql.expressions.WindowSpec,
-      rnc: Column, keep: Seq[Column]): DataFrame = {
-    val prevClose = lag(col("close"), 1).over(spec)
+  def ultimateOsc(bars: DataFrame): DataFrame = {
+    val prevClose = lag(col("close"), 1).over(w)
     val bp = when(prevClose.isNull, lit(null))
       .otherwise(col("close") - least(col("low"), prevClose))
     val tr = when(prevClose.isNull, lit(null))
       .otherwise(greatest(col("high"), prevClose) - least(col("low"), prevClose))
     def ratio(n: Int): Column = {
-      val fr = spec.rowsBetween(-(n - 1), 0)
-      val st = sum(col("tr")).over(fr)
-      when(st > 0, sum(col("bp")).over(fr) / st)
+      val st = sum(col("tr")).over(wr(n))
+      when(st > 0, sum(col("bp")).over(wr(n)) / st)
     }
-    df.select(Seq(col("symbol"), col("bar_ts"), col("close"), rnc.as("rn"),
-        bp.as("bp"), tr.as("tr")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), col("close"), col("rn"),
-        ratio(7).as("a7"), ratio(14).as("a14"), ratio(28).as("a28")) ++ keep: _*)
-      .select(Seq(col("symbol"), col("bar_ts"), col("close"),
+    bars.select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
+        bp.as("bp"), tr.as("tr"))
+      .select(col("symbol"), col("bar_ts"), col("close"), col("rn"),
+        ratio(7).as("a7"), ratio(14).as("a14"), ratio(28).as("a28"))
+      .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") >= 29,
           round(lit(100.0) * (lit(4.0) * col("a7") + lit(2.0) * col("a14") + col("a28"))
             / lit(7.0) + lit(5e-9), 4))
-          .as("uo")) ++ keep: _*)
+          .as("uo"))
+      .orderBy(col("symbol"), col("bar_ts"))
   }
 
   /** Keltner channels: EMA20 of the typical price ± 2·ATR(10). One
@@ -547,10 +500,7 @@ object IndicatorsExt {
     *   S⁻_t = max(0, max_{j≤t} P_j) − P_t
     *
     * i.e. BOTH one-sided CUSUMs fall out of one running sum plus its
-    * running min/max — three running aggregates over one (symbol) window
-    * (and all three are order-free-mergeable, so the running-offset
-    * segmented device applies verbatim; see
-    * [[SegmentedWindows.cusumSegmented]]).
+    * running min/max — three running aggregates over one (symbol) window.
     *
     * Exactness: the deviation is carried as the INTEGER `n·cents − Σcents`
     * (mean-centering cross-multiplied by n — no division, no float sum),

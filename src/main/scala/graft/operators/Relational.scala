@@ -554,7 +554,7 @@ object Relational {
     * SEGMENTED running-max sweep over the price-sorted distinct points
     * — a point survives iff its size beats every strictly-cheaper
     * point's — and a semi-join back to parts. The sweep is the
-    * two-level carry device (same as Ema / [[ntileByRank]]): distinct
+    * two-level carry device of [[ntileByRank]]: distinct
     * prices range-partition into ordered segments, each segment runs
     * its local exclusive prefix-max in parallel, and the carry-in (max
     * over all earlier SEGMENTS) comes from a broadcast
@@ -673,9 +673,10 @@ object Relational {
 
   /** Exact distributed `ntile(buckets) OVER (ORDER BY key, tieBreak)`
     * WITHOUT a single-partition window — the 100 TB shape for global
-    * quantile scoring. Device (two-level carry, like Ema's segmented
-    * scans): range-partition on the order key so partition ids are
-    * ordered ranges, rank locally per partition, add the broadcast
+    * quantile scoring: a global order over users has no per-key bound
+    * (unlike a symbol's bars). Device (two-level carry): range-partition
+    * on the order key so partition ids are ordered ranges, rank locally
+    * per partition, add the broadcast
     * cumulative row-count of earlier partitions (prefix offsets come
     * from a broadcast self-join of the partitions-sized counts table —
     * ≤ parts² rows, NO window of any kind, which is what the

@@ -135,35 +135,6 @@ class IndicatorsExtSpec extends SparkSpec {
     } finally { graft.operators.Ema.unpersistAll(); spark.catalog.clearCache() }
   }
 
-  test("segmented aroon/cci/cmf/ultimate equal their base forms across chunk boundaries") {
-    import graft.operators.SegmentedWindows
-    // gappy 700-row series over two symbols; chunkRows=256 → 3 chunks,
-    // every lookback reaches across both boundaries
-    val rows = for {
-      s <- Seq("AA", "BB"); i <- 0 until 700
-      if (i * 7 + s.length) % 11 != 0
-    } yield {
-      val c = 100.0 + ((i * 37 + s.hashCode.abs) % 251) / 100.0
-      val o = 100.0 + ((i * 53 + 7) % 251) / 100.0
-      val h = math.max(o, c) + ((i * 13) % 50) / 100.0
-      val l = math.min(o, c) - ((i * 17) % 50) / 100.0
-      (s, i, o, h, l, c, (i % 7 + 1).toLong)
-    }
-    val bars = ohlcv(rows)
-    try {
-      def rowsOf(df: DataFrame): Seq[Seq[Any]] =
-        df.orderBy("symbol", "bar_ts").collect().toSeq.map(_.toSeq)
-      assert(rowsOf(SegmentedWindows.aroonSegmented(bars, chunkRows = 256)) ===
-        rowsOf(IndicatorsExt.aroon(bars)))
-      assert(rowsOf(SegmentedWindows.cciSegmented(bars, chunkRows = 256)) ===
-        rowsOf(IndicatorsExt.cci(bars)))
-      assert(rowsOf(SegmentedWindows.cmfSegmented(bars, chunkRows = 256)) ===
-        rowsOf(IndicatorsExt.cmf(bars)))
-      assert(rowsOf(SegmentedWindows.ultimateOscSegmented(bars, chunkRows = 256)) ===
-        rowsOf(IndicatorsExt.ultimateOsc(bars)))
-    } finally { graft.operators.Ema.unpersistAll(); spark.catalog.clearCache() }
-  }
-
   private def events(rows: Seq[(Long, Int, String, String, Double)]): DataFrame = {
     import spark.implicits._
     rows.map { case (id, i, u, t, v) => (id, ts(i), u, t, v) }

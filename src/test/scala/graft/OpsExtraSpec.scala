@@ -364,21 +364,21 @@ class OpsExtraSpec extends SparkSpec {
   }
 
   test("Ema.unpersistAll releases every segmented-scan cache entry") {
-    import graft.operators.{Bars, Ema, SegmentedWindows}
+    import graft.operators.{Ema, Relational}
     Ema.unpersistAll()
     spark.catalog.clearCache()
     assert(spark.sharedState.cacheManager.isEmpty)
-    val bars = Bars.ohlcv(Tables.events(spark, sf()))
-    // the segmented SMA persists its range-partitioned bars through
-    // Ema.persistTracked (the EMA folds themselves persist nothing)
-    val first = SegmentedWindows.smaSegmented(bars).collect()
+    val events = Tables.events(spark, sf())
+    // q_rfm persists its per-user stats through Ema.persistTracked (the
+    // EMA folds themselves persist nothing)
+    val first = Relational.rfmSegments(events).collect()
     assert(!spark.sharedState.cacheManager.isEmpty,
-      "smaSegmented should persist its intermediates while in use")
+      "rfmSegments should persist its intermediates while in use")
     Ema.unpersistAll()
     assert(spark.sharedState.cacheManager.isEmpty,
       "unpersistAll must drain the registry")
     // a released query still recomputes correctly
-    assert(SegmentedWindows.smaSegmented(bars).collect().map(_.toSeq) === first.map(_.toSeq))
+    assert(Relational.rfmSegments(events).collect().map(_.toSeq) === first.map(_.toSeq))
     Ema.unpersistAll()
   }
 

@@ -5,10 +5,10 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bars, Dedup, Ema, IndicatorsExt, Relational, SegmentedWindows, TrainingData}
+import graft.operators.{Bars, Dedup, Ema, IndicatorsExt, Relational, TrainingData}
 
 /** Round-8 specs: the CUSUM prefix-sum closed form vs the textbook
-  * max-recursion, the segmented CUSUM device, triangle counting on
+  * max-recursion, triangle counting on
   * planted graphs, split-leakage consistency with trainSplit, and the
   * domain-quota ceiling rule. */
 class Round8OpsSpec extends SparkSpec {
@@ -72,15 +72,6 @@ class Round8OpsSpec extends SparkSpec {
       }
     }
     graft.operators.Ema.unpersistAll()
-  }
-
-  test("cusumSegmented is bit-equal to cusum across partition seams") {
-    val base = IndicatorsExt.cusum(bars001)
-    val seg = SegmentedWindows.cusumSegmented(bars001)
-    assert(base.schema.map(f => (f.name, f.dataType)) ===
-      seg.schema.map(f => (f.name, f.dataType)))
-    assert(base.exceptAll(seg).isEmpty && seg.exceptAll(base).isEmpty)
-    Ema.unpersistAll()
   }
 
   test("graphCcFromPairs: K4 is all-triangles, a path has none") {
