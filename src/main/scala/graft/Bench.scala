@@ -1,20 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. Each query is executed twice and the faster run
-  * reported — a long-lived local-mode session accumulates driver-side
-  * bookkeeping (AQE stage state, cleaner GC) that injects one-off
-  * multi-second stalls; min-of-2 measures the query, not the stall.
+  * prints one JSON line. A timed run executes the query's whole plan
+  * through the `noop` sink ([[run]]): a `count()` lets Catalyst prune
+  * the windows, aggregates and output sort whose columns it does not
+  * read. Each query is executed twice and the faster run reported — a
+  * long-lived local-mode session accumulates driver-side bookkeeping
+  * (AQE stage state, cleaner GC) that injects one-off multi-second
+  * stalls; min-of-2 measures the query, not the stall.
   *
   * Session hygiene between queries: persisted intermediates are released
   * (`Ema.unpersistAll` + `catalog.clearCache`, so every timed run pays
   * its own materialization — comparable numbers, no cross-query cache
   * growth) and a periodic driver GC drives Spark's ContextCleaner, which
   * only reclaims shuffle files and broadcasts after their weak refs are
-  * collected — in a 59-query × 2 session an 8 GiB heap can otherwise go
-  * long stretches without a collection while per-query state piles up. */
+  * collected — in a session of every query × 2 an 8 GiB heap can
+  * otherwise go long stretches without a collection while per-query
+  * state piles up. */
 object Bench {
+  /** The timed action: executes `df`'s whole plan, discarding the rows. */
+  def run(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -37,13 +44,12 @@ object Bench {
       graft.operators.Ema.unpersistAll()
       spark.catalog.clearCache()
     }
-    def timeOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
       // cleanup in finally: a failed query must not leak its persisted
       // intermediates into the next timed run (and its cost is not timed).
       // A failure still reads -1 in the JSON; stderr says why.
-      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      try { run(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: $e")
         -1.0
@@ -54,207 +60,6 @@ object Bench {
     // a comma decimal separator on e.g. de_DE JVMs, which is not JSON.
     def num(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    // Composite pipeline mode (SPARK_GRAFT_COMPOSITE=1): time the dedup
-    // cluster family the way a real pipeline runs it — ONE pair-graph
-    // derivation + fixpoint feeding all three consumers — against the
-    // per-query bench where each isolated timing pays its own
-    // derivation by design. Writes BENCH_COMPOSITE.json and exits; the
-    // driver contract (full map + minimal line) is untouched.
-    // Bars-family composite (SPARK_GRAFT_COMPOSITE=bars): ONE shared
-    // OHLCV materialization feeding every bar-consuming operator — the
-    // way a real indicator dashboard refresh runs — vs the per-query
-    // bench where each isolated timing re-derives bars by design
-    // (SURVEY §6 "bars pipeline reuse"). Writes BENCH_COMPOSITE_BARS.json.
-    if (sys.env.get("SPARK_GRAFT_COMPOSITE").exists(_.equalsIgnoreCase("bars"))) {
-      import org.apache.spark.sql.DataFrame
-      import graft.operators._
-      val consumers: Seq[(String, DataFrame => DataFrame)] = Seq(
-        "q_preprocess_mavg" -> (Indicators.preprocess(_)),
-        "q_gap_fill" -> (Bars.gapFill(_)),
-        "q_validate_bars" -> (Bars.validateOhlc(_)),
-        "q_market_hours" -> (Market.marketHours(_)),
-        "q_eod_ma5" -> (Market.eodMa5(_)),
-        "q_missing_report" -> (Market.missingReport(_)),
-        "q_processed_table" -> (Market.processedTable(_)),
-        "q_sma" -> (Indicators.sma(_)),
-        "q_bollinger" -> (Indicators.bollinger(_)),
-        "q_rsi" -> (Indicators.rsi(_)),
-        "q_macd" -> (Ema.macd(_)),
-        "q_atr" -> (Indicators.atr(_)),
-        "q_stochastic" -> (Indicators.stochastic(_)),
-        "q_vwap" -> (Indicators.vwap(_)),
-        "q_obv" -> (Indicators.obv(_)),
-        "q_williams_r" -> (Indicators.williamsR(_)),
-        "q_momentum" -> (Indicators.momentum(_)),
-        "q_summary_stats" -> (Indicators.summaryStats(_)),
-        "q_weekly_range" -> (Indicators.weeklyRange(_)),
-        "q_volume_heatmap" -> (Indicators.volumeHeatmap(_)),
-        "q_volume_pivot" -> (Indicators.volumePivot(_)),
-        "q_volume_unpivot" -> (Indicators.volumeUnpivot(_)),
-        "q_latest_metrics" -> (Indicators.latestMetrics(_)),
-        "q_donchian" -> (Indicators.donchian(_)),
-        "q_mfi" -> (Indicators.mfi(_)),
-        "q_candles" -> (Indicators.candlePatterns(_)),
-        "q_pivot_points" -> (Indicators.pivotPoints(_)),
-        "q_swing_points" -> (Indicators.swingPoints(_)),
-        "q_up_streaks" -> (Indicators.upStreaks(_)))
-      def onePass(): (Double, Double) = {
-        val ev = Tables.events(spark, sfDir)
-        // pipelined: derive + materialize bars ONCE, fan out consumers
-        val tShared = timed {
-          val shared = Bars.ohlcv(ev).localCheckpoint(true)
-          consumers.foreach { case (_, f) => f(shared).count() }
-        }._2
-        cleanup()
-        // standalone: every consumer re-derives its own bars (what the
-        // per-query bench measures, summed)
-        val tSolo = consumers.map { case (_, f) =>
-          val t = timed(f(Bars.ohlcv(ev)).count())._2; cleanup(); t
-        }.sum
-        (tShared, tSolo)
-      }
-      val p1 = onePass(); System.gc(); val p2 = onePass()
-      val (tShared, tSolo) =
-        (math.min(p1._1, p2._1), math.min(p1._2, p2._2))
-      val json =
-        s"""{"metric":"bars_family_composite","unit":"sec","n_consumers":${consumers.size},"pipelined":${num(tShared)},"standalone_sum":${num(tSolo)},"speedup":${num(tSolo / math.max(tShared, 1e-9))},"sf":"$sfDir"}"""
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_COMPOSITE_BARS.json"), json + "\n")
-      catch { case _: Throwable => () }
-      try spark.stop() catch { case _: Throwable => () }
-      System.err.println(json)
-      return
-    }
-    // ANN-index composite (SPARK_GRAFT_COMPOSITE=ann): the index
-    // AMORTIZATION story — a production vector deployment builds the
-    // IVF+PQ index (and the neighbor graph) ONCE and serves every
-    // search mode from it, while the per-query bench charges each ANN
-    // query its own index build by design. Pipelined = ONE
-    // annRecallReport pass (shared persisted ADC frame + shared corpus
-    // prep feeding brute/ADC/refine/graph AND the recall joins);
-    // standalone = the four public pipelines each building their own
-    // index, summed. The pipelined side does strictly MORE output work
-    // (the hit joins), so the reported speedup is conservative.
-    if (sys.env.get("SPARK_GRAFT_COMPOSITE").exists(_.equalsIgnoreCase("ann"))) {
-      import graft.operators.Similarity
-      val emb = Tables.embeddings(spark, sfDir)
-      def onePass(): (Double, Double) = {
-        val tShared = timed(Similarity.annRecallReport(emb).count())._2
-        cleanup()
-        val standalone = Seq[() => org.apache.spark.sql.DataFrame](
-          () => Similarity.annBruteforce(emb),
-          () => Similarity.annIvfPq(emb),
-          () => Similarity.annIvfPqRefine(emb),
-          () => Similarity.annGraph(emb))
-        val tSolo = standalone.map { f =>
-          val t = timed(f().count())._2; cleanup(); t
-        }.sum
-        (tShared, tSolo)
-      }
-      val p1 = onePass(); System.gc(); val p2 = onePass()
-      val (tShared, tSolo) =
-        (math.min(p1._1, p2._1), math.min(p1._2, p2._2))
-      val json =
-        s"""{"metric":"ann_index_composite","unit":"sec","n_methods":4,"pipelined":${num(tShared)},"standalone_sum":${num(tSolo)},"speedup":${num(tSolo / math.max(tShared, 1e-9))},"sf":"$sfDir"}"""
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_COMPOSITE_ANN.json"), json + "\n")
-      catch { case _: Throwable => () }
-      try spark.stop() catch { case _: Throwable => () }
-      System.err.println(json)
-      return
-    }
-    // Checkpoint-I/O probe (SPARK_GRAFT_CKPT=1): run the iterative
-    // dedup-clusters fixpoint once and report what its per-round
-    // localCheckpoints actually cost — block count (= rounds + initial),
-    // bytes held in memory vs spilled to disk, and the input size for
-    // scale — so "is checkpoint I/O dominant at sf1.0?" is a measurement,
-    // not a guess. Snapshot BEFORE any GC: ContextCleaner reclaims
-    // checkpoint blocks once their frames are collected.
-    if (sys.env.get("SPARK_GRAFT_CKPT").exists(v => v == "1" || v.equalsIgnoreCase("true"))) {
-      import graft.operators.Dedup
-      val docs = Tables.documents(spark, sfDir)
-      val (rows, secs) = timed(Dedup.dedupClusters(docs).count())
-      // Plain Dataset.persist goes through the CacheManager, so the
-      // blocking clearCache() releases those frames (e.g. the fixpoint's
-      // edges cache, whose own unpersist is asynchronous); localCheckpoint
-      // blocks live at the RDD level and survive — what remains in the
-      // storage snapshot IS the checkpoint footprint, not cache bytes.
-      spark.catalog.clearCache()
-      val cached = spark.sparkContext.getRDDStorageInfo
-        .filter(i => i.memSize + i.diskSize > 0)
-      val memB = cached.map(_.memSize).sum
-      val diskB = cached.map(_.diskSize).sum
-      val inputB = {
-        val p = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
-        val s = java.nio.file.Files.walk(p)
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
-      // Reliable-checkpoint delta: the same fixpoint with
-      // spark.graft.checkpointDir set (per-round eager checkpoint() to
-      // the local FS here; HDFS/object store on a cluster) — the
-      // durability-vs-latency trade as a measured number.
-      val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-      spark.conf.set(graft.operators.Checkpoints.DirConf, ckptDir)
-      val (rowsR, secsR) =
-        try timed(Dedup.dedupClusters(docs).count())
-        finally spark.conf.unset(graft.operators.Checkpoints.DirConf)
-      val reliableB = {
-        val p = java.nio.file.Paths.get(ckptDir)
-        val s = java.nio.file.Files.walk(p)
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
-      require(rowsR == rows, s"reliable-checkpoint run diverged: $rowsR vs $rows")
-      val json =
-        s"""{"metric":"ckpt_probe","query":"q_dedup_clusters","rows":$rows,"sec":${num(secs)},"ckpt_blocks":${cached.length},"ckpt_mem_bytes":$memB,"ckpt_disk_bytes":$diskB,"reliable_sec":${num(secsR)},"reliable_bytes":$reliableB,"input_bytes":$inputB,"sf":"$sfDir"}"""
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_CKPT.json"), json + "\n")
-      catch { case _: Throwable => () }
-      try spark.stop() catch { case _: Throwable => () }
-      System.err.println(json)
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_COMPOSITE").exists(v => v == "1" || v.equalsIgnoreCase("true"))) {
-      import org.apache.spark.sql.functions.col
-      import graft.operators.Dedup
-      def onePass(): (Double, Double, Double, Double, Double) = {
-        val d = Tables.documents(spark, sfDir)
-        val ids = d.select(col("doc_id"))
-        val (pairs, tPairs) = timed(Dedup.dedupPairGraph(d).localCheckpoint(true))
-        val (labels, tLabels) =
-          timed(Dedup.dedupClustersFromPairs(pairs, ids).localCheckpoint(true))
-        val (_, tLss) = timed(Dedup.dedupClustersLSSFromPairs(pairs, ids).count())
-        val (_, tStats) = timed(Dedup.clusterStatsFromLabels(labels).count())
-        val (_, tCc) = timed(Dedup.graphCcFromPairs(pairs).count())
-        graft.operators.Ema.unpersistAll()
-        spark.catalog.clearCache()
-        (tPairs, tLabels, tLss, tStats, tCc)
-      }
-      // min-of-2 by total, same methodology as the per-query bench. The
-      // GC between passes drives the ContextCleaner so pass 1's
-      // localCheckpoint blocks (released only after their frames are
-      // collected) don't squeeze pass 2's memory.
-      val pass1 = onePass()
-      System.gc()
-      val pass2 = onePass()
-      val (tPairs, tLabels, tLss, tStats, tCc) = Seq(pass1, pass2)
-        .minBy(t => t._1 + t._2 + t._3 + t._4 + t._5)
-      val total = tPairs + tLabels + tLss + tStats + tCc
-      val json =
-        s"""{"metric":"cluster_family_composite","value":${num(total)},"unit":"sec","stages":{"pair_graph":${num(tPairs)},"clusters":${num(tLabels)},"clusters_lss":${num(tLss)},"cluster_stats":${num(tStats)},"graph_cc":${num(tCc)}},"sf":"$sfDir"}"""
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_COMPOSITE.json"), json + "\n")
-      catch { case _: Throwable => () }
-      try spark.stop() catch { case _: Throwable => () }
-      System.err.println(json)
-      return
-    }
     var sinceGc = 0
     // Optional focus filter for quiet re-measurement of a few queries
     // (comma-separated names); the full-map artifact is only written on

@@ -5,8 +5,10 @@ import java.io.{ByteArrayOutputStream, PrintStream}
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Emits a markdown audit of every query's physical plan: exchange
   * counts, broadcast usage, scan pushdown, codegen coverage. The output
@@ -53,6 +55,15 @@ object PlanAudit {
     walk(root)
     out.toSeq
   }
+
+  /** Shuffle exchanges among `nodes`: every `ShuffleExchangeExec`,
+    * whatever its partitioning (hash, range, single-partition,
+    * round-robin). A `ReusedExchange` re-reads an earlier shuffle's
+    * output and is not one. PLANS.md and PlanShapeSpec's exchange gates
+    * both count with this, over the plan made with AQE off, where
+    * exchange reuse has run. */
+  private[graft] def shuffles(nodes: Seq[SparkPlan]): Int =
+    nodes.count(_.isInstanceOf[ShuffleExchangeExec])
 
   /** Count of window expressions whose frame has a BOUNDED lower edge
     * and an UnboundedFollowing upper edge. Spark executes that shape
@@ -103,8 +114,9 @@ object PlanAudit {
     spark.sparkContext.setLogLevel("ERROR")
     println("# Physical-plan audit")
     println()
-    println(s"Generated by `graft.PlanAudit` over `$sfDir`. Shuffle = " +
-      "`Exchange hashpartitioning`/`rangepartitioning` (the final range " +
+    println(s"Generated by `graft.PlanAudit` over `$sfDir` with AQE off. " +
+      "Shuffle = every shuffle `Exchange` (hash, range, single-partition " +
+      "or round-robin; the final range " +
       "partitioning implements each query's deterministic ORDER BY output " +
       // ASCII only: this goes through the console charset, which is not
       // guaranteed UTF-8 under every sbt/JVM launcher
@@ -127,9 +139,10 @@ object PlanAudit {
         val buf = new ByteArrayOutputStream()
         Console.withOut(new PrintStream(buf)) { df.explain("formatted") }
         val formatted = buf.toString
-        val hashEx = texts.count(_.startsWith("Exchange hashpartitioning"))
-        val rangeEx = texts.count(_.startsWith("Exchange rangepartitioning"))
-        val single = texts.count(_.startsWith("Exchange SinglePartition"))
+        val rangeEx = nodes.count {
+          case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[RangePartitioning]
+          case _ => false
+        }
         val bc = texts.count(_.startsWith("BroadcastExchange"))
         val wsc = nodes.collect {
           case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w.codegenStageId
@@ -144,7 +157,7 @@ object PlanAudit {
           if (has("MapGroups") || has("FlatMapGroups")) Some("typed-pass") else None,
           if (has("Window")) Some("window") else None
         ).flatten.mkString(" ")
-        println(s"| $name | ${hashEx + rangeEx + single} | $rangeEx | $bc | $wsc | " +
+        println(s"| $name | ${shuffles(nodes)} | $rangeEx | $bc | $wsc | " +
           s"${if (pushed) "yes" else "-"} | ${globalWindows(nodes)} | ${quadraticFrames(nodes)} | $notes |")
       } catch {
         case e: Throwable => println(s"| $name | ERROR ${e.getClass.getSimpleName} | | | | | | | |")

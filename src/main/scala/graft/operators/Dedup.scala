@@ -269,9 +269,8 @@ object Dedup {
   /** The near-dup candidate pair graph, compute-once form: the
     * UNORDERED distinct (doc_a, doc_b) pairs every cluster-family
     * consumer starts from. A real pipeline derives min-label clusters
-    * ([[dedupClustersFromPairs]]), the large-star/small-star variant
-    * ([[dedupClustersLSSFromPairs]]), and the ROI histogram
-    * ([[clusterStatsFromLabels]]) from ONE materialization of this
+    * ([[dedupClustersFromPairs]]) and the large-star/small-star variant
+    * ([[dedupClustersLSSFromPairs]]) from ONE materialization of this
     * frame (localCheckpoint/persist it first) instead of re-running
     * shingling + MinHash + banding once per consumer — the standalone
     * oracle queries deliberately pay the full derivation each so their
@@ -561,19 +560,6 @@ object Dedup {
       .select(col("cluster_size"), col("n_clusters"),
         (col("cluster_size") * col("n_clusters")).as("n_docs"),
         ((col("cluster_size") - 1) * col("n_clusters")).as("n_removed"))
-      .orderBy(col("cluster_size"))
-
-  /** The ROI histogram from a PRECOMPUTED labels frame (the
-    * compute-once path: one [[dedupPairGraph]] + one fixpoint feeds
-    * clusters, the LSS variant, and this report — see
-    * [[dedupPairGraph]]). `labels` must carry (cluster_id,
-    * cluster_size, is_canonical), i.e. either FromPairs output. */
-  def clusterStatsFromLabels(labels: DataFrame): DataFrame =
-    labels
-      .groupBy(col("cluster_size"))
-      .agg(countDistinct(col("cluster_id")).as("n_clusters"),
-        count(lit(1)).as("n_docs"),
-        sum(when(!col("is_canonical"), 1L).otherwise(0L)).as("n_removed"))
       .orderBy(col("cluster_size"))
 
   /** CCNet-style cross-document segment dedup (Wenzek et al. 2020 §4.1

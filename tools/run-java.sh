@@ -10,7 +10,9 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
          java.base/sun.util.calendar; do
   OPENS="$OPENS --add-opens $p=ALL-UNNAMED"
 done
-CP="$(ls /opt/spark/jars/*.jar | tr '\n' ':')/root/repo/target/scala-2.13/classes"
+# the classes of the checkout this script sits in
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$(ls /opt/spark/jars/*.jar | tr '\n' ':')$ROOT/target/scala-2.13/classes"
 # MEM may hold several JVM flags ("-Xmx4g -XX:+UseG1GC") — word-split it
 # into an array so each flag reaches the JVM as its own argument
 read -ra MEM_FLAGS <<< "${MEM:--Xmx12g}"
