@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.Scope
+
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. A timed run executes the query's whole plan
   * through the `noop` sink ([[run]]): a `count()` lets Catalyst prune
@@ -10,10 +12,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (AQE stage state, cleaner GC) that injects one-off multi-second
   * stalls; min-of-2 measures the query, not the stall.
   *
-  * Session hygiene between queries: persisted intermediates are released
-  * (`Ema.unpersistAll` + `catalog.clearCache`, so every timed run pays
-  * its own materialization — comparable numbers, no cross-query cache
-  * growth) and a periodic driver GC drives Spark's ContextCleaner, which
+  * Session hygiene between queries: each timed run builds its query and
+  * runs it inside one [[graft.operators.Scope]], which releases what the
+  * query persisted (so every timed run pays its own materialization —
+  * comparable numbers, no cross-query cache growth), and a periodic
+  * driver GC drives Spark's ContextCleaner, which
   * only reclaims shuffle files and broadcasts after their weak refs are
   * collected — in a session of every query × 2 an 8 GiB heap can
   * otherwise go long stretches without a collection while per-query
@@ -40,21 +43,16 @@ object Bench {
     // is not charged Spark startup cost.
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    def cleanup(): Unit = {
-      graft.operators.Ema.unpersistAll()
-      spark.catalog.clearCache()
-    }
     def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
-      // cleanup in finally: a failed query must not leak its persisted
-      // intermediates into the next timed run (and its cost is not timed).
-      // A failure still reads -1 in the JSON; stderr says why.
-      try { run(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
+      // the scope releases a failed query's intermediates too, and its
+      // release is not timed. A failure still reads -1 in the JSON;
+      // stderr says why.
+      try Scope { run(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: $e")
         -1.0
       }
-      finally cleanup()
     }
     // Locale-pinned formatting: the default-locale f interpolator writes
     // a comma decimal separator on e.g. de_DE JVMs, which is not JSON.

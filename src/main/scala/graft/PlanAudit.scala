@@ -10,6 +10,8 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
+import graft.operators.Scope
+
 /** Emits a markdown audit of every query's physical plan: exchange
   * counts, broadcast usage, scan pushdown, codegen coverage. The output
   * (PLANS.md) is the scale-review artifact — a query with surprise
@@ -132,7 +134,7 @@ object PlanAudit {
     println("| query | shuffles | of which output-sort | broadcasts | codegen spans | pushdown | global windows | quad frames | notes |")
     println("|---|---|---|---|---|---|---|---|---|")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
+      try Scope {
         val df = fn(spark, sfDir)
         val nodes = executedNodes(df.queryExecution.executedPlan)
         val texts = nodes.map(_.simpleString(120))
@@ -161,9 +163,6 @@ object PlanAudit {
           s"${if (pushed) "yes" else "-"} | ${globalWindows(nodes)} | ${quadraticFrames(nodes)} | $notes |")
       } catch {
         case e: Throwable => println(s"| $name | ERROR ${e.getClass.getSimpleName} | | | | | | | |")
-      } finally {
-        graft.operators.Ema.unpersistAll()
-        spark.catalog.clearCache()
       }
     }
     spark.stop()

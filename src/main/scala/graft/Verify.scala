@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.operators.Scope
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -26,7 +28,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try {
+      // the scope releases each query's persisted intermediates, so the
+      // 214-query dump session stays flat
+      try Scope {
         val out = fn(spark, sfDir)
         // Dump tz-naive timestamps: the session is UTC, and DuckDB's
         // oracle results are naive, so writing TIMESTAMP_NTZ makes the
@@ -44,11 +48,6 @@ object Verify {
           .parquet(s"$outDir/$name")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally {
-        // Release per-query persisted intermediates (the operators'
-        // tracked caches) so the 60-query dump session stays flat.
-        graft.operators.Ema.unpersistAll()
-        spark.catalog.clearCache()
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

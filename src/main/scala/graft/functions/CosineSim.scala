@@ -1,75 +1,37 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression: fused cosine similarity over two double
   * arrays.
   *
-  * One codegen'd loop computes dot product and both norms — no
-  * intermediate arrays, no lambda-function evaluation — replacing the
+  * One loop computes dot product and both norms — no intermediate
+  * arrays, no lambda-function evaluation — replacing the
   * `zip_with`+`aggregate` fold chain in the hot vector-search path.
   * Accumulation order matches the sequential left-fold the DuckDB oracle
   * uses (`list_reduce` over element products), so results stay
-  * bit-identical. Returns null when either norm is zero.
+  * bit-identical. Returns null when either norm is zero, and on ragged
+  * lengths or a null element ([[ArrayPairKernel]]).
   */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim requires array<double> inputs, got " +
-        s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
+case class CosineSim(left: Expression, right: Expression) extends ArrayPairKernel {
   override def prettyName: String = "cosine_sim"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+  override def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = x.numElements()
+    if (y.numElements() != n) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val xi = x.getDouble(i); val yi = y.getDouble(i)
       dot += xi * yi; na += xi * xi; nb += yi * yi
       i += 1
     }
     val d = math.sqrt(na) * math.sqrt(nb)
-    if (d == 0.0) null else java.lang.Double.valueOf(dot / d)
+    if (d == 0.0) null else dot / d
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val d = ctx.freshName("d")
-      s"""
-        int $n = Math.min($a.numElements(), $b.numElements());
-        double $dot = 0.0, $na = 0.0, $nb = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double xi = $a.getDouble($i);
-          double yi = $b.getDouble($i);
-          $dot += xi * yi; $na += xi * xi; $nb += yi * yi;
-        }
-        double $d = Math.sqrt($na) * Math.sqrt($nb);
-        if ($d == 0.0) { ${ev.isNull} = true; }
-        else { ${ev.value} = $dot / $d; }
-      """
-    })
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)

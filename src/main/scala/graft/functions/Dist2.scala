@@ -1,13 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-/** Native squared-L2 distance over two double arrays — one fused
-  * codegen loop, no intermediate array materialization. Replaces the
+/** Native squared-L2 distance over two double arrays — one fused loop,
+  * no intermediate array materialization. Replaces the
   * `aggregate(zip_with(a, b, (x,y) -> (x-y)*(x-y)), 0.0, _+_)` fold in
   * the IVF/PQ assignment and ADC distance-table paths (the hottest
   * per-row kernels in vector search: corpus × M × Ks evaluations),
@@ -15,27 +12,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * codegen) and which allocates the zipped array per call.
   * Accumulation is the same left-to-right fold from 0.0, so results
   * are bit-identical and the DuckDB oracle is unchanged. */
-case class Dist2(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("dist2 requires array<double> inputs")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
+case class Dist2(left: Expression, right: Expression) extends ArrayPairKernel {
   override def prettyName: String = "dist2"
 
-  // Ragged lengths / null elements return NULL, exactly like the fold:
-  // zip_with pads the shorter array with nulls, (x-y)*(x-y) of a null
-  // is null, and the running sum absorbs it into a NULL result.
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (y.numElements() != n) return null
     var acc = 0.0
@@ -46,29 +26,8 @@ case class Dist2(left: Expression, right: Expression)
       acc += d * d
       i += 1
     }
-    java.lang.Double.valueOf(acc)
+    acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-        int $n = $a.numElements();
-        double $acc = 0.0;
-        if ($b.numElements() != $n) { ${ev.isNull} = true; }
-        else {
-          for (int $i = 0; $i < $n; $i++) {
-            if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-            double $d = $a.getDouble($i) - $b.getDouble($i);
-            $acc += $d * $d;
-          }
-          if (!${ev.isNull}) { ${ev.value} = $acc; }
-        }
-      """
-    })
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)

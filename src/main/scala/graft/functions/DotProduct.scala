@@ -2,56 +2,32 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-/** Native dot product over two double arrays — one fused codegen loop,
+/** Native dot product over two double arrays — one fused loop,
   * accumulating left-to-right from 0.0 exactly like the
   * `aggregate(zip_with(a, b, _*_), 0.0, _+_)` fold it replaces, so the
-  * rewrite below is bit-exact. */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("dot_product requires array<double> inputs")
-  }
-  override def dataType: DataType = DoubleType
+  * rewrite below is bit-exact, null on ragged lengths or a null element
+  * included ([[ArrayPairKernel]]). */
+case class DotProduct(left: Expression, right: Expression) extends ArrayPairKernel {
   override def prettyName: String = "dot_product"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+  override def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = x.numElements()
+    if (y.numElements() != n) return null
     var dot = 0.0
     var i = 0
-    while (i < n) { dot += x.getDouble(i) * y.getDouble(i); i += 1 }
-    java.lang.Double.valueOf(dot)
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      dot += x.getDouble(i) * y.getDouble(i)
+      i += 1
+    }
+    dot
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      s"""
-        int $n = Math.min($a.numElements(), $b.numElements());
-        double $dot = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          $dot += $a.getDouble($i) * $b.getDouble($i);
-        }
-        ${ev.value} = $dot;
-      """
-    })
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)

@@ -318,47 +318,49 @@ object Dedup {
     // session's shuffle parallelism, env-derived in the mains) keeps AQE
     // from coalescing one side to a mismatched partition count.
     val P = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .repartition(P, col("dst"))
-      .persist()
-    // localCheckpoint per round: each round's plan references the
-    // previous labels twice (neighbor-min + merge join), so bare persist
-    // leaves an exponentially growing lineage; truncation is the
-    // standard iterative-graph pattern (reliable checkpoint at cluster
-    // scale). LAZY truncation + the signature action = ONE job per
-    // round (the sig aggregate materializes the checkpoint it scans)
-    // instead of an eager-count job followed by the sig job.
-    var labels = Checkpoints.truncateLazy(
-      docs.select(col("doc_id"), col("doc_id").as("label"))
-        .repartition(P, col("doc_id")))
-    // order-independent (count, XOR-of-hashes) signature — a label SUM
-    // would overflow Long under ANSI mode at exactly the id scales the
-    // operator targets, and xor detects any label flip just as well
-    def sig(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), expr("bit_xor(xxhash64(doc_id, label))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    // the edge list lives for the fixpoint only: its own scope releases it
+    val fixed = Scope {
+      val edges = Scope.persist(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+        .repartition(P, col("dst")))
+      // localCheckpoint per round: each round's plan references the
+      // previous labels twice (neighbor-min + merge join), so bare persist
+      // leaves an exponentially growing lineage; truncation is the
+      // standard iterative-graph pattern (reliable checkpoint at cluster
+      // scale). LAZY truncation + the signature action = ONE job per
+      // round (the sig aggregate materializes the checkpoint it scans)
+      // instead of an eager-count job followed by the sig job.
+      var labels = Checkpoints.truncateLazy(
+        docs.select(col("doc_id"), col("doc_id").as("label"))
+          .repartition(P, col("doc_id")))
+      // order-independent (count, XOR-of-hashes) signature — a label SUM
+      // would overflow Long under ANSI mode at exactly the id scales the
+      // operator targets, and xor detects any label flip just as well
+      def sig(df: DataFrame): (Long, Long) = {
+        val r = df.agg(count(lit(1)), expr("bit_xor(xxhash64(doc_id, label))")).head()
+        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+      }
+      var prev = sig(labels)
+      var converged = prev._1 == 0L
+      var it = 0
+      while (!converged && it < maxIter) {
+        val nbrMin = edges.join(labels, edges("dst") === labels("doc_id"))
+          .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
+        val next = labels.join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
+          .select(labels("doc_id"),
+            least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
+        val nextT = Checkpoints.truncateLazy(next)
+        val s = sig(nextT) // materializes the round's checkpoint too
+        labels = nextT
+        converged = s == prev // labels only decrease ⇒ any change flips the signature
+        prev = s
+        it += 1
+      }
+      labels
     }
-    var prev = sig(labels)
-    var converged = prev._1 == 0L
-    var it = 0
-    while (!converged && it < maxIter) {
-      val nbrMin = edges.join(labels, edges("dst") === labels("doc_id"))
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-      val next = labels.join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
-        .select(labels("doc_id"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-      val nextT = Checkpoints.truncateLazy(next)
-      val s = sig(nextT) // materializes the round's checkpoint too
-      labels = nextT
-      converged = s == prev // labels only decrease ⇒ any change flips the signature
-      prev = s
-      it += 1
-    }
-    edges.unpersist()
     // the returned plan reads the final labels checkpoint (its blocks
     // are held alive by the plan's RDD reference, reclaimed on GC)
-    labels.select(col("doc_id"), col("label").as("cluster_id"))
+    fixed.select(col("doc_id"), col("label").as("cluster_id"))
   }
 
   /** Per-doc cluster size WITHOUT a cluster_id-partitioned window: a
@@ -809,11 +811,11 @@ object Dedup {
     * bucket caps (at adversarial degree skew the classic refinement —
     * re-orient edges by (degree, id) instead of raw id — drops in
     * without changing this plan shape). The pair graph materializes ONCE
-    * (persistTracked) and feeds all three consumers (degrees, wedges,
+    * ([[Scope.persist]]) and feeds all three consumers (degrees, wedges,
     * closing edges). `local_cc = 2·triangles / (deg·(deg−1))` — exact
     * integers into one double division at the edge. */
   def graphCc(docs: DataFrame): DataFrame =
-    graphCcFromPairs(Ema.persistTracked(minhashLshPairs(docs)))
+    graphCcFromPairs(Scope.persist(minhashLshPairs(docs)))
 
   /** [[graphCc]]'s core over an already-built pair list (doc_a < doc_b,
     * distinct) — the compute-once entry point for pipelines that share

@@ -2,9 +2,8 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Exact recursive EMA / MACD (reference app/dashboard.py:114-118).
   *
@@ -24,42 +23,9 @@ object Ema extends Serializable {
   private val A26 = 2.0 / 27.0; private val B26 = 25.0 / 27.0
   private val A9 = 2.0 / 10.0; private val B9 = 8.0 / 10.0
 
-  // Persisted intermediates of the operators that reuse one lineage
-  // across passes (Similarity, Relational, Layout, Unigram, Dedup,
-  // TrainingData; the EMA folds persist nothing), so a long-lived
-  // session (bench harness, notebook, service) can release them
-  // between queries: the returned DataFrames are lazy, so there is no
-  // safe unpersist point inside the builders themselves.
-  //
-  // CONTRACT: call [[unpersistAll]] after the terminal action on each
-  // such result. A caller that never does is still bounded:
-  // the registry caps itself at MaxTracked entries by evicting (and
-  // unpersisting) the oldest — an evicted intermediate that is somehow
-  // still live just recomputes on its next action.
-  private val MaxTracked = 64
-  private val persistedSets =
-    new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
-
-  // package-visible: the operators above share this one registry so
-  // Bench/session cleanup releases their intermediates through the one
-  // unpersistAll() hook
-  private[operators] def persistTracked[T](ds: Dataset[T]): Dataset[T] = {
-    val p = ds.persist(StorageLevel.MEMORY_AND_DISK)
-    persistedSets.add(p)
-    while (persistedSets.size > MaxTracked) {
-      val old = persistedSets.poll()
-      if (old != null) old.unpersist(blocking = false)
-    }
-    p
-  }
-
-  /** Release every intermediate registered through [[persistTracked]].
-    * Call after the terminal action on a result; a subsequent action on
-    * an old result simply re-materializes. */
-  def unpersistAll(): Unit = {
-    var d = persistedSets.poll()
-    while (d != null) { d.unpersist(blocking = false); d = persistedSets.poll() }
-  }
+  /** Release what the calling thread persisted outside any [[Scope]]:
+    * perfbench's cleanup hook; new callers open a `Scope` instead. */
+  def unpersistAll(): Unit = Scope.releaseRoot()
 
   /** One exact fold per symbol: one `groupByKey(symbol)` exchange hands
     * each symbol's rows to one task, which stable-sorts them by bar_ts

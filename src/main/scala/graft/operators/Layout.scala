@@ -205,10 +205,10 @@ object Layout {
   def pruneSimulation(part: DataFrame,
       sizeLo: Long = 10, sizeHi: Long = 20,
       priceTenthsLo: Long = 12000, priceTenthsHi: Long = 14000): DataFrame = {
-    // persistTracked: the ≤256-row cell frame feeds both dimension
+    // persisted: the ≤256-row cell frame feeds both dimension
     // branches AND the total — without it each consumer re-derives the
-    // lineage and the corpus is scanned 4× (released by unpersistAll)
-    val cells = Ema.persistTracked(
+    // lineage and the corpus is scanned 4× (released by the caller's Scope)
+    val cells = Scope.persist(
       quantized(part).withColumn("zval", expr(interleave16))
         .withColumn("cell", expr("zval DIV 256"))
         .groupBy(col("cell"))
@@ -258,10 +258,10 @@ object Layout {
     * write. */
   def compactionPlan(orders: DataFrame,
       targetBytes: Long = 128L << 20): DataFrame = {
-    // persistTracked: the dictionary-sized month frame feeds both the
+    // persisted: the dictionary-sized month frame feeds both the
     // plan and its one-row total — without it the total's sum-of-sums
     // collapses to a SECOND full scan of the fact table
-    val per = Ema.persistTracked(orders
+    val per = Scope.persist(orders
       .select(expr("CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT)").as("ym"),
         expr("32L + length(o_orderstatus) + length(o_orderpriority)").as("b"))
       .groupBy(col("ym"))

@@ -220,21 +220,30 @@ object Relational {
     * literal TRUE. A sketch drifting out of tolerance on either engine
     * breaks the hash match. The exact columns exist to measure the
     * sketch at test scale; the 100 TB production path is the approx
-    * side alone (see [[statsApprox]]). */
-  def profileApprox(events: DataFrame, rsd: Double = 0.05): DataFrame =
-    events.groupBy(col("event_type"))
+    * side alone (see [[statsApprox]]).
+    *
+    * The exact distinct count is its own aggregate, broadcast-joined
+    * (null-safe) to the one plain aggregate of the other columns: beside
+    * them it would trigger Spark's single-distinct rewrite, which pushes
+    * every other aggregate down to (event_type, user_id) groups, each
+    * holding its own 10,000-accuracy percentile_approx sketch. */
+  def profileApprox(events: DataFrame, rsd: Double = 0.05): DataFrame = {
+    val users = events.groupBy(col("event_type"))
+      .agg(countDistinct(col("user_id")).as("n_users_exact"))
+    val stats = events.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        countDistinct(col("user_id")).as("n_users_exact"),
         approx_count_distinct(col("user_id"), rsd).as("_nu_approx"),
         percentile_approx(col("value"), lit(0.5), lit(10000)).as("_med_approx"),
         expr("percentile(value, 0.45)").as("_p45"),
         expr("percentile(value, 0.55)").as("_p55"))
-      .select(col("event_type"), col("n_events"), col("n_users_exact"),
+    stats.join(broadcast(users), stats("event_type") <=> users("event_type"))
+      .select(stats("event_type"), col("n_events"), col("n_users_exact"),
         (abs(col("_nu_approx") - col("n_users_exact")) <=
           lit(3 * rsd) * col("n_users_exact")).as("users_within_3rsd"),
         (col("_med_approx") >= col("_p45") && col("_med_approx") <= col("_p55"))
           .as("median_within_band"))
       .orderBy(col("event_type"))
+  }
 
   /** Events enriched with per-symbol aggregate stats via the
     * [[Skew.saltedJoin]] — the oracle-gated proof that salting is
@@ -569,7 +578,7 @@ object Relational {
     // nondeterministic _pid blocks exchange reuse across its three
     // readers (local sweep, per-segment maxes, the maxes copy in the
     // carry self-join), and all readers must agree on partition ids
-    val perPrice = Ema.persistTracked(
+    val perPrice = Scope.persist(
       part.groupBy(col("p_retailprice").as("sky_price"))
         .agg(max(col("p_size")).as("sky_size"))
         .repartitionByRange(nParts, col("sky_price").asc)
@@ -694,8 +703,8 @@ object Relational {
     // the cache each chained ntile pass would re-execute its
     // predecessors 3×, an exponential plan blowup. One shared
     // materialization also guarantees every reader sees the SAME
-    // partition ids. (Released via Ema.unpersistAll / clearCache.)
-    val ranged = Ema.persistTracked(
+    // partition ids. (Released by the caller's Scope.)
+    val ranged = Scope.persist(
       df.repartitionByRange(nParts, key.asc, tieBreak.asc)
         .withColumn("_pid", spark_partition_id().cast("long")))
     val wLocal = Window.partitionBy(col("_pid")).orderBy(key.asc, tieBreak.asc)
@@ -742,7 +751,7 @@ object Relational {
   def rfmSegments(events: DataFrame): DataFrame = {
     // persisted (lazily): the first ntile pass reads stats twice (the
     // range sampler + the exchange itself)
-    val stats = Ema.persistTracked(
+    val stats = Scope.persist(
       events.filter(col("event_type") === "purchase")
       .groupBy(col("user_id"))
       .agg(max(unix_micros(col("ts"))).as("last_us"),

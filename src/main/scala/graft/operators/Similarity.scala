@@ -400,7 +400,7 @@ object Similarity {
     * (spec-measured) — the oracle-gated [[annIvf]] keeps the sampled
     * centroids for engine reproducibility. */
   def ivfCentroidsLloyd(embeddings: DataFrame, iters: Int = 2): DataFrame =
-    ivfCentroidsLloydFrom(Ema.persistTracked(withVec(embeddings)), iters)
+    ivfCentroidsLloydFrom(Scope.persist(withVec(embeddings)), iters)
 
   /** Lloyd loop over a (persisted) normalized-vector frame. The corpus
     * scan materializes ONCE and every assignment pass reads the cache —
@@ -434,10 +434,9 @@ object Similarity {
   /** IVF probe against Lloyd-refined centroids — same nprobe machinery
     * as [[annIvf]]; recall improvement is measured in the spec suite.
     * The normalized corpus persists across the Lloyd iterations AND the
-    * final probe's assignment pass (released by `Ema.unpersistAll` /
-    * `catalog.clearCache`). */
+    * final probe's assignment pass (released by the caller's [[Scope]]). */
   def annIvfLloyd(embeddings: DataFrame, k: Int = 3, iters: Int = 2): DataFrame = {
-    val e = Ema.persistTracked(withVec(embeddings))
+    val e = Scope.persist(withVec(embeddings))
     val cents = ivfCentroidsLloydFrom(e, iters)
     ivfProbe(e, cents, k)
   }
@@ -575,7 +574,7 @@ object Similarity {
     * cost O(iters · N · Ks) distance evaluations, broadcast state
     * O(M · Ks) always. */
   private def pqCodebookTrained(e: DataFrame, iters: Int): DataFrame = {
-    val sub = Ema.persistTracked(
+    val sub = Scope.persist(
       e.withColumn("m", explode(sequence(lit(0), lit(PqM - 1))))
         .select(col("vec_id"), col("m"),
           slice(col("v"), col("m") * PqSubDim + 1, lit(PqSubDim)).as("sv")))
@@ -603,7 +602,7 @@ object Similarity {
     * [[pqCodebookTrained]] codewords. Spec-measured: training lifts
     * recall over the sampled codebook at the same code budget. */
   def annPqTrained(embeddings: DataFrame, k: Int = 5, iters: Int = 2): DataFrame = {
-    val e = Ema.persistTracked(withVec(embeddings))
+    val e = Scope.persist(withVec(embeddings))
     val cb = pqCodebookTrained(e, iters)
     val codes = pqAssign(e, cb).select(col("vec_id"), col("m"), col("code"))
     val dtable = defaultQueries(e)
@@ -740,7 +739,7 @@ object Similarity {
     * vectors. ADC folds over the m-sorted struct array for a fixed
     * summation order (the [[annPq]] device). */
   def annIvfPq(embeddings: DataFrame, k: Int = 5): DataFrame = {
-    val e = Ema.persistTracked(withVec(embeddings))
+    val e = Scope.persist(withVec(embeddings))
     annIvfPqImpl(e, defaultQueries(e), k, broadcastQ = true)
   }
 
@@ -752,7 +751,7 @@ object Similarity {
     * only through ids and nibble codes. */
   def annIvfPqFor(embeddings: DataFrame, queries: DataFrame, k: Int = 5,
       maxBroadcastQueries: Int = DefaultMaxBroadcastQueries): DataFrame = {
-    val e = Ema.persistTracked(withVec(embeddings))
+    val e = Scope.persist(withVec(embeddings))
     val q0 = normalizeQueries(queries)
     annIvfPqImpl(e, q0, k, broadcastQ = fitsBroadcast(q0, maxBroadcastQueries))
   }
@@ -842,7 +841,7 @@ object Similarity {
     * the brute ceiling is spec-asserted (refine ≥ unrefined E11). */
   def annIvfPqRefine(embeddings: DataFrame, k: Int = 5,
       shortlist: Int = RefineShortlist): DataFrame = {
-    val e = Ema.persistTracked(withVec(embeddings))
+    val e = Scope.persist(withVec(embeddings))
     val q0 = defaultQueries(e)
     refineFromAdc(e, q0, ivfPqAdcFrame(e, q0, broadcastQ = true), k, shortlist)
   }
@@ -894,7 +893,7 @@ object Similarity {
     * zip_with (order-free, identical doubles in both engines). */
   def annIvfPqResidual(embeddings: DataFrame, k: Int = 5,
       trainIters: Int = 0): DataFrame = {
-    val e = Ema.persistTracked(withVec(embeddings))
+    val e = Scope.persist(withVec(embeddings))
     // K rows, lazily checkpointed: ONE TakeOrdered pass for the
     // centroid frame's three consumers (assignment array, residual
     // centroid re-attach, query probe)
@@ -905,7 +904,7 @@ object Similarity {
     // re-join are all gone. The residual is built right after:
     // centroid vectors come back via the same ≤~2 MB broadcast the
     // assignment array rode in on.
-    val assign = Ema.persistTracked(
+    val assign = Scope.persist(
       assignCells(e, cents)
         .join(broadcast(cents.select(col("cent_id").as("cell"), col("cv"))),
           Seq("cell"))
@@ -978,9 +977,9 @@ object Similarity {
     * parity-spec'd against them; the report then joins only bounded
     * (q_id, nn_id) id sets, |Q|·k rows each. */
   def annRecallReport(embeddings: DataFrame, k: Int = 5): DataFrame = {
-    val e = Ema.persistTracked(withVec(embeddings))
+    val e = Scope.persist(withVec(embeddings))
     val q0 = defaultQueries(e)
-    val adcF = Ema.persistTracked(ivfPqAdcFrame(e, q0, broadcastQ = true))
+    val adcF = Scope.persist(ivfPqAdcFrame(e, q0, broadcastQ = true))
     val brute = rankTopK(bruteCandidates(e, broadcast(q0)), k)
       .select(col("q_id"), col("nn_id"))
     val adc = adcTopK(adcF, k).select(col("q_id"), col("nn_id"))
@@ -1036,7 +1035,7 @@ object Similarity {
   def ivfTuning(embeddings: DataFrame, k: Int = 5): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val e = Ema.persistTracked(withVec(embeddings))
+    val e = Scope.persist(withVec(embeddings))
     val kCent = adaptiveK(e)
     // K rows, lazily checkpointed: one TakeOrdered pass for the two
     // consumers (assignment array + query probe)
@@ -1056,13 +1055,13 @@ object Similarity {
     // candidate frame tagged with the probe rank of its cell — persisted
     // once for its two consumers (per-nprobe counts and per-nprobe
     // top-k); |Q|·maxNp·cellsize bounded
-    val cand = Ema.persistTracked(
+    val cand = Scope.persist(
       assign.join(broadcast(qcells),
           col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("nn_id"), col("prk"),
           expr("cosine_sim(v, qv)").as("cos"))
         .filter(col("cos").isNotNull))
-    val brute = Ema.persistTracked(
+    val brute = Scope.persist(
       rankTopK(bruteCandidates(e, broadcast(defaultQueries(e))), k)
         .select(col("q_id"), col("nn_id")))
     val grid = IvfTuningGrid.map(_.toLong).toDF("nprobe")
@@ -1140,7 +1139,7 @@ object Similarity {
     * recall ≥ the entry-only LSH multiprobe top-k — spec-asserted,
     * with the measured lift vs IVF+PQ-refine reported. */
   def annGraph(embeddings: DataFrame, k: Int = 5): DataFrame = {
-    val e = Ema.persistTracked(withVec(embeddings))
+    val e = Scope.persist(withVec(embeddings))
     annGraphFrom(e, defaultQueries(e), k)
   }
 
@@ -1179,7 +1178,7 @@ object Similarity {
       .select(col("l.vec_id").as("src"), col("r.vec_id").as("dst"),
         expr("cosine_sim(l.v, r.v)").as("ecos"))
       .filter(col("ecos").isNotNull)
-    val edges = Ema.persistTracked(
+    val edges = Scope.persist(
       rawPairs.withColumn("rrk", row_number().over(wd))
         .filter(col("rrk") <= GraphDegree * LshTables)
         .withColumn("prev", lag(col("dst"), 1).over(wd))
@@ -1189,7 +1188,7 @@ object Similarity {
         .select(col("src"), col("dst")))
     // ---- search: multiprobe entries, then fixed-round beam expansion
     val wb = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("nn_id"))
-    var beam = Ema.persistTracked(
+    var beam = Scope.persist(
       lshCandidatePairsFor(e, q0, probed = true, broadcastQ = true)
         .withColumn("brk", row_number().over(wb))
         .filter(col("brk") <= GraphBeam)
@@ -1211,7 +1210,7 @@ object Similarity {
             .select(col("q_id"), col("dst").as("nn_id"))
             .filter(col("nn_id") =!= col("q_id")))
         .distinct()
-      beam = Ema.persistTracked(
+      beam = Scope.persist(
         cand
           .join(e.select(col("vec_id").as("nn_id"), col("v")), Seq("nn_id"))
           .join(broadcast(q0), Seq("q_id"))

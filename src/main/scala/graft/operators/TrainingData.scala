@@ -191,7 +191,7 @@ object TrainingData {
     // consumers); the small side keeps the win at every scale.
     val ng5 = Dedup.wordNgrams(docs.select(col("doc_id"), col("text")), 5)
     val sources = docs.select(col("doc_id"), col("source"))
-    val benchNg = Ema.persistTracked(
+    val benchNg = Scope.persist(
       ng5.join(sources.filter(col("source") === benchmarkSource), Seq("doc_id"))
         .select(col("ng")))
     // Size the filter FROM the benchmark side (one count over the small
@@ -504,7 +504,7 @@ object TrainingData {
     // (the dominant per-task cost) runs twice over the corpus. The
     // persisted rows are (doc_id, bool, bucket) — 17 bytes, far narrower
     // than the text they derive from.
-    val feats = Ema.persistTracked(docs
+    val feats = Scope.persist(docs
       .select(col("doc_id"), (col("lang") === "en").as("is_t"), lws.as("lw"))
       .filter(size(col("lw")) >= 2)
       .select(col("doc_id"), col("is_t"), explode(grams).as("g"))

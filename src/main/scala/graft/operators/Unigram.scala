@@ -66,7 +66,7 @@ object Unigram {
     * ordered by piece. */
   def unigramVocab(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val dw = Ema.persistTracked(words(docs))
+    val dw = Scope.persist(words(docs))
     val pos = dw.select(col("word"), col("freq"), col("wlen"),
       explode(expr("sequence(1L, wlen)")).as("p"))
     // protected base: every character appearing in any corpus word —
@@ -84,7 +84,7 @@ object Unigram {
       .groupBy(col("piece")).agg(sum(col("freq")).as("cnt"))
       .orderBy(col("cnt").desc, col("piece")).limit(SeedMultis)
       .select(col("piece"))
-    val charsP = Ema.persistTracked(chars)
+    val charsP = Scope.persist(chars)
     // truncateLazy: the rounds are gated by each round's broadcast
     // collect of the vocab (crossJoin(broadcast(varr))), which
     // materializes the marked frames — lazy truncation drops the

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Scope
+
 /** Structured Streaming pipelines mirroring the reference's streaming
   * path (Pub/Sub → transform → BigQuery; reference
   * src/ingestion/stocks_pipeline.py:56-87 publish,
@@ -213,12 +215,13 @@ object StreamPipelines {
   def dualSinkStream(events: DataFrame, outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     events.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          batch.write.mode("append").parquet(s"$outDir/raw")
-          graft.operators.Bars.ohlcv(batch).write.mode("append").parquet(s"$outDir/processed")
-        } finally batch.unpersist() // a failed sink write must not leak the cached batch across the restart
-        ()
+        // the scope releases the cached batch even when a sink write
+        // fails, so it does not leak across the restart
+        Scope {
+          val b = Scope.persist(batch)
+          b.write.mode("append").parquet(s"$outDir/raw")
+          graft.operators.Bars.ohlcv(b).write.mode("append").parquet(s"$outDir/processed")
+        }
       }
       .option("checkpointLocation", s"$outDir/ckpt")
       .start()
@@ -237,13 +240,14 @@ object StreamPipelines {
     * is the restart-survivable production shape. Readers see `batch_id`
     * as a discovered partition column. */
   def dualWriteBatch(batch: DataFrame, batchId: Long, outDir: String): Unit = {
-    batch.persist()
-    try {
-      batch.write.mode("overwrite").parquet(s"$outDir/raw/batch_id=$batchId")
-      graft.operators.Bars.ohlcv(batch).write.mode("overwrite")
+    // the scope releases the cached batch even when a sink write fails,
+    // so it does not leak across the replay
+    Scope {
+      val b = Scope.persist(batch)
+      b.write.mode("overwrite").parquet(s"$outDir/raw/batch_id=$batchId")
+      graft.operators.Bars.ohlcv(b).write.mode("overwrite")
         .parquet(s"$outDir/processed/batch_id=$batchId")
-    } finally batch.unpersist() // a failed sink write must not leak the cached batch across the replay
-    ()
+    }
   }
 
   /** [[dualSinkStream]] with exactly-once restart durability via

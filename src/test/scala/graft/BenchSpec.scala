@@ -8,6 +8,8 @@ import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan,
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.operators.Scope
+
 /** `Bench.run`, the benchmark's timed action, must execute the whole
   * plan a query declares: every window and the global output sort. A
   * `count()` lets Catalyst prune both, so it is the control that shows
@@ -29,7 +31,7 @@ class BenchSpec extends SparkSpec {
       PlanAudit.executedNodes(qe.executedPlan)
     }
     spark.listenerManager.register(listener)
-    try {
+    try Scope {
       val rsi = SparkEntry.queries("q_rsi")(spark, sf())
       val windows = rsi.queryExecution.analyzed.collectWithSubqueries { case w: Window => w }.size
       assert(windows > 0)
@@ -43,7 +45,6 @@ class BenchSpec extends SparkSpec {
       assert(!wholePlan(executed(rsi.count())))
     } finally {
       spark.listenerManager.unregister(listener)
-      graft.operators.Ema.unpersistAll()
       spark.catalog.clearCache()
     }
   }

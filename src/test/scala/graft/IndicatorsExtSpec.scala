@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bars, IndicatorsExt, Temporal}
+import graft.operators.{Bars, IndicatorsExt, Scope, Temporal}
 
 /** Semantic contracts for the second-wave indicators (IndicatorsExt) and
   * the temporal warehouse ops (Temporal) — planted fixtures with known
@@ -97,7 +97,7 @@ class IndicatorsExtSpec extends SparkSpec {
 
   test("keltner midline equals the sequential EMA20 of typical price; bands bracket it") {
     val bars = walkBars(120)
-    try {
+    try Scope {
       val rows = bars.orderBy("bar_ts").collect()
         .map(r => (r.getDouble(3), r.getDouble(4), r.getDouble(5)))
       val tp = rows.map { case (h, l, c) => (h + l + c) / 3.0 }
@@ -113,12 +113,12 @@ class IndicatorsExtSpec extends SparkSpec {
           assert(out(i).getDouble(5) <= out(i).getDouble(3)) // lower ≤ mid
         }
       }
-    } finally { graft.operators.Ema.unpersistAll(); spark.catalog.clearCache() }
+    } finally spark.catalog.clearCache()
   }
 
   test("heikin-ashi equals the naive sequential recursion") {
     val bars = walkBars(90)
-    try {
+    try Scope {
       val rows = bars.orderBy("bar_ts").collect()
         .map(r => (r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5)))
       val hc = rows.map { case (o, h, l, c) => (o + h + l + c) / 4.0 }
@@ -132,7 +132,7 @@ class IndicatorsExtSpec extends SparkSpec {
         assert(out(i).getDouble(3) + 1e-9 >= math.max(out(i).getDouble(2), out(i).getDouble(5)))
         assert(out(i).getDouble(4) - 1e-9 <= math.min(out(i).getDouble(2), out(i).getDouble(5)))
       }
-    } finally { graft.operators.Ema.unpersistAll(); spark.catalog.clearCache() }
+    } finally spark.catalog.clearCache()
   }
 
   private def events(rows: Seq[(Long, Int, String, String, Double)]): DataFrame = {

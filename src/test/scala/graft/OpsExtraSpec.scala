@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
-import graft.operators.{AsofJoin, Bars, Market, Relational, Skew, TextAnalysis}
+import graft.operators.{AsofJoin, Bars, Market, Relational, Scope, Skew, TextAnalysis}
 import graft.sources.Sinks
 
 class OpsExtraSpec extends SparkSpec {
@@ -363,23 +363,22 @@ class OpsExtraSpec extends SparkSpec {
     assert(out.count() === ev.filter(col("ts") >= cutoff).count())
   }
 
-  test("Ema.unpersistAll releases every segmented-scan cache entry") {
-    import graft.operators.{Ema, Relational}
-    Ema.unpersistAll()
+  test("closing a Scope releases every intermediate its query persisted") {
+    import graft.operators.Relational
     spark.catalog.clearCache()
     assert(spark.sharedState.cacheManager.isEmpty)
     val events = Tables.events(spark, sf())
-    // q_rfm persists its per-user stats through Ema.persistTracked (the
-    // EMA folds themselves persist nothing)
-    val first = Relational.rfmSegments(events).collect()
-    assert(!spark.sharedState.cacheManager.isEmpty,
-      "rfmSegments should persist its intermediates while in use")
-    Ema.unpersistAll()
+    // q_rfm persists its per-user stats through Scope.persist
+    val first = Scope {
+      val rows = Relational.rfmSegments(events).collect()
+      assert(!spark.sharedState.cacheManager.isEmpty,
+        "rfmSegments should persist its intermediates while in use")
+      rows
+    }
     assert(spark.sharedState.cacheManager.isEmpty,
-      "unpersistAll must drain the registry")
+      "closing the scope must release its intermediates")
     // a released query still recomputes correctly
-    assert(Relational.rfmSegments(events).collect().map(_.toSeq) === first.map(_.toSeq))
-    Ema.unpersistAll()
+    assert(Scope(Relational.rfmSegments(events).collect()).map(_.toSeq) === first.map(_.toSeq))
   }
 
   test("vec_mean6 native aggregate equals per-dim round(avg, 6)") {
@@ -537,34 +536,35 @@ class OpsExtraSpec extends SparkSpec {
   }
 
   test("operators tolerate empty inputs (no crash, empty output)") {
-    import spark.implicits._
-    import graft.operators._
-    val bars0 = Seq.empty[(String, Timestamp, Double, Double, Double, Double, Long, Double)]
-      .toDF("symbol", "bar_ts", "open", "high", "low", "close", "volume", "vsum")
-    val docs0 = Seq.empty[(Long, String, String, String, Long)]
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val emb0 = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
-    val ev0 = Seq.empty[(Long, Timestamp, Long, String, Double, String)]
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val outputs = Seq(
-      Indicators.sma(bars0), Indicators.mfi(bars0), Indicators.donchian(bars0),
-      Indicators.candlePatterns(bars0), Indicators.pivotPoints(bars0),
-      Indicators.iqrOutliers(bars0), Indicators.drawdown(bars0),
-      Ema.macd(bars0),
-      Dedup.exactDocs(docs0), Dedup.minhashLshPairs(docs0),
-      Dedup.dedupClusters(docs0), Dedup.segDedup(docs0),
-      TextAnalysis.quality(docs0), TextAnalysis.invertedIndex(docs0),
-      TextAnalysis.keywordSearch(docs0), TextAnalysis.stratifiedSample(docs0),
-      TrainingData.temperatureMix(docs0), TrainingData.packEfficiency(docs0),
-      TrainingData.docChunk(docs0), TrainingData.decontaminate(docs0),
-      Similarity.embedQuantize(emb0), Similarity.pqCodes(emb0),
-      Similarity.annPq(emb0), Similarity.annBruteforce(emb0),
-      Relational.attribution(ev0),
-      Relational.sessionize(ev0), Relational.cohortRetention(ev0))
-    outputs.foreach { df => assert(df.count() === 0L) }
-    // profileEvents is the one fixed-shape report: 6 metadata rows
-    assert(Relational.profileEvents(ev0).count() === 6L)
-    Ema.unpersistAll()
+    Scope {
+      import spark.implicits._
+      import graft.operators._
+      val bars0 = Seq.empty[(String, Timestamp, Double, Double, Double, Double, Long, Double)]
+        .toDF("symbol", "bar_ts", "open", "high", "low", "close", "volume", "vsum")
+      val docs0 = Seq.empty[(Long, String, String, String, Long)]
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+      val emb0 = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+      val ev0 = Seq.empty[(Long, Timestamp, Long, String, Double, String)]
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      val outputs = Seq(
+        Indicators.sma(bars0), Indicators.mfi(bars0), Indicators.donchian(bars0),
+        Indicators.candlePatterns(bars0), Indicators.pivotPoints(bars0),
+        Indicators.iqrOutliers(bars0), Indicators.drawdown(bars0),
+        Ema.macd(bars0),
+        Dedup.exactDocs(docs0), Dedup.minhashLshPairs(docs0),
+        Dedup.dedupClusters(docs0), Dedup.segDedup(docs0),
+        TextAnalysis.quality(docs0), TextAnalysis.invertedIndex(docs0),
+        TextAnalysis.keywordSearch(docs0), TextAnalysis.stratifiedSample(docs0),
+        TrainingData.temperatureMix(docs0), TrainingData.packEfficiency(docs0),
+        TrainingData.docChunk(docs0), TrainingData.decontaminate(docs0),
+        Similarity.embedQuantize(emb0), Similarity.pqCodes(emb0),
+        Similarity.annPq(emb0), Similarity.annBruteforce(emb0),
+        Relational.attribution(ev0),
+        Relational.sessionize(ev0), Relational.cohortRetention(ev0))
+      outputs.foreach { df => assert(df.count() === 0L) }
+      // profileEvents is the one fixed-shape report: 6 metadata rows
+      assert(Relational.profileEvents(ev0).count() === 6L)
+    }
   }
 
   test("tokenize: hand-checked greedy longest-match, UNK, and empty text") {

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.ApproximatePercentile
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+
+import graft.operators.Scope
+
 /** Gates the scale contract that no query plan contains a window
   * operator with an empty partitionSpec — each such operator funnels
   * the whole input through ONE task (the "No Partition Defined for
@@ -151,16 +156,13 @@ class PlanShapeSpec extends SparkSpec {
 
   for (name <- watched) test(s"$name plan has zero unpartitioned windows and zero quadratic frames") {
     val fn = SparkEntry.queries(name)
-    try {
+    try Scope {
       val df = fn(spark, sf())
       val nodes = PlanAudit.executedNodes(df.queryExecution.executedPlan)
       assert(nodes.size > 1)
       assert(PlanAudit.globalWindows(nodes) === 0)
       assert(PlanAudit.quadraticFrames(nodes) === 0)
-    } finally {
-      graft.operators.Ema.unpersistAll()
-      spark.catalog.clearCache()
-    }
+    } finally spark.catalog.clearCache()
   }
 
   // Exchange-count regression gates. Every bound is the query's
@@ -170,7 +172,7 @@ class PlanShapeSpec extends SparkSpec {
   // shape) or a collapsed exchange reuse trips these.
   // q_ann_graph (r13, judge item): the graph BUILD's capped pair join +
   // bounded-degree rank and the beam rounds plan 11 exchanges with the
-  // edge list persisted ONCE (Ema.persistTracked) — the bound trips if
+  // edge list persisted ONCE (Scope.persist) — the bound trips if
   // a future edit drops the cache and the kNN edge derivation re-plans
   // per expansion round (~+4 exchanges per round).
   private def exchangeGate(name: String, bound: Int, shape: String): Unit =
@@ -179,7 +181,7 @@ class PlanShapeSpec extends SparkSpec {
       // the plan PLANS.md audits: AQE off, so exchange reuse has run
       val aqe = "spark.sql.adaptive.enabled"
       val saved = spark.conf.getOption(aqe)
-      try {
+      try Scope {
         spark.conf.set(aqe, "false")
         val df = fn(spark, sf())
         val exchanges = PlanAudit.shuffles(
@@ -189,7 +191,6 @@ class PlanShapeSpec extends SparkSpec {
             " or its exchange reuse has regressed")
       } finally {
         saved.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
-        graft.operators.Ema.unpersistAll()
         spark.catalog.clearCache()
       }
     }
@@ -228,4 +229,20 @@ class PlanShapeSpec extends SparkSpec {
   for ((name, bound) <- Seq("q_ann_ivfpq" -> 4, "q_ann_ivfpq_res" -> 5,
       "q_ann_pq_t" -> 4, "q_semdedup" -> 2))
     exchangeGate(name, bound, "fused nearest-cell assignment")
+
+  // q_profile_approx's exact distinct count is its own aggregate: beside
+  // the sketches it triggers the single-distinct rewrite, which runs the
+  // partial percentile_approx per (event_type, user_id) group — one
+  // 10,000-accuracy sketch per user, 5.3 s at sf0.1 for a 5-row result.
+  test("q_profile_approx never aggregates percentile_approx under a user_id key") {
+    val df = SparkEntry.queries("q_profile_approx")(spark, sf())
+    val keys = PlanAudit.executedNodes(df.queryExecution.executedPlan).collect {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(
+          _.aggregateFunction.isInstanceOf[ApproximatePercentile]) =>
+        a.groupingExpressions.flatMap(_.references.map(_.name))
+    }
+    assert(keys.nonEmpty, "no percentile_approx aggregate planned")
+    assert(!keys.exists(_.contains("user_id")),
+      s"percentile_approx aggregated under keys ${keys.mkString("; ")}")
+  }
 }

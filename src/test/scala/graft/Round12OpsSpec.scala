@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bars, Bpe, Dedup, Ema, TrainingData}
+import graft.operators.{Bars, Bpe, Dedup, Ema, Scope, TrainingData}
 
 /** Round-12 specs: the per-symbol fold's per-row state copy under an
   * in-place-mutating step, and kernel-builder argument guards. */
@@ -11,43 +11,44 @@ class Round12OpsSpec extends SparkSpec {
   private def bars001 = Bars.ohlcv(Tables.events(spark, sf()))
 
   test("affineScan: an in-place-mutating step still yields per-row values") {
-    import spark.implicits._
-    val bars = bars001
-    // Ema.fold emits a fresh copy of the state for every row. This spec
-    // PLANTS a step that mutates its input in place (the worst case the
-    // fold contract allows) — if the per-row copy were ever dropped,
-    // every row of a symbol would carry the symbol's FINAL state and
-    // the per-row assertions below fail loudly.
-    val scanned = Ema.fold(bars, Seq("close"), Seq("level", "trend"))(
-      init = x => Array(x(0), 0.0),
-      step = (e, x) => {
-        val l1 = 0.3 * x(0) + 0.7 * (e(0) + e(1))
-        val b1 = 0.2 * (l1 - e(0)) + 0.8 * e(1)
-        e(0) = l1; e(1) = b1
-        e // same array instance — deliberate in-place mutation
-      })
-    val got = scanned.select("symbol", "bar_ts", "level", "trend")
-      .as[(String, java.sql.Timestamp, Double, Double)]
-      .collect().groupBy(_._1)
-    assert(got.nonEmpty)
-    val closes = bars.select("symbol", "bar_ts", "close")
-      .as[(String, java.sql.Timestamp, Double)].collect().groupBy(_._1)
-    closes.foreach { case (sym, rows) =>
-      val sorted = rows.sortBy(_._2.getTime)
-      val gotRows = got(sym).sortBy(_._2.getTime)
-      var l = 0.0; var b = 0.0
-      sorted.zipWithIndex.foreach { case (r, i) =>
-        if (i == 0) { l = r._3; b = 0.0 }
-        else {
-          val l1 = 0.3 * r._3 + 0.7 * (l + b)
-          b = 0.2 * (l1 - l) + 0.8 * b; l = l1
+    Scope {
+      import spark.implicits._
+      val bars = bars001
+      // Ema.fold emits a fresh copy of the state for every row. This spec
+      // PLANTS a step that mutates its input in place (the worst case the
+      // fold contract allows) — if the per-row copy were ever dropped,
+      // every row of a symbol would carry the symbol's FINAL state and
+      // the per-row assertions below fail loudly.
+      val scanned = Ema.fold(bars, Seq("close"), Seq("level", "trend"))(
+        init = x => Array(x(0), 0.0),
+        step = (e, x) => {
+          val l1 = 0.3 * x(0) + 0.7 * (e(0) + e(1))
+          val b1 = 0.2 * (l1 - e(0)) + 0.8 * e(1)
+          e(0) = l1; e(1) = b1
+          e // same array instance — deliberate in-place mutation
+        })
+      val got = scanned.select("symbol", "bar_ts", "level", "trend")
+        .as[(String, java.sql.Timestamp, Double, Double)]
+        .collect().groupBy(_._1)
+      assert(got.nonEmpty)
+      val closes = bars.select("symbol", "bar_ts", "close")
+        .as[(String, java.sql.Timestamp, Double)].collect().groupBy(_._1)
+      closes.foreach { case (sym, rows) =>
+        val sorted = rows.sortBy(_._2.getTime)
+        val gotRows = got(sym).sortBy(_._2.getTime)
+        var l = 0.0; var b = 0.0
+        sorted.zipWithIndex.foreach { case (r, i) =>
+          if (i == 0) { l = r._3; b = 0.0 }
+          else {
+            val l1 = 0.3 * r._3 + 0.7 * (l + b)
+            b = 0.2 * (l1 - l) + 0.8 * b; l = l1
+          }
+          assert(math.abs(gotRows(i)._3 - l) < 1e-9,
+            s"$sym level row $i — per-row state was overwritten by a later mutation")
+          assert(math.abs(gotRows(i)._4 - b) < 1e-9, s"$sym trend row $i")
         }
-        assert(math.abs(gotRows(i)._3 - l) < 1e-9,
-          s"$sym level row $i — per-row state was overwritten by a later mutation")
-        assert(math.abs(gotRows(i)._4 - b) < 1e-9, s"$sym trend row $i")
       }
     }
-    Ema.unpersistAll()
   }
 
   test("SQL-text EXISTS/IN decorrelate to semi joins — no per-row subquery survives") {

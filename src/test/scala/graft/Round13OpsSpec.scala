@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Ema, SqlSurface}
+import graft.operators.{Scope, SqlSurface}
 
 /** Round-13 surfaces: SQL-text set ops / scalar subquery / grouping
   * sets (S8-S10) and the media-corpus ASCII invariant the q_audio_energy
@@ -62,105 +62,111 @@ class Round13OpsSpec extends SparkSpec {
   }
 
   test("SQL-text GROUPING SETS matches the DataFrame twin bit-for-bit") {
-    val df = SqlSurface.groupingSetsSql(spark, sf())
-    // one Expand feeding one aggregate — the same physical shape the
-    // DataFrame groupingSets call plans; a per-set union re-scan would
-    // read the corpus three times
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("Expand"), s"no Expand in:\n$plan")
-    val twin = graft.operators.Relational.groupingSetsQty(
-      Tables.table(spark, sf(), "lineitem"))
-    assert(df.exceptAll(twin).isEmpty && twin.exceptAll(df).isEmpty,
-      "q_sql_groupingsets disagrees with q_grouping_sets")
-    Ema.unpersistAll(); spark.catalog.clearCache()
+    Scope {
+      val df = SqlSurface.groupingSetsSql(spark, sf())
+      // one Expand feeding one aggregate — the same physical shape the
+      // DataFrame groupingSets call plans; a per-set union re-scan would
+      // read the corpus three times
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("Expand"), s"no Expand in:\n$plan")
+      val twin = graft.operators.Relational.groupingSetsQty(
+        Tables.table(spark, sf(), "lineitem"))
+      assert(df.exceptAll(twin).isEmpty && twin.exceptAll(df).isEmpty,
+        "q_sql_groupingsets disagrees with q_grouping_sets")
+    }
+    spark.catalog.clearCache()
   }
 
   test("ivfChooseNprobe wires the tuning argmax into annIvf and beats fixed nprobe=6 on recall-per-candidate") {
-    import graft.operators.Similarity
-    val emb = Tables.embeddings(spark, sf())
-    val report = Similarity.ivfTuning(emb).collect()
-      .map(r => r.getAs[Long]("nprobe") ->
-        (r.getAs[Long]("eff_ppm"), r.getAs[Long]("recall_ppm"),
-          r.getAs[Boolean]("chosen"))).toMap
-    // the driver twin returns exactly the gated query's chosen row
-    val chosen = Similarity.ivfChooseNprobe(emb)
-    assert(report(chosen.toLong)._3, s"ivfChooseNprobe=$chosen is not the chosen row")
-    // the contract: the chosen probe budget is at least as
-    // recall-efficient per candidate as the fixed default nprobe=6
-    assert(report(chosen.toLong)._1 >= report(6L)._1,
-      s"chosen nprobe=$chosen eff=${report(chosen.toLong)._1} " +
-        s"does not beat fixed 6 eff=${report(6L)._1}")
-    // recall must be monotone in nprobe (candidate sets are nested)
-    val byNp = report.toSeq.sortBy(_._1).map(_._2._2)
-    assert(byNp === byNp.sorted, "recall_ppm not monotone in nprobe")
-    // and the wired probe path accepts the chosen point
-    val probed = Similarity.annIvf(emb, k = 3, nprobe = chosen)
-    assert(probed.count() > 0)
-    // a larger probe budget can only widen each query's candidate cell
-    // set, so the nprobe=12 result must contain every nprobe=chosen
-    // top-1 hit's quality or better: top-1 cos at 12 >= top-1 cos at chosen
-    val t1 = Similarity.annIvf(emb, k = 1, nprobe = chosen)
-      .select(col("q_id"), col("cos")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val t12 = Similarity.annIvf(emb, k = 1, nprobe = 12)
-      .select(col("q_id"), col("cos")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    t1.foreach { case (q, c) =>
-      assert(t12(q) >= c - 1e-9, s"query $q: wider probe budget lost recall") }
-    Ema.unpersistAll(); spark.catalog.clearCache()
+    Scope {
+      import graft.operators.Similarity
+      val emb = Tables.embeddings(spark, sf())
+      val report = Similarity.ivfTuning(emb).collect()
+        .map(r => r.getAs[Long]("nprobe") ->
+          (r.getAs[Long]("eff_ppm"), r.getAs[Long]("recall_ppm"),
+            r.getAs[Boolean]("chosen"))).toMap
+      // the driver twin returns exactly the gated query's chosen row
+      val chosen = Similarity.ivfChooseNprobe(emb)
+      assert(report(chosen.toLong)._3, s"ivfChooseNprobe=$chosen is not the chosen row")
+      // the contract: the chosen probe budget is at least as
+      // recall-efficient per candidate as the fixed default nprobe=6
+      assert(report(chosen.toLong)._1 >= report(6L)._1,
+        s"chosen nprobe=$chosen eff=${report(chosen.toLong)._1} " +
+          s"does not beat fixed 6 eff=${report(6L)._1}")
+      // recall must be monotone in nprobe (candidate sets are nested)
+      val byNp = report.toSeq.sortBy(_._1).map(_._2._2)
+      assert(byNp === byNp.sorted, "recall_ppm not monotone in nprobe")
+      // and the wired probe path accepts the chosen point
+      val probed = Similarity.annIvf(emb, k = 3, nprobe = chosen)
+      assert(probed.count() > 0)
+      // a larger probe budget can only widen each query's candidate cell
+      // set, so the nprobe=12 result must contain every nprobe=chosen
+      // top-1 hit's quality or better: top-1 cos at 12 >= top-1 cos at chosen
+      val t1 = Similarity.annIvf(emb, k = 1, nprobe = chosen)
+        .select(col("q_id"), col("cos")).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val t12 = Similarity.annIvf(emb, k = 1, nprobe = 12)
+        .select(col("q_id"), col("cos")).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      t1.foreach { case (q, c) =>
+        assert(t12(q) >= c - 1e-9, s"query $q: wider probe budget lost recall") }
+    }
+    spark.catalog.clearCache()
   }
 
   test("unigram vocab: protected singles, exact char-mass conservation, learned-vocab round-trip") {
-    import graft.operators.Unigram
-    val docs = Tables.documents(spark, sf())
-    val out = Unigram.unigramVocab(docs).collect()
-    val singles = out.filter(_.getAs[Boolean]("is_single"))
-    val multis = out.filterNot(_.getAs[Boolean]("is_single"))
-    // budget honored and the single-char base never pruned
-    assert(multis.length <= Unigram.Budgets.last,
-      s"${multis.length} multi-char pieces exceed the final budget")
-    // every corpus character survives as a single (coverage guarantee)
-    val corpusChars = docs.select(
-        explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("w"))
-      .select(explode(expr("split(w, '')")).as("c"))
-      .filter(length(col("c")) === 1).distinct()
-      .collect().map(_.getString(0)).toSet
-    assert(corpusChars.subsetOf(singles.map(_.getString(0)).toSet),
-      "a corpus character was pruned from the vocabulary")
-    // char-mass conservation: the final greedy segmentation covers every
-    // character of every word exactly once, so Σ usage·len(piece) must
-    // equal the exact corpus word-character mass
-    val massFromVocab = out.map(r =>
-      r.getAs[Long]("usage") * r.getAs[Long]("n_chars")).sum
-    val corpusMass = docs.select(
-        explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("w"))
-      .agg(sum(length(col("w")).cast("long"))).head.getLong(0)
-    assert(massFromVocab === corpusMass,
-      s"segmentation char mass $massFromVocab != corpus mass $corpusMass")
-    // round-trip: re-segmenting the corpus words with the LEARNED vocab
-    // (the consumer API) reproduces the gated usage counts exactly
-    val vocabSeq = out.map(_.getString(0)).toSeq
-    val words = docs.select(
-        explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-    val segmented = Unigram.segmentWith(words.select("word"), vocabSeq)
-      .join(words, Seq("word"))
-    val rederived = segmented
-      .select(col("freq"), explode(col("tokens")).as("piece"))
-      .groupBy("piece").agg(sum(col("freq")).as("usage"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    out.foreach { r =>
-      val got = rederived.getOrElse(r.getString(0), 0L)
-      assert(got === r.getAs[Long]("usage"),
-        s"piece ${r.getString(0)}: round-trip usage $got != gated ${r.getAs[Long]("usage")}")
+    Scope {
+      import graft.operators.Unigram
+      val docs = Tables.documents(spark, sf())
+      val out = Unigram.unigramVocab(docs).collect()
+      val singles = out.filter(_.getAs[Boolean]("is_single"))
+      val multis = out.filterNot(_.getAs[Boolean]("is_single"))
+      // budget honored and the single-char base never pruned
+      assert(multis.length <= Unigram.Budgets.last,
+        s"${multis.length} multi-char pieces exceed the final budget")
+      // every corpus character survives as a single (coverage guarantee)
+      val corpusChars = docs.select(
+          explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("w"))
+        .select(explode(expr("split(w, '')")).as("c"))
+        .filter(length(col("c")) === 1).distinct()
+        .collect().map(_.getString(0)).toSet
+      assert(corpusChars.subsetOf(singles.map(_.getString(0)).toSet),
+        "a corpus character was pruned from the vocabulary")
+      // char-mass conservation: the final greedy segmentation covers every
+      // character of every word exactly once, so Σ usage·len(piece) must
+      // equal the exact corpus word-character mass
+      val massFromVocab = out.map(r =>
+        r.getAs[Long]("usage") * r.getAs[Long]("n_chars")).sum
+      val corpusMass = docs.select(
+          explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("w"))
+        .agg(sum(length(col("w")).cast("long"))).head.getLong(0)
+      assert(massFromVocab === corpusMass,
+        s"segmentation char mass $massFromVocab != corpus mass $corpusMass")
+      // round-trip: re-segmenting the corpus words with the LEARNED vocab
+      // (the consumer API) reproduces the gated usage counts exactly
+      val vocabSeq = out.map(_.getString(0)).toSeq
+      val words = docs.select(
+          explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("freq"))
+      val segmented = Unigram.segmentWith(words.select("word"), vocabSeq)
+        .join(words, Seq("word"))
+      val rederived = segmented
+        .select(col("freq"), explode(col("tokens")).as("piece"))
+        .groupBy("piece").agg(sum(col("freq")).as("usage"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      out.foreach { r =>
+        val got = rederived.getOrElse(r.getString(0), 0L)
+        assert(got === r.getAs[Long]("usage"),
+          s"piece ${r.getString(0)}: round-trip usage $got != gated ${r.getAs[Long]("usage")}")
+      }
+      // the learned vocab must compress: fewer tokens than the all-singles
+      // baseline (the whole point of induction)
+      val nTokLearned = segmented
+        .agg(sum(col("n_tokens") * col("freq"))).head.getLong(0)
+      assert(nTokLearned < corpusMass,
+        s"learned vocab does not compress: $nTokLearned tokens vs $corpusMass chars")
     }
-    // the learned vocab must compress: fewer tokens than the all-singles
-    // baseline (the whole point of induction)
-    val nTokLearned = segmented
-      .agg(sum(col("n_tokens") * col("freq"))).head.getLong(0)
-    assert(nTokLearned < corpusMass,
-      s"learned vocab does not compress: $nTokLearned tokens vs $corpusMass chars")
-    Ema.unpersistAll(); spark.catalog.clearCache()
+    spark.catalog.clearCache()
   }
 
   test("greedy_seg kernel: longest match wins, uncovered positions fall back to chars") {
@@ -179,96 +185,98 @@ class Round13OpsSpec extends SparkSpec {
   }
 
   test("layout loop closes on real files: parquet footer envelopes reproduce the prune simulation") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import graft.operators.{Layout, Ema}
-    val part = Tables.table(spark, sf(), "part")
-    val tmp = java.nio.file.Files.createTempDirectory("layoutloop").toString
-    val conf = spark.sessionState.newHadoopConf()
+    Scope {
+      import scala.jdk.CollectionConverters._
+      import org.apache.hadoop.fs.Path
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      import graft.operators.Layout
+      val part = Tables.table(spark, sf(), "part")
+      val tmp = java.nio.file.Files.createTempDirectory("layoutloop").toString
+      val conf = spark.sessionState.newHadoopConf()
 
-    /** Real footer stats per file under `glob`: (fileTag, n_rows,
-      * (sz_lo, sz_hi), (pr_lo, pr_hi)) — read from the parquet footers
-      * themselves, NOT recomputed from data. */
-    def footers(glob: String, tag: Path => String): Seq[(String, Long, (Long, Long), (Long, Long))] = {
-      val fs = new Path(tmp).getFileSystem(conf)
-      fs.globStatus(new Path(glob)).toSeq.map { st =>
-        val rdr = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
-        try {
-          val blocks = rdr.getFooter.getBlocks.asScala.toSeq
-          def mm(name: String): (Long, Long) = {
-            val s = blocks.map { b =>
-              val c = b.getColumns.asScala
-                .find(_.getPath.toDotString == name)
-                .getOrElse(fail(s"column $name missing from footer"))
-              val stt = c.getStatistics
-              (stt.genericGetMin.asInstanceOf[java.lang.Long].longValue(),
-                stt.genericGetMax.asInstanceOf[java.lang.Long].longValue())
+      /** Real footer stats per file under `glob`: (fileTag, n_rows,
+        * (sz_lo, sz_hi), (pr_lo, pr_hi)) — read from the parquet footers
+        * themselves, NOT recomputed from data. */
+      def footers(glob: String, tag: Path => String): Seq[(String, Long, (Long, Long), (Long, Long))] = {
+        val fs = new Path(tmp).getFileSystem(conf)
+        fs.globStatus(new Path(glob)).toSeq.map { st =>
+          val rdr = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
+          try {
+            val blocks = rdr.getFooter.getBlocks.asScala.toSeq
+            def mm(name: String): (Long, Long) = {
+              val s = blocks.map { b =>
+                val c = b.getColumns.asScala
+                  .find(_.getPath.toDotString == name)
+                  .getOrElse(fail(s"column $name missing from footer"))
+                val stt = c.getStatistics
+                (stt.genericGetMin.asInstanceOf[java.lang.Long].longValue(),
+                  stt.genericGetMax.asInstanceOf[java.lang.Long].longValue())
+              }
+              (s.map(_._1).min, s.map(_._2).max)
             }
-            (s.map(_._1).min, s.map(_._2).max)
-          }
-          (tag(st.getPath), blocks.map(_.getRowCount).sum, mm("sz"), mm("pr"))
-        } finally rdr.close()
+            (tag(st.getPath), blocks.map(_.getRowCount).sum, mm("sz"), mm("pr"))
+          } finally rdr.close()
+        }
       }
-    }
-    def verdict(lo: Long, hi: Long, predLo: Long, predHi: Long): String =
-      if (hi < predLo || lo > predHi) "pruned"
-      else if (lo >= predLo && hi <= predHi) "full" else "scan"
+      def verdict(lo: Long, hi: Long, predLo: Long, predHi: Long): String =
+        if (hi < predLo || lo > predHi) "pruned"
+        else if (lo >= predLo && hi <= predHi) "full" else "scan"
 
-    // ---- exact loop: one real parquet file per Z-cell, so the gated
-    // simulation's "treat each cell as a file" premise becomes literal
-    val zf = Layout.zorderFrame(part).select(col("sz"), col("pr"), col("cell"))
-    zf.repartition(col("cell")).write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$tmp/zcells")
-    val perFile = footers(s"$tmp/zcells/cell=*/part-*.parquet",
-      _.getParent.getName.stripPrefix("cell="))
-    // one file per cell (the premise itself)
-    assert(perFile.map(_._1).distinct.size === perFile.size,
-      "a Z-cell split across multiple files")
-    // real verdicts from REAL footer stats, classified with the gated
-    // query's predicates (size 10..20, price tenths 12000..14000)
-    val realCounts = perFile
-      .flatMap { case (_, n, (szLo, szHi), (prLo, prHi)) =>
-        Seq(("size", verdict(szLo, szHi, 10, 20), n),
-          ("price", verdict(prLo, prHi, 12000, 14000), n)) }
-      .groupBy(t => (t._1, t._2))
-      .map { case (k, v) => k -> (v.size.toLong, v.map(_._3).sum) }
-    val sim = Layout.pruneSimulation(part).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        (r.getAs[Long]("n_cells"), r.getAs[Long]("n_rows"))).toMap
-    assert(realCounts === sim,
-      s"real-file prune verdicts diverge from the simulation:\nreal=$realCounts\nsim=$sim")
+      // ---- exact loop: one real parquet file per Z-cell, so the gated
+      // simulation's "treat each cell as a file" premise becomes literal
+      val zf = Layout.zorderFrame(part).select(col("sz"), col("pr"), col("cell"))
+      zf.repartition(col("cell")).write.mode("overwrite")
+        .partitionBy("cell").parquet(s"$tmp/zcells")
+      val perFile = footers(s"$tmp/zcells/cell=*/part-*.parquet",
+        _.getParent.getName.stripPrefix("cell="))
+      // one file per cell (the premise itself)
+      assert(perFile.map(_._1).distinct.size === perFile.size,
+        "a Z-cell split across multiple files")
+      // real verdicts from REAL footer stats, classified with the gated
+      // query's predicates (size 10..20, price tenths 12000..14000)
+      val realCounts = perFile
+        .flatMap { case (_, n, (szLo, szHi), (prLo, prHi)) =>
+          Seq(("size", verdict(szLo, szHi, 10, 20), n),
+            ("price", verdict(prLo, prHi, 12000, 14000), n)) }
+        .groupBy(t => (t._1, t._2))
+        .map { case (k, v) => k -> (v.size.toLong, v.map(_._3).sum) }
+      val sim = Layout.pruneSimulation(part).collect()
+        .map(r => (r.getString(0), r.getString(1)) ->
+          (r.getAs[Long]("n_cells"), r.getAs[Long]("n_rows"))).toMap
+      assert(realCounts === sim,
+        s"real-file prune verdicts diverge from the simulation:\nreal=$realCounts\nsim=$sim")
 
-    // ---- production API: range-clustered writeClustered on zval/hval;
-    // footer envelopes must prune files on BOTH raw dimensions (the
-    // multi-dim-layout claim), and a single-axis sz sort must prune
-    // NOTHING on the price dimension. The gated query's price window
-    // (1200.0..1400.0) lies entirely outside this corpus's 900.0..919.9
-    // price range (every file prunes — degenerate), so the production
-    // half uses an IN-RANGE window, price tenths 9050..9100, where
-    // pruning is earned by clustering rather than by the data's edges.
-    def prunedCounts(sub: String, frame: org.apache.spark.sql.DataFrame,
-        order: String): (Int, Int, Int) = {
-      graft.sources.Sinks.writeClustered(
-        frame.select(col("sz"), col("pr"), col(order)), s"$tmp/$sub", 32, order)
-      val fls = footers(s"$tmp/$sub/part-*.parquet", _.getName)
-      val ps = fls.count { case (_, _, (lo, hi), _) => verdict(lo, hi, 10, 20) == "pruned" }
-      val pp = fls.count { case (_, _, _, (lo, hi)) => verdict(lo, hi, 9050, 9100) == "pruned" }
-      (fls.size, ps, pp)
+      // ---- production API: range-clustered writeClustered on zval/hval;
+      // footer envelopes must prune files on BOTH raw dimensions (the
+      // multi-dim-layout claim), and a single-axis sz sort must prune
+      // NOTHING on the price dimension. The gated query's price window
+      // (1200.0..1400.0) lies entirely outside this corpus's 900.0..919.9
+      // price range (every file prunes — degenerate), so the production
+      // half uses an IN-RANGE window, price tenths 9050..9100, where
+      // pruning is earned by clustering rather than by the data's edges.
+      def prunedCounts(sub: String, frame: org.apache.spark.sql.DataFrame,
+          order: String): (Int, Int, Int) = {
+        graft.sources.Sinks.writeClustered(
+          frame.select(col("sz"), col("pr"), col(order)), s"$tmp/$sub", 32, order)
+        val fls = footers(s"$tmp/$sub/part-*.parquet", _.getName)
+        val ps = fls.count { case (_, _, (lo, hi), _) => verdict(lo, hi, 10, 20) == "pruned" }
+        val pp = fls.count { case (_, _, _, (lo, hi)) => verdict(lo, hi, 9050, 9100) == "pruned" }
+        (fls.size, ps, pp)
+      }
+      val (nz, zSize, zPrice) = prunedCounts("zv", Layout.zorderFrame(part), "zval")
+      val (nh, hSize, hPrice) = prunedCounts("hil", Layout.hilbertFrame(part), "hval")
+      val (no, oSize, oPrice) = prunedCounts("szsort",
+        Layout.zorderFrame(part).withColumn("szo", col("sz")), "szo")
+      info(s"real pruned-file counts of 32: zval size=$zSize price=$zPrice; " +
+        s"hval size=$hSize price=$hPrice; sz-sort size=$oSize price=$oPrice")
+      assert(zSize > 0 && zPrice > 0, s"Z layout fails to prune both dims ($zSize, $zPrice)")
+      assert(hSize > 0 && hPrice > 0, s"Hilbert layout fails to prune both dims ($hSize, $hPrice)")
+      assert(zPrice > oPrice,
+        s"Z layout does not beat the single-axis size sort on price pruning ($zPrice <= $oPrice)")
+      assert(nz === 32 && nh === 32 && no === 32)
     }
-    val (nz, zSize, zPrice) = prunedCounts("zv", Layout.zorderFrame(part), "zval")
-    val (nh, hSize, hPrice) = prunedCounts("hil", Layout.hilbertFrame(part), "hval")
-    val (no, oSize, oPrice) = prunedCounts("szsort",
-      Layout.zorderFrame(part).withColumn("szo", col("sz")), "szo")
-    info(s"real pruned-file counts of 32: zval size=$zSize price=$zPrice; " +
-      s"hval size=$hSize price=$hPrice; sz-sort size=$oSize price=$oPrice")
-    assert(zSize > 0 && zPrice > 0, s"Z layout fails to prune both dims ($zSize, $zPrice)")
-    assert(hSize > 0 && hPrice > 0, s"Hilbert layout fails to prune both dims ($hSize, $hPrice)")
-    assert(zPrice > oPrice,
-      s"Z layout does not beat the single-axis size sort on price pruning ($zPrice <= $oPrice)")
-    assert(nz === 32 && nh === 32 && no === 32)
-    Ema.unpersistAll(); spark.catalog.clearCache()
+    spark.catalog.clearCache()
   }
 
   test("graph edge build: the one-exchange lag-dedupe shape equals the two-exchange distinct shape") {

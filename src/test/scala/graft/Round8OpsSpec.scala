@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bars, Dedup, Ema, IndicatorsExt, Relational, TrainingData}
+import graft.operators.{Bars, Dedup, Ema, IndicatorsExt, Relational, Scope, TrainingData}
 
 /** Round-8 specs: the CUSUM prefix-sum closed form vs the textbook
   * max-recursion, triangle counting on
@@ -42,36 +42,37 @@ class Round8OpsSpec extends SparkSpec {
   }
 
   test("holt matches the sequential level/trend fold, incl. many-chunk seams") {
-    import spark.implicits._
-    val bars = bars001
-    val scanned = graft.operators.Ema.fold(bars, Seq("close"), Seq("level", "trend"))(
-      init = x => Array(x(0), 0.0),
-      step = (e, x) => {
-        val l1 = 0.3 * x(0) + 0.7 * (e(0) + e(1))
-        Array(l1, 0.2 * (l1 - e(0)) + 0.8 * e(1))
-      })
-    val got = scanned.select("symbol", "bar_ts", "level", "trend")
-      .as[(String, java.sql.Timestamp, Double, Double)]
-      .collect().groupBy(_._1)
-    assert(got.nonEmpty)
-    // sequential reference fold over the close series
-    val closes = bars.select("symbol", "bar_ts", "close")
-      .as[(String, java.sql.Timestamp, Double)].collect().groupBy(_._1)
-    closes.foreach { case (sym, rows) =>
-      val sorted = rows.sortBy(_._2.getTime)
-      val gotRows = got(sym).sortBy(_._2.getTime)
-      var l = 0.0; var b = 0.0
-      sorted.zipWithIndex.foreach { case (r, i) =>
-        if (i == 0) { l = r._3; b = 0.0 }
-        else {
-          val l1 = 0.3 * r._3 + 0.7 * (l + b)
-          b = 0.2 * (l1 - l) + 0.8 * b; l = l1
+    Scope {
+      import spark.implicits._
+      val bars = bars001
+      val scanned = graft.operators.Ema.fold(bars, Seq("close"), Seq("level", "trend"))(
+        init = x => Array(x(0), 0.0),
+        step = (e, x) => {
+          val l1 = 0.3 * x(0) + 0.7 * (e(0) + e(1))
+          Array(l1, 0.2 * (l1 - e(0)) + 0.8 * e(1))
+        })
+      val got = scanned.select("symbol", "bar_ts", "level", "trend")
+        .as[(String, java.sql.Timestamp, Double, Double)]
+        .collect().groupBy(_._1)
+      assert(got.nonEmpty)
+      // sequential reference fold over the close series
+      val closes = bars.select("symbol", "bar_ts", "close")
+        .as[(String, java.sql.Timestamp, Double)].collect().groupBy(_._1)
+      closes.foreach { case (sym, rows) =>
+        val sorted = rows.sortBy(_._2.getTime)
+        val gotRows = got(sym).sortBy(_._2.getTime)
+        var l = 0.0; var b = 0.0
+        sorted.zipWithIndex.foreach { case (r, i) =>
+          if (i == 0) { l = r._3; b = 0.0 }
+          else {
+            val l1 = 0.3 * r._3 + 0.7 * (l + b)
+            b = 0.2 * (l1 - l) + 0.8 * b; l = l1
+          }
+          assert(math.abs(gotRows(i)._3 - l) < 1e-9, s"$sym level row $i")
+          assert(math.abs(gotRows(i)._4 - b) < 1e-9, s"$sym trend row $i")
         }
-        assert(math.abs(gotRows(i)._3 - l) < 1e-9, s"$sym level row $i")
-        assert(math.abs(gotRows(i)._4 - b) < 1e-9, s"$sym trend row $i")
       }
     }
-    graft.operators.Ema.unpersistAll()
   }
 
   test("graphCcFromPairs: K4 is all-triangles, a path has none") {

@@ -1,0 +1,121 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
+import graft.functions.{GraftFunctions, RewriteVectorFolds}
+
+/** `cosine_sim`, `dot_product` and `dist2` against the `zip_with` +
+  * `aggregate` folds they replace, in codegen and interpreted mode, on
+  * scalacheck-generated arrays: NaN, ±Inf, null elements, null arrays,
+  * ragged, empty and all-zero. `zip_with` pads the shorter array with
+  * nulls and a null term nulls the sum, so every kernel returns null on
+  * ragged input or a null element; cosine is also null on a zero norm. */
+class VectorKernelSpec extends SparkSpec {
+  private type Vec = Seq[java.lang.Double]
+
+  private def c(x: java.lang.Double): Gen[java.lang.Double] = Gen.const(x)
+  private val element: Gen[java.lang.Double] = Gen.frequency(
+    12 -> Gen.choose(-1e3, 1e3).map(Double.box),
+    2 -> c(0.0), 1 -> c(-0.0), 1 -> c(Double.NaN),
+    1 -> c(Double.PositiveInfinity), 1 -> c(Double.NegativeInfinity),
+    1 -> c(1e200), // its square overflows to +Inf
+    1 -> c(null))
+
+  private def vec(n: Int): Gen[Vec] = Gen.frequency(
+    8 -> Gen.listOfN(n, element),
+    1 -> Gen.const(Seq.fill[java.lang.Double](n)(0.0)))
+
+  private val pair: Gen[(Vec, Vec)] = for {
+    n <- Gen.choose(0, 6)
+    a <- vec(n)
+    ragged <- Gen.frequency(6 -> false, 1 -> true)
+    m <- if (ragged) Gen.choose(0, 6).suchThat(_ != n) else Gen.const(n)
+    b <- vec(m)
+    nullA <- Gen.frequency(30 -> false, 1 -> true)
+  } yield (if (nullA) null else a, b)
+
+  private def v(xs: java.lang.Double*): Vec = xs
+
+  // the named degenerate cases, then a fixed-seed random sample
+  private val pairs: Seq[(Vec, Vec)] = Seq(
+    (v(1.0, null, 3.0), v(1.0, 2.0, 3.0)),
+    (v(1.0, 2.0), v(1.0, 2.0, 3.0)),
+    (v(), v()),
+    (v(0.0, 0.0), v(1.0, 2.0)),
+    (v(Double.NaN, 1.0), v(1.0, 1.0)),
+    (v(Double.PositiveInfinity, 1.0), v(1.0, 1.0)),
+    (v(1.0, 2.0), null)) ++
+    Gen.listOfN(400, pair).pureApply(Gen.Parameters.default, Seed(20261019L))
+
+  private val schema = StructType(Seq(StructField("id", IntegerType),
+    StructField("a", ArrayType(DoubleType)), StructField("b", ArrayType(DoubleType))))
+
+  private def input(): DataFrame = spark.createDataFrame(
+    java.util.Arrays.asList(pairs.zipWithIndex.map { case ((a, b), i) => Row(i, a, b) }: _*),
+    schema)
+
+  private val kernels = Seq("cosine_sim(a, b)", "dot_product(a, b)", "dist2(a, b)")
+
+  private def fold(term: String) =
+    s"aggregate(zip_with(a, b, (x, y) -> $term), 0.0D, (s, t) -> s + t)"
+  private def norm(c: String) = s"sqrt(aggregate(transform($c, x -> x * x), 0.0D, (s, t) -> s + t))"
+  private val references = Seq(
+    s"CASE WHEN ${norm("a")} * ${norm("b")} = 0.0D THEN NULL " +
+      s"ELSE ${fold("x * y")} / (${norm("a")} * ${norm("b")}) END",
+    fold("x * y"),
+    fold("(x - y) * (x - y)"))
+
+  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def rows(exprs: Seq[String]): Map[Int, Seq[Option[Double]]] = {
+    val df = input().select(col("id") +: exprs.map(expr): _*)
+    df.collect().map { r =>
+      r.getInt(0) -> exprs.indices.map(i => Option(r.get(i + 1)).map(_.asInstanceOf[Double]))
+    }.toMap
+  }
+
+  private def same(x: Option[Double], y: Option[Double]): Boolean = (x, y) match {
+    case (Some(p), Some(q)) => java.lang.Double.compare(p, q) == 0
+    case (None, None) => true
+    case _ => false
+  }
+
+  for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false"))
+    test(s"cosine_sim, dot_product and dist2 equal their zip_with folds on degenerate arrays ($mode)") {
+      GraftFunctions.register(spark)
+      // the reference folds must run as written, not rewritten to dot_product
+      val extra = spark.experimental.extraOptimizations
+      spark.experimental.extraOptimizations = extra.filterNot(_ == RewriteVectorFolds)
+      // ConvertToLocalRelation would evaluate the projection at planning
+      // time (interpreted) — exclude it so the row path is the mode's own
+      try withConfs(
+        "spark.sql.codegen.factoryMode" -> mode,
+        "spark.sql.codegen.wholeStage" -> wholeStage,
+        "spark.sql.optimizer.excludedRules" ->
+          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation") {
+        val native = input().select(kernels.map(expr): _*)
+        val fused = PlanAudit.executedNodes(native.queryExecution.executedPlan)
+          .exists(_.isInstanceOf[WholeStageCodegenExec])
+        assert(fused === (wholeStage == "true"))
+        val got = rows(kernels)
+        val ref = rows(references)
+        assert(got.size === pairs.size)
+        for ((id, want) <- ref; k <- kernels.indices)
+          assert(same(got(id)(k), want(k)),
+            s"${kernels(k)} on ${pairs(id)}: got ${got(id)(k)}, reference ${want(k)}")
+      } finally spark.experimental.extraOptimizations = extra
+    }
+}
