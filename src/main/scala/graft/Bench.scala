@@ -25,6 +25,14 @@ object Bench {
   /** The timed action: executes `df`'s whole plan, discarding the rows. */
   def run(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
+  /** The headline total and the failed queries' names, from per-query
+    * seconds where a failed query reads -1. The total sums only the
+    * queries that ran, so a failure cannot lower it. */
+  def summary(results: Seq[(String, Double)]): (Double, Seq[String]) = {
+    val (failed, ran) = results.partition(_._2 < 0)
+    (ran.map(_._2).sum, failed.map(_._1))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -46,8 +54,8 @@ object Bench {
     def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
       // the scope releases a failed query's intermediates too, and its
-      // release is not timed. A failure still reads -1 in the JSON;
-      // stderr says why.
+      // release is not timed. A failure reads -1 in the per-query map
+      // and is named in the "failed" list; stderr says why.
       try Scope { run(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: $e")
@@ -107,12 +115,7 @@ object Bench {
       val spread = if (vals.nonEmpty && vals.min > 0) vals.max / vals.min else -1.0
       s""","canary":{"query":"q1_agg","start":${fmt(canaryStart)},"mid":${fmt(canaryMid)},"end":${fmt(canaryEnd)},"spread":${fmt(spread)}}"""
     }
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    def line(entries: Iterable[(String, Double)], extra: String): String = {
-      val qs = entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs$extra,"sf":"$sfDir"}"""
-    }
+    val (total, failed) = summary(results)
     // Full per-query map for humans/judges — on disk only. The driver's
     // stdout-tail parse has failed four rounds running even with an intact
     // capped line, so the stdout contract is now minimal: exactly ONE short
@@ -121,7 +124,12 @@ object Bench {
     // appender, so nothing can trail it), with build.sbt's StdoutOutput
     // strategy stripping sbt's "[info] " prefix and showSuccess=false
     // dropping the "[success]" trailer.
-    val full = line(results, canaryJson)
+    val full = {
+      val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+        .mkString("{", ",", "}")
+      val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"failed":$failedJson$canaryJson,"sf":"$sfDir"}"""
+    }
     // Only the driver-facing sf0.1 dir writes BENCH_FULL.json; every
     // other scale lands in its own suffixed artifact so no scale refresh
     // (sf1.0 today, sf10 tomorrow) can clobber the driver's file.
@@ -142,9 +150,8 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] artifact write failed: ${e.getMessage}") }
     else System.err.println(full)
-    val failed = results.count(_._2 < 0)
     val minimal =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","n":${results.size},"failed":$failed,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","n":${results.size},"failed":${failed.size},"sf":"$sfDir"}"""
     // A stop-time failure (shutdown-hook/FS error) must not discard the
     // completed measurements — the result line still gets emitted below.
     try spark.stop() catch { case _: Throwable => () }

@@ -508,13 +508,6 @@ object OracleSql {
         coalesce(volume, 0)::BIGINT AS volume_filled
       FROM j ORDER BY symbol, bar_ts""",
 
-    "q_topk_agg" -> """
-      SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
-        SELECT o_custkey, o_orderkey, o_totalprice,
-          row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        FROM orders) t
-      WHERE rk <= 3 ORDER BY o_custkey, rk""",
-
     "q_incremental_ingest" -> """
       SELECT event_id, ts, user_id, event_type, value
       FROM events i
@@ -3102,7 +3095,7 @@ object OracleSql {
 
   /** Multi-table LSH oracle: mirrors Similarity.{corpusBuckets,
     * queryProbes} — identical ±1 sign constants, identical fold order
-    * (list_reduce from a prepended 0.0 ≡ the native DotProduct loop),
+    * (list_reduce from a prepended 0.0 ≡ the native LshBuckets loop),
     * identical (|proj|, bit) margin ranking for the probe flips. */
   /** Shared multi-table LSH corpus CTEs: p1 (projection lists), p2
     * (per-table buckets), bk (one row per vector per table). */
@@ -4100,7 +4093,7 @@ object OracleSql {
 
     // incremental TOP-K: selecting the k best rows is exactly mergeable
     // (monotone — a union's top-k row is in its own side's top-k), so
-    // the Spark side merges base/delta TopKAgg partials while the
+    // the Spark side merges base/delta row_number partials while the
     // oracle recomputes the top-k from raw rows in one window; the hash
     // match is the merge ≡ recompute proof, exact (no contract needed)
     "q_incremental_topk" -> """

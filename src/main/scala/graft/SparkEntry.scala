@@ -97,7 +97,6 @@ object SparkEntry {
     "q_rollup_revenue" -> ((s, d) => Relational.rollupRevenue(Tables.orders(s, d),
       Tables.customer(s, d), Tables.nation(s, d), Tables.region(s, d))),
     "q_topk_per_group" -> ((s, d) => Relational.topkPerGroup(Tables.orders(s, d))),
-    "q_topk_agg" -> ((s, d) => Relational.topkPerGroupAgg(Tables.orders(s, d))),
     "q_sessionize" -> ((s, d) => Relational.sessionize(Tables.events(s, d))),
     "q_funnel" -> ((s, d) => Relational.funnel(Tables.events(s, d))),
     "q_cohort_retention" -> ((s, d) => Relational.cohortRetention(Tables.events(s, d))),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** A native kernel over two `array<double>` columns that returns a
-  * double ([[CosineSim]], [[DotProduct]], [[Dist2]]). Interpreted eval
+  * double ([[CosineSim]], [[Dist2]]). Interpreted eval
   * and the generated code both call the one [[compute]], so the two
   * paths cannot disagree. Like the `zip_with` + `aggregate` folds these
   * kernels replace, `compute` returns null on ragged lengths or a null

@@ -75,8 +75,6 @@ object GraftFunctions {
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "dist2", exprs => Dist2(exprs(0), exprs(1)), "built-in")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "nearest_cell", exprs => NearestCell(exprs(0), exprs(1)), "built-in")

@@ -35,12 +35,12 @@ object LshPlanes {
 /** All per-table LSH bucket ids of one vector in ONE fused expression —
   * returns array<bigint> of LshPlanes.Tables buckets.
   *
-  * A 12-table × 11-bit signature as 132 separate dot_product expressions
+  * A 12-table × 11-bit signature as 132 separate dot-product folds
   * makes the Catalyst tree so large that per-query analysis+codegen
   * dominates the runtime; this expression keeps the tree at one node and
   * runs the triple loop in generated code. Projection accumulation is
   * ascending-index from 0.0 with ±1.0 multiplies — bit-identical to the
-  * dot_product fold and to the oracle's list_reduce. */
+  * `aggregate(zip_with(...))` fold and to the oracle's list_reduce. */
 case class LshBuckets(child: Expression) extends UnaryExpression {
   import LshPlanes._
 

@@ -300,7 +300,9 @@ object Dedup {
     * ([[clusterStats]]'s histogram, [[TrainingData.exportPlan]]'s
     * canonical test `doc_id = cluster_id`) start here and skip
     * [[annotateClusters]]' full-corpus groupBy + join — at 100 TB
-    * that's one fewer shuffle of every (doc_id, label) row. */
+    * that's one fewer shuffle of every (doc_id, label) row. Throws
+    * `IllegalStateException` if no fixpoint is reached in `maxIter`
+    * rounds, rather than return unconverged labels. */
   def clusterLabelsFromPairs(pairs0: DataFrame, ids: DataFrame,
       maxIter: Int = 50): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -356,6 +358,9 @@ object Dedup {
         prev = s
         it += 1
       }
+      if (!converged) throw new IllegalStateException(
+        s"min-label propagation did not converge in $maxIter rounds " +
+          "(the pair graph's diameter exceeds maxIter)")
       labels
     }
     // the returned plan reads the final labels checkpoint (its blocks
@@ -410,7 +415,9 @@ object Dedup {
     * would need 10⁶ rounds there but ~20 here). Each round is two
     * groupBy-join passes over the (shrinking) edge list; convergence =
     * edge multiset unchanged (count + order-independent hash sum).
-    * Returns (id, label) with label = component minimum. */
+    * Returns (id, label) with label = component minimum; throws
+    * `IllegalStateException` if no fixpoint is reached in `maxIter`
+    * rounds. */
   def connectedComponentsLSS(edges0: DataFrame, ids: DataFrame,
       maxIter: Int = 30): DataFrame = {
     // localCheckpoint (not bare persist): each round's logical plan
@@ -442,10 +449,11 @@ object Dedup {
       prev = s
       it += 1
     }
-    // stars: every non-minimum node holds exactly one outgoing (a → min);
-    // the min() aggregate also keeps the output well-formed if maxIter
-    // cut the loop before the fixpoint. The returned plan reads the last
-    // round's checkpoint blocks (held alive by the plan's RDD reference).
+    if (!converged) throw new IllegalStateException(
+      s"large-star/small-star contraction did not converge in $maxIter rounds")
+    // stars: every non-minimum node holds exactly one outgoing (a → min).
+    // The returned plan reads the last round's checkpoint blocks (held
+    // alive by the plan's RDD reference).
     val ptr = edges.groupBy(col("a")).agg(min(col("b")).as("label"))
       .select(col("a").as("id"), col("label"))
     ids.join(ptr, Seq("id"), "left")

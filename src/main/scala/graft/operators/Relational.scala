@@ -59,7 +59,9 @@ object Relational {
       .orderBy(col("r_name"), col("n_name"))
 
   /** Top-k orders per customer via window rank (deterministic tie-break
-    * on orderkey). */
+    * on orderkey). Spark plans the `rk <= k` filter as a map-side
+    * partial `WindowGroupLimit`, so only k rows per customer per mapper
+    * cross the shuffle. */
   def topkPerGroup(orders: DataFrame, k: Int = 3): DataFrame = {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -149,28 +151,6 @@ object Relational {
         coalesce(col("n_name"), lit("ALL")).as("n_name"),
         col("revenue"), col("n_orders"), col("g_region"), col("g_nation"))
       .orderBy(col("r_name"), col("n_name"))
-
-  /** Top-k per group via the typed [[graft.functions.TopKAgg]] Aggregator:
-    * map-side partial top-k (≤ k rows per group per mapper cross the
-    * shuffle) instead of the window formulation's full shuffle + sort.
-    * Output is identical to [[topkPerGroup]]. */
-  def topkPerGroupAgg(orders: DataFrame, k: Int = 3): DataFrame = {
-    val spark = orders.sparkSession
-    import spark.implicits._
-    val agg = new graft.functions.TopKAgg(k)
-    orders.select(col("o_custkey"), col("o_totalprice"), col("o_orderkey"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(agg.toColumn)
-      .flatMap { case (ck, top) =>
-        top.iterator.zipWithIndex.map { case ((price, okey), i) =>
-          (ck, okey, price, (i + 1).toLong)
-        }
-      }
-      .toDF("o_custkey", "o_orderkey", "o_totalprice", "rk")
-      .orderBy(col("o_custkey"), col("rk"))
-  }
 
   /** Incremental-ingest guard: keep only rows not already present in the
     * existing table, by (symbol, ts) — a left-anti join, the declarative

@@ -36,8 +36,9 @@ import graft.functions.GraftFunctions
   * ([[graft.functions.CosineSim]]) — one fused codegen'd loop per pair,
   * accumulating in the same sequential order as the DuckDB oracle's
   * `list_reduce`, so values match bit-for-bit; the LSH projections run
-  * through the native [[graft.functions.DotProduct]] against constant
-  * ±1 sign arrays for the same reason. Null (zero-norm) cosines are
+  * through the fused [[graft.functions.LshBuckets]] and
+  * [[graft.functions.LshProjections]] kernels against the constant ±1
+  * sign matrix, in the same order, for the same reason. Null (zero-norm) cosines are
   * filtered identically to the oracle's `nrm > 0` guards.
   */
 object Similarity {

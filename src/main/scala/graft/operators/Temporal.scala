@@ -206,50 +206,33 @@ object Temporal {
     * ROWS is exactly mergeable because it is monotone — any row in the
     * top-k of a union is in the top-k of its own side, so
     * topk(merge(topk(base), topk(delta))) ≡ topk(full) with NO
-    * approximation. That is precisely [[graft.functions.TopKAgg]]'s
-    * merge contract, exercised here across a BASE/DELTA split at the
+    * approximation. Exercised here across a BASE/DELTA split at the
     * same data-derived cutoff as the siblings: each side reduces to ≤k
-    * (value desc, event_id asc) rows per event_type via the typed
-    * bounded-buffer aggregate (map-side partial top-k — only k rows
-    * per group per mapper cross the wire), the stored-MV-plus-delta
-    * merge is a second bounded pass over ≤2k rows per group, and the
-    * oracle recomputes the same top-k from the raw rows in one window
-    * — the hash match IS the merge≡recompute proof. At 100 TB the base
-    * partial is the stored MV (k rows per group); only the delta ever
-    * rescans. */
+    * (value desc, event_id asc) rows per event_type by a
+    * `row_number() <= k` filter, which Spark plans as a map-side
+    * partial `WindowGroupLimit` (only k rows per group per mapper cross
+    * the wire), the stored-MV-plus-delta merge is the same filter over
+    * ≤2k rows per group, and the oracle recomputes the same top-k from
+    * the raw rows in one window — the hash match IS the merge≡recompute
+    * proof. At 100 TB the base partial is the stored MV (k rows per
+    * group); only the delta ever rescans. */
   def incrementalTopk(events: DataFrame, k: Int = 10): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
     val cutoff = events.agg(date_add(max(to_date(col("ts"))), -7).as("cut"))
     val tagged = events.crossJoin(broadcast(cutoff))
-    def partial(df: DataFrame): DataFrame = {
-      val agg = new graft.functions.TopKAgg(k)
-      // null-tolerant like the SQL aggregates every other value consumer
-      // uses: the typed (String, Double, Long) encoder would throw on a
-      // null value, so nulls are dropped explicitly here and in the
-      // oracle (a null can never rank in a value-desc top-k anyway —
-      // SQL ORDER BY .. DESC puts NULL last and the window's rows are
-      // capped at k non-null candidates).
-      df.filter(col("value").isNotNull)
-        .select(col("event_type"), col("value"), col("event_id"))
-        .as[(String, Double, Long)]
-        .groupByKey(_._1)
-        .mapValues(r => (r._2, r._3))
-        .agg(agg.toColumn)
-        .flatMap { case (et, top) =>
-          top.iterator.map { case (v, id) => (et, v, id) }
-        }
-        .toDF("event_type", "value", "event_id")
-    }
-    val base = partial(tagged.filter(to_date(col("ts")) < col("cut")))
-    val delta = partial(tagged.filter(to_date(col("ts")) >= col("cut")))
-    // merge stage: ≤ 2k rows per event_type — the window is bounded by
-    // construction (never a full-corpus sort)
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("value").desc, col("event_id"))
-    base.unionByName(delta)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+    def topk(df: DataFrame): DataFrame =
+      df.withColumn("rk", row_number().over(w).cast("long")).filter(col("rk") <= k)
+    // nulls are dropped explicitly here and in the oracle: a null value
+    // sorts last under value DESC, so it would rank only in a group with
+    // fewer than k non-null values
+    def partial(df: DataFrame): DataFrame =
+      topk(df.filter(col("value").isNotNull)
+        .select(col("event_type"), col("value"), col("event_id")))
+        .drop("rk")
+    val base = partial(tagged.filter(to_date(col("ts")) < col("cut")))
+    val delta = partial(tagged.filter(to_date(col("ts")) >= col("cut")))
+    topk(base.unionByName(delta))
       .select(col("event_type"), col("event_id"), col("value"), col("rk"))
       .orderBy(col("event_type"), col("rk"))
   }

@@ -210,23 +210,16 @@ object StreamPipelines {
   /** Dual raw/processed sink via foreachBatch — the streaming analogue of
     * the reference loader's buffered dual-table insert (reference
     * src/loader/bigquery_loader.py:40-44 buffer, :62-85 dual schemas):
-    * each micro-batch appends the raw events and the per-batch OHLCV bars
-    * atomically under one checkpoint. */
+    * each micro-batch writes the raw events and the per-batch OHLCV bars
+    * under one checkpoint, exactly once across restarts
+    * ([[dualWriteBatch]]). */
   def dualSinkStream(events: DataFrame, outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     events.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the scope releases the cached batch even when a sink write
-        // fails, so it does not leak across the restart
-        Scope {
-          val b = Scope.persist(batch)
-          b.write.mode("append").parquet(s"$outDir/raw")
-          graft.operators.Bars.ohlcv(b).write.mode("append").parquet(s"$outDir/processed")
-        }
-      }
+      .foreachBatch { (batch: DataFrame, id: Long) => dualWriteBatch(batch, id, outDir) }
       .option("checkpointLocation", s"$outDir/ckpt")
       .start()
 
-  /** Idempotent micro-batch write body for [[dualSinkDurable]], exposed
+  /** Idempotent micro-batch write body for [[dualSinkStream]], exposed
     * so specs can exercise the failure replay directly. Each micro-batch
     * lands in a batch-scoped partition directory (`raw/batch_id=<id>`)
     * written with OVERWRITE: if the batch was fully written but the
@@ -234,11 +227,8 @@ object StreamPipelines {
     * engine re-runs the same batchId on restart and the rewrite replaces
     * the partition instead of appending a duplicate. This is what
     * upgrades foreachBatch's at-least-once contract to exactly-once on
-    * an idempotent-capable sink — the plain [[dualSinkStream]] append is
-    * the reference loader's semantics (reference
-    * src/loader/bigquery_loader.py:211 buffered insert callback), this
-    * is the restart-survivable production shape. Readers see `batch_id`
-    * as a discovered partition column. */
+    * an idempotent-capable sink. Readers see `batch_id` as a discovered
+    * partition column. */
   def dualWriteBatch(batch: DataFrame, batchId: Long, outDir: String): Unit = {
     // the scope releases the cached batch even when a sink write fails,
     // so it does not leak across the replay
@@ -249,14 +239,6 @@ object StreamPipelines {
         .parquet(s"$outDir/processed/batch_id=$batchId")
     }
   }
-
-  /** [[dualSinkStream]] with exactly-once restart durability via
-    * batchId-keyed idempotent writes (see [[dualWriteBatch]]). */
-  def dualSinkDurable(events: DataFrame, outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) => dualWriteBatch(batch, id, outDir) }
-      .option("checkpointLocation", s"$outDir/ckpt")
-      .start()
 
   /** Streaming CDC MERGE — [[graft.operators.Temporal.cdcApply]]'s
     * last-writer-wins semantics run stream-native, the reference

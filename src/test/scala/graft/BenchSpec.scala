@@ -13,7 +13,8 @@ import graft.operators.Scope
 /** `Bench.run`, the benchmark's timed action, must execute the whole
   * plan a query declares: every window and the global output sort. A
   * `count()` lets Catalyst prune both, so it is the control that shows
-  * the check can fail. */
+  * the check can fail. `Bench.summary` keeps a failed query (-1) out of
+  * the headline total. */
 class BenchSpec extends SparkSpec {
 
   test("Bench.run executes q_rsi's every window and its output sort; count() does not") {
@@ -47,5 +48,13 @@ class BenchSpec extends SparkSpec {
       spark.listenerManager.unregister(listener)
       spark.catalog.clearCache()
     }
+  }
+
+  test("Bench.summary totals only the queries that ran and names the failed ones") {
+    val (total, failed) = Bench.summary(
+      Seq("q_a" -> 1.5, "q_b" -> -1.0, "q_c" -> 2.25, "q_d" -> -1.0))
+    assert(total === 3.75)
+    assert(failed === Seq("q_b", "q_d"))
+    assert(Bench.summary(Nil) === ((0.0, Nil)))
   }
 }

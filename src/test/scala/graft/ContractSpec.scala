@@ -1,12 +1,22 @@
 package graft
 
-/** Driver-contract guards: every declared operator must carry an oracle,
-  * and none may silently regress to an empty result (the hash gate would
-  * "pass" an empty-vs-empty compare). */
+/** Driver-contract guards: every declared operator must carry an oracle
+  * and a PLANS.md row, and none may silently regress to an empty result
+  * (the hash gate would "pass" an empty-vs-empty compare). */
 class ContractSpec extends SparkSpec {
 
   test("every query has an oracle and every oracle has a query") {
     assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
+  }
+
+  test("PLANS.md has one row per query and no other") {
+    val src = scala.io.Source.fromFile("PLANS.md", "UTF-8")
+    val rows = try src.getLines().filter(_.startsWith("| ")).map(_.split('|')(1).trim)
+      .filterNot(_ == "query").toList
+    finally src.close()
+    val declared = SparkEntry.queries.keySet
+    assert(rows.sorted === declared.toList.sorted,
+      s"stale rows: ${rows.toSet -- declared}; missing rows: ${declared -- rows}")
   }
 
   test("every query returns rows at sf0.001") {

@@ -241,26 +241,6 @@ class OpsExtraSpec extends SparkSpec {
     assert(folds.getLong(4) === folds.getLong(5))
   }
 
-  test("optimizer rule rewrites the declarative dot-product fold to DotProduct") {
-    graft.functions.GraftExtensions.install(spark)
-    val e = Tables.embeddings(spark, sf())
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
-      .select(col("vec_id"),
-        aggregate(zip_with(col("v"), col("v"), (x, y) => x * y),
-          lit(0.0), (acc, x) => acc + x).as("dot"))
-    assert(e.queryExecution.optimizedPlan.toString.toLowerCase.contains("dot_product"))
-    // rewritten result must equal a driver-side recomputation
-    val rows = e.limit(5).collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Double]("dot")).toMap
-    val raw = Tables.embeddings(spark, sf()).limit(100).collect()
-      .map(r => r.getAs[Long]("vec_id") ->
-        r.getSeq[Float](r.fieldIndex("embedding")).map(_.toDouble)).toMap
-    rows.foreach { case (id, dot) =>
-      val v = raw(id)
-      val expected = v.zip(v).map { case (a, b) => a * b }.sum
-      assert(math.abs(dot - expected) < 1e-9)
-    }
-  }
-
   test("saltedJoin equals the plain join") {
     val orders = Tables.orders(spark, sf())
     val customer = Tables.customer(spark, sf())
@@ -423,13 +403,6 @@ class OpsExtraSpec extends SparkSpec {
       assert(r.getAs[java.sql.Timestamp]("latest_ts") ===
         wm(r.getAs[String]("symbol")))
     }
-  }
-
-  test("typed TopKAgg aggregator equals the window top-k exactly") {
-    val orders = Tables.orders(spark, sf())
-    val win = Relational.topkPerGroup(orders).collect().toSeq
-    val agg = Relational.topkPerGroupAgg(orders).collect().toSeq
-    assert(agg.map(_.toSeq) === win.map(_.toSeq))
   }
 
   test("gapFill produces a complete grid with ffill/bfill semantics") {

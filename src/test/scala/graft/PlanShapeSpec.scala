@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.aggregate.ApproximatePercentile
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
 
 import graft.operators.Scope
 
@@ -14,7 +18,7 @@ import graft.operators.Scope
   * rank) into range-partitioned local passes stitched by broadcast
   * partitions-sized carry/offset tables; this spec keeps them — and
   * the window-heavy indicator queries — honest. PLANS.md reports the
-  * same count for all 120 queries per round via graft.PlanAudit. */
+  * same count for every query via graft.PlanAudit. */
 class PlanShapeSpec extends SparkSpec {
 
   // The queries that ever had (or are most at risk of regrowing) a
@@ -87,8 +91,8 @@ class PlanShapeSpec extends SparkSpec {
   test("the gate itself sees through AQE: a planted global window counts") {
     // Guard against vacuity: under AQE the executedPlan root is an
     // AdaptiveSparkPlanExec LEAF — if executedNodes failed to descend
-    // into it, every count below would be trivially 0 and the 16 query
-    // tests would pass even after reintroducing a global ntile.
+    // into it, every count below would be trivially 0 and the watched
+    // query tests would pass even after reintroducing a global ntile.
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val offender = spark.range(100).toDF("id")
@@ -200,6 +204,31 @@ class PlanShapeSpec extends SparkSpec {
       "q_layout_compare" -> 4, "q_sql_recursive" -> 2,
       "q_ann_graph" -> 11))
     exchangeGate(name, bound, "linked-scan fusion")
+
+  // Top-k per group is a `row_number() <= k` filter, which Spark plans
+  // with a map-side Partial WindowGroupLimit: at most k rows per group
+  // per mapper reach the first hash exchange. A hand-written top-k
+  // aggregate, or a filter the optimizer cannot push into the window,
+  // puts every row on that exchange and trips these.
+  exchangeGate("q_incremental_topk", 4, "row_number partial top-k")
+
+  for (name <- Seq("q_topk_per_group", "q_incremental_topk"))
+    test(s"$name plans a Partial WindowGroupLimit below its first hash exchange") {
+      def isHash(p: SparkPlan): Boolean = p match {
+        case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[HashPartitioning]
+        case _ => false
+      }
+      try Scope {
+        val df = SparkEntry.queries(name)(spark, sf())
+        val first = PlanAudit.executedNodes(df.queryExecution.executedPlan)
+          .filter(e => isHash(e) && !e.children.exists(_.exists(isHash)))
+        assert(first.nonEmpty, s"$name plans no hash exchange")
+        for (e <- first) assert(e.exists {
+            case w: WindowGroupLimitExec => w.mode == Partial
+            case _ => false
+          }, s"$name feeds ${e.simpleString(100)} without a Partial WindowGroupLimit")
+      } finally spark.catalog.clearCache()
+    }
 
   // Every EMA-family query is ONE exact fold per symbol (Ema.fold): the
   // bars aggregate, the groupByKey(symbol) fold and the output sort,

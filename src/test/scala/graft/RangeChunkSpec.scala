@@ -181,6 +181,26 @@ class RangeChunkSpec extends SparkSpec {
     assert(labels.forall(_._2 === 1L), s"unconverged: ${labels.filter(_._2 != 1L).take(5).toSeq}")
   }
 
+  test("connected components throw on a path graph longer than maxIter and converge at the default") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    // a 12-node path: min-label propagation needs 11 changing rounds
+    // plus one that confirms the fixpoint
+    val pairs = (1L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val ids = (1L to 12L).toDF("doc_id")
+    val minLabel = intercept[IllegalStateException](
+      Dedup.clusterLabelsFromPairs(pairs, ids, maxIter = 3))
+    assert(minLabel.getMessage.contains("3 rounds"), minLabel.getMessage)
+    val edges = pairs.toDF("a", "b")
+    val lss = intercept[IllegalStateException](
+      Dedup.connectedComponentsLSS(edges, ids.toDF("id"), maxIter = 1))
+    assert(lss.getMessage.contains("1 rounds"), lss.getMessage)
+    assert(Dedup.clusterLabelsFromPairs(pairs, ids).collect()
+      .forall(_.getAs[Long]("cluster_id") == 1L))
+    assert(Dedup.connectedComponentsLSS(edges, ids.toDF("id")).collect()
+      .forall(_.getAs[Long]("label") == 1L))
+  }
+
   test("funnel enforces strict stage ordering per user") {
     import spark.implicits._
     def ev(id: Long, u: Long, t: String, typ: String) =

@@ -501,7 +501,7 @@ class StreamingSpec extends SparkSpec {
     val schema = spark.read.parquet(src).schema
 
     // run 1: process what's there, then the process "dies"
-    val q1 = StreamPipelines.dualSinkDurable(
+    val q1 = StreamPipelines.dualSinkStream(
       spark.readStream.schema(schema).parquet(src), tmp)
     q1.processAllAvailable(); q1.stop()
 
@@ -519,7 +519,7 @@ class StreamingSpec extends SparkSpec {
       .write.mode("append").parquet(src)
 
     // run 2: restart from the checkpoint — must pick up exactly the delta
-    val q2 = StreamPipelines.dualSinkDurable(
+    val q2 = StreamPipelines.dualSinkStream(
       spark.readStream.schema(schema).parquet(src), tmp)
     q2.processAllAvailable(); q2.stop()
 

@@ -7,13 +7,13 @@ import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.functions.{GraftFunctions, RewriteVectorFolds}
+import graft.functions.GraftFunctions
 
-/** `cosine_sim`, `dot_product` and `dist2` against the `zip_with` +
+/** `cosine_sim` and `dist2` against the `zip_with` +
   * `aggregate` folds they replace, in codegen and interpreted mode, on
   * scalacheck-generated arrays: NaN, ±Inf, null elements, null arrays,
   * ragged, empty and all-zero. `zip_with` pads the shorter array with
-  * nulls and a null term nulls the sum, so every kernel returns null on
+  * nulls and a null term nulls the sum, so both kernels return null on
   * ragged input or a null element; cosine is also null on a zero norm. */
 class VectorKernelSpec extends SparkSpec {
   private type Vec = Seq[java.lang.Double]
@@ -59,7 +59,7 @@ class VectorKernelSpec extends SparkSpec {
     java.util.Arrays.asList(pairs.zipWithIndex.map { case ((a, b), i) => Row(i, a, b) }: _*),
     schema)
 
-  private val kernels = Seq("cosine_sim(a, b)", "dot_product(a, b)", "dist2(a, b)")
+  private val kernels = Seq("cosine_sim(a, b)", "dist2(a, b)")
 
   private def fold(term: String) =
     s"aggregate(zip_with(a, b, (x, y) -> $term), 0.0D, (s, t) -> s + t)"
@@ -67,7 +67,6 @@ class VectorKernelSpec extends SparkSpec {
   private val references = Seq(
     s"CASE WHEN ${norm("a")} * ${norm("b")} = 0.0D THEN NULL " +
       s"ELSE ${fold("x * y")} / (${norm("a")} * ${norm("b")}) END",
-    fold("x * y"),
     fold("(x - y) * (x - y)"))
 
   private def withConfs[T](kv: (String, String)*)(body: => T): T = {
@@ -94,14 +93,11 @@ class VectorKernelSpec extends SparkSpec {
   }
 
   for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false"))
-    test(s"cosine_sim, dot_product and dist2 equal their zip_with folds on degenerate arrays ($mode)") {
+    test(s"cosine_sim and dist2 equal their zip_with folds on degenerate arrays ($mode)") {
       GraftFunctions.register(spark)
-      // the reference folds must run as written, not rewritten to dot_product
-      val extra = spark.experimental.extraOptimizations
-      spark.experimental.extraOptimizations = extra.filterNot(_ == RewriteVectorFolds)
       // ConvertToLocalRelation would evaluate the projection at planning
       // time (interpreted) — exclude it so the row path is the mode's own
-      try withConfs(
+      withConfs(
         "spark.sql.codegen.factoryMode" -> mode,
         "spark.sql.codegen.wholeStage" -> wholeStage,
         "spark.sql.optimizer.excludedRules" ->
@@ -116,6 +112,6 @@ class VectorKernelSpec extends SparkSpec {
         for ((id, want) <- ref; k <- kernels.indices)
           assert(same(got(id)(k), want(k)),
             s"${kernels(k)} on ${pairs(id)}: got ${got(id)(k)}, reference ${want(k)}")
-      } finally spark.experimental.extraOptimizations = extra
+      }
     }
 }

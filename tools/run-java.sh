@@ -1,7 +1,8 @@
 #!/bin/bash
 # Run a graft main with the Spark-on-JDK17 module opens (matches
-# build.sbt's jdk17AddOpens; a bare `java -cp` without these fails any
-# query whose plan touches Kryo, e.g. the TopKAgg family).
+# build.sbt's jdk17AddOpens: Spark and its serializers reflect into
+# these JDK internals, and a bare `java -cp` without them fails at
+# run time).
 OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
