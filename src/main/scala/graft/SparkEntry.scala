@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators._
+import graft.operators.Parity.r4
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
 object SparkEntry {
@@ -20,7 +21,7 @@ object SparkEntry {
     "q_bars_ohlcv" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       bars(s, d).select(col("symbol"), col("bar_ts"), col("open"), col("high"),
-        col("low"), col("close"), col("volume"), round(col("vsum") + lit(5e-9), 4).as("vsum"))
+        col("low"), col("close"), col("volume"), r4(col("vsum")).as("vsum"))
         .orderBy(col("symbol"), col("bar_ts"))
     }),
     "q_preprocess_mavg" -> ((s, d) => Indicators.preprocess(bars(s, d))),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parity.r4
+
 /** Deduplication family for LLM-data pipelines over `documents`.
   *
   * The reference dedups on exact keys (reference
@@ -71,7 +73,7 @@ object Dedup {
       .join(inter, Seq("doc_a", "doc_b"), "left")
       .select(col("doc_a"), col("doc_b"),
         when(union > 0,
-          round(coalesce(col("m"), lit(0L)).cast("double") / union + lit(5e-9), 4))
+          r4(coalesce(col("m"), lit(0L)).cast("double") / union))
           .as("jaccard"))
       .orderBy(col("doc_a"))
   }
@@ -107,10 +109,9 @@ object Dedup {
       .join(inter, Seq("doc_a", "doc_b"), "left")
       .filter(mn > 0 && cont >= threshold)
       .select(col("doc_a"), col("doc_b"),
-        round(cont + lit(5e-9), 4).as("containment"),
-        round(coalesce(col("m"), lit(0L)).cast("double")
-          / (col("na") + col("nb") - coalesce(col("m"), lit(0L))).cast("double")
-          + lit(5e-9), 4).as("jaccard"))
+        r4(cont).as("containment"),
+        r4(coalesce(col("m"), lit(0L)).cast("double")
+          / (col("na") + col("nb") - coalesce(col("m"), lit(0L))).cast("double")).as("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -219,9 +220,9 @@ object Dedup {
       .withColumn("p_raw", lit(1.0) - expr(
         "aggregate(sequence(1L, b), cast(1.0 as double), (acc, i) -> acc * s1)"))
       .select(col("b"), col("r"),
-        round(pow(lit(1.0) / col("b"), lit(1.0) / col("r")) + lit(5e-9), 4)
+        r4(pow(lit(1.0) / col("b"), lit(1.0) / col("r")))
           .as("threshold"),
-        round(col("p_raw") + lit(5e-9), 4).as("p_at_tau"))
+        r4(col("p_raw")).as("p_at_tau"))
       .withColumn("dist", abs(col("threshold") - lit(tau)))
     val mn = scored.agg(min(struct(col("dist"), col("r"))).as("mn"))
     scored.crossJoin(broadcast(mn))
@@ -644,9 +645,9 @@ object Dedup {
         expr("size(filter(zip_with(ma, mb, (x, y) -> x = y), b -> b))")
           .cast("long").as("sig_matches"))
       .select(col("doc_a"), col("doc_b"), col("sig_matches"),
-        round(estRaw + lit(5e-9), 4).as("est_jaccard"),
-        round(jacRaw + lit(5e-9), 4).as("jaccard"),
-        round(abs(estRaw - jacRaw) + lit(5e-9), 4).as("abs_err"))
+        r4(estRaw).as("est_jaccard"),
+        r4(jacRaw).as("jaccard"),
+        r4(abs(estRaw - jacRaw)).as("abs_err"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -675,8 +676,7 @@ object Dedup {
         coalesce(col("nw"), lit(0L)).as("n_windows"),
         coalesce(col("nr"), lit(0L)).as("n_repeats"),
         when(col("nw").isNotNull && col("nw") > 0,
-          round(col("nr").cast("double") / col("nw").cast("double")
-            + lit(5e-9), 4)).otherwise(lit(0.0)).as("repeat_frac"))
+          r4(col("nr").cast("double") / col("nw").cast("double"))).otherwise(lit(0.0)).as("repeat_frac"))
       .orderBy(col("doc_id"))
   }
 
@@ -762,8 +762,8 @@ object Dedup {
         sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"))
       .select(col("source"), col("n_docs"), col("n_kept"),
         (col("n_docs") - col("n_kept")).as("n_removed"),
-        round((col("n_docs") - col("n_kept")).cast("double")
-          / col("n_docs").cast("double") + lit(5e-9), 4).as("dup_frac"))
+        r4((col("n_docs") - col("n_kept")).cast("double")
+          / col("n_docs").cast("double")).as("dup_frac"))
       .orderBy(col("source"))
   }
 
@@ -802,8 +802,7 @@ object Dedup {
         col("n_ngrams").as("ngrams_b"))), Seq("source_b"))
       .select(col("source_a"), col("source_b"), col("n_shared"),
         col("ngrams_a"), col("ngrams_b"),
-        round(col("n_shared").cast("double") / col("ngrams_a").cast("double")
-          + lit(5e-9), 4).as("overlap_frac"))
+        r4(col("n_shared").cast("double") / col("ngrams_a").cast("double")).as("overlap_frac"))
       .orderBy(col("source_a"), col("source_b"))
   }
 
@@ -846,8 +845,8 @@ object Dedup {
         coalesce(col("triangles"), lit(0L)).as("triangles"))
       .select(col("doc_id"), col("degree"), col("triangles"),
         when(col("degree") >= 2,
-          round(lit(2.0) * col("triangles")
-            / (col("degree") * (col("degree") - lit(1.0))) + lit(5e-9), 4))
+          r4(lit(2.0) * col("triangles")
+            / (col("degree") * (col("degree") - lit(1.0)))))
           .as("local_cc"))
       .orderBy(col("doc_id"))
   }

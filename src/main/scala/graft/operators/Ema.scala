@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parity.r4
+
 /** Exact recursive EMA / MACD (reference app/dashboard.py:114-118).
   *
   * `ewm(span=n, adjust=False)`: e_0 = x_0; e_t = α·x_t + (1−α)·e_{t-1}
@@ -82,8 +84,8 @@ object Ema extends Serializable {
         Array(m, m * A9 + e(1) * B9, e12, e26)
       })
       .select(col("symbol"), col("bar_ts"),
-        round(col("m") + lit(5e-9), 4).as("macd"),
-        round(col("s") + lit(5e-9), 4).as("macd_signal"),
-        round(col("m") - col("s") + lit(5e-9), 4).as("macd_hist"))
+        r4(col("m")).as("macd"),
+        r4(col("s")).as("macd_signal"),
+        r4(col("m") - col("s")).as("macd_hist"))
       .orderBy(col("symbol"), col("bar_ts"))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parity.r4
+
 /** Technical-indicator suite over per-symbol OHLCV bars.
   *
   * Re-expresses the pandas indicator math of the reference dashboard
@@ -42,8 +44,8 @@ object Indicators {
         count(col("close")).over(w)
     bars.withColumn("bar_date", to_date(col("bar_ts")))
       .select(col("symbol"), col("bar_ts"), col("bar_date"), col("close"),
-        round(frameAvg(w5) + lit(5e-9), 4).as("mavg5"),
-        round(frameAvg(wc) + lit(5e-9), 4).as("cumavg"))
+        r4(frameAvg(w5)).as("mavg5"),
+        r4(frameAvg(wc)).as("cumavg"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
   private def wr(n: Int) = w.rowsBetween(-(n - 1), 0)
@@ -63,9 +65,9 @@ object Indicators {
   /** SMA 20/50/200 (reference app/dashboard.py:98,104-105). */
   def sma(bars: DataFrame): DataFrame =
     bars.select(col("symbol"), col("bar_ts"), col("close"),
-        gated(20)(round(davg(col("close"), 20) + lit(5e-9), 4)).as("sma20"),
-        gated(50)(round(davg(col("close"), 50) + lit(5e-9), 4)).as("sma50"),
-        gated(200)(round(davg(col("close"), 200) + lit(5e-9), 4)).as("sma200"))
+        gated(20)(r4(davg(col("close"), 20))).as("sma20"),
+        gated(50)(r4(davg(col("close"), 50))).as("sma50"),
+        gated(200)(r4(davg(col("close"), 200))).as("sma200"))
       .orderBy(col("symbol"), col("bar_ts"))
 
   /** Bollinger bands: SMA20 ± 2 × sample stddev (app/dashboard.py:97-101). */
@@ -73,9 +75,9 @@ object Indicators {
     val sma20 = davg(col("close"), 20)
     val sd = stddev_samp(col("close")).over(wr(20))
     bars.select(col("symbol"), col("bar_ts"), col("close"),
-        gated(20)(round(sma20 + lit(5e-9), 4)).as("sma20"),
-        gated(20)(round(sma20 + sd * 2 + lit(5e-9), 4)).as("bb_upper"),
-        gated(20)(round(sma20 - sd * 2 + lit(5e-9), 4)).as("bb_lower"))
+        gated(20)(r4(sma20)).as("sma20"),
+        gated(20)(r4(sma20 + sd * 2)).as("bb_upper"),
+        gated(20)(r4(sma20 - sd * 2)).as("bb_lower"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -94,7 +96,7 @@ object Indicators {
       .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") < 14, lit(null))
           .when(col("avg_loss") === 0, lit(100.0))
-          .otherwise(round(lit(100) - lit(100) / (lit(1) + col("avg_gain") / col("avg_loss")) + lit(5e-9), 4))
+          .otherwise(r4(lit(100) - lit(100) / (lit(1) + col("avg_gain") / col("avg_loss"))))
           .as("rsi"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
@@ -110,8 +112,8 @@ object Indicators {
         abs(col("high") - prevClose),
         abs(col("low") - prevClose)))
     bars.select(col("symbol"), col("bar_ts"), tr.as("tr"), rn.as("rn"))
-      .select(col("symbol"), col("bar_ts"), round(col("tr") + lit(5e-9), 4).as("tr"),
-        when(col("rn") >= 15, round(avg(col("tr")).over(wr(14)) + lit(5e-9), 4)).as("atr"))
+      .select(col("symbol"), col("bar_ts"), r4(col("tr")).as("tr"),
+        when(col("rn") >= 15, r4(avg(col("tr")).over(wr(14)))).as("atr"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -123,17 +125,17 @@ object Indicators {
       .when(hi14 === lo14, lit(null))
       .otherwise((col("close") - lo14) / (hi14 - lo14) * 100)
     bars.select(col("symbol"), col("bar_ts"), k.as("k_raw"), rn.as("rn"))
-      .select(col("symbol"), col("bar_ts"), round(col("k_raw") + lit(5e-9), 4).as("stoch_k"),
+      .select(col("symbol"), col("bar_ts"), r4(col("k_raw")).as("stoch_k"),
         when(col("rn") >= 16 && count(col("k_raw")).over(wr(3)) === 3,
-          round(avg(col("k_raw")).over(wr(3)) + lit(5e-9), 4)).as("stoch_d"))
+          r4(avg(col("k_raw")).over(wr(3)))).as("stoch_d"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
   /** Cumulative VWAP per symbol (app/dashboard.py:377). */
   def vwap(bars: DataFrame): DataFrame =
     bars.select(col("symbol"), col("bar_ts"), col("close"), col("volume"),
-        round(sum(col("close").cast("decimal(18,6)") * col("volume")).over(wCum).cast("double") /
-          sum(col("volume")).over(wCum) + lit(5e-9), 4).as("vwap"))
+        r4(sum(col("close").cast("decimal(18,6)") * col("volume")).over(wCum).cast("double") /
+          sum(col("volume")).over(wCum)).as("vwap"))
       .orderBy(col("symbol"), col("bar_ts"))
 
   /** Rate-of-change(10) and Momentum(10) (app/dashboard.py:503-504). */
@@ -141,8 +143,8 @@ object Indicators {
     val lag10 = lag(col("close"), 10).over(w)
     bars.select(col("symbol"), col("bar_ts"), col("close"),
         when(lag10.isNotNull && lag10 =!= 0,
-          round((col("close") / lag10 - 1) * 100 + lit(5e-9), 4)).as("roc"),
-        round(col("close") - lag10 + lit(5e-9), 4).as("mom"))
+          r4((col("close") / lag10 - 1) * 100)).as("roc"),
+        r4(col("close") - lag10).as("mom"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -167,7 +169,7 @@ object Indicators {
     val hi14 = max(col("high")).over(wr(14))
     val r = when(rn < 14, lit(null))
       .when(hi14 === lo14, lit(null))
-      .otherwise(round((hi14 - col("close")) / (hi14 - lo14) * -100 + lit(5e-9), 4))
+      .otherwise(r4((hi14 - col("close")) / (hi14 - lo14) * -100))
     bars.select(col("symbol"), col("bar_ts"), col("close"), r.as("williams_r"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
@@ -179,10 +181,10 @@ object Indicators {
     val aggs =
       cols.flatMap { c =>
         Seq(min(col(c)).as(s"min_$c"),
-          round(sum(col(c).cast("decimal(18,6)")).cast("double") / n + lit(5e-9), 4).as(s"avg_$c"),
+          r4(sum(col(c).cast("decimal(18,6)")).cast("double") / n).as(s"avg_$c"),
           max(col(c)).as(s"max_$c"))
       } ++ Seq(min(col("volume")).as("min_volume"),
-        round(sum(col("volume")).cast("double") / n + lit(5e-9), 4).as("avg_volume"),
+        r4(sum(col("volume")).cast("double") / n).as("avg_volume"),
         max(col("volume")).as("max_volume"))
     bars.groupBy(col("symbol")).agg(aggs.head, aggs.tail: _*)
       .orderBy(col("symbol"))
@@ -197,11 +199,11 @@ object Indicators {
       .groupBy(col("symbol"), col("week_start"))
       .agg(
         count(lit(1)).as("n_bars"),
-        round(min(col("range")) + lit(5e-9), 4).as("min_range"),
-        round(expr("percentile(range, array(0.25D, 0.5D, 0.75D))")(0) + lit(5e-9), 4).as("q1_range"),
-        round(expr("percentile(range, array(0.25D, 0.5D, 0.75D))")(1) + lit(5e-9), 4).as("med_range"),
-        round(expr("percentile(range, array(0.25D, 0.5D, 0.75D))")(2) + lit(5e-9), 4).as("q3_range"),
-        round(max(col("range")) + lit(5e-9), 4).as("max_range"))
+        r4(min(col("range"))).as("min_range"),
+        r4(expr("percentile(range, array(0.25D, 0.5D, 0.75D))")(0)).as("q1_range"),
+        r4(expr("percentile(range, array(0.25D, 0.5D, 0.75D))")(1)).as("med_range"),
+        r4(expr("percentile(range, array(0.25D, 0.5D, 0.75D))")(2)).as("q3_range"),
+        r4(max(col("range"))).as("max_range"))
       .orderBy(col("symbol"), col("week_start"))
   }
 
@@ -211,7 +213,7 @@ object Indicators {
     * (app/dashboard.py:434-456). */
   def volumeHeatmap(bars: DataFrame): DataFrame =
     bars.groupBy(dayName, hour(col("bar_ts")).cast("long").as("hour"))
-      .agg(round(sum(col("volume")).cast("double") / count(lit(1)) + lit(5e-9), 4).as("avg_volume"),
+      .agg(r4(sum(col("volume")).cast("double") / count(lit(1))).as("avg_volume"),
         sum(col("volume")).as("total_volume"))
       .orderBy(col("day_name"), col("hour"))
 
@@ -232,9 +234,9 @@ object Indicators {
       .agg(sum(col("sd")).as("sa"), sum(col("nd")).as("na"))
     d.join(s, Seq("symbol"))
       .select(col("symbol"), col("day_name"), col("nd").as("n_bars"),
-        round(col("sd").cast("double") / col("nd") + lit(5e-9), 4).as("avg_close"),
-        round(col("sd").cast("double") / col("nd")
-          - col("sa").cast("double") / col("na") + lit(5e-9), 4).as("dow_effect"))
+        r4(col("sd").cast("double") / col("nd")).as("avg_close"),
+        r4(col("sd").cast("double") / col("nd")
+          - col("sa").cast("double") / col("na")).as("dow_effect"))
       .orderBy(col("symbol"), col("day_name"))
   }
 
@@ -264,11 +266,11 @@ object Indicators {
         count(lit(1)).as("n_bars"))
       .select(col("symbol"), col("last_close"), col("n_bars"),
         when(col("last_open") =!= 0,
-          round((col("last_close") - col("last_open")) / col("last_open") * 100 + lit(5e-9), 4))
+          r4((col("last_close") - col("last_open")) / col("last_open") * 100))
           .as("price_change_pct"),
         col("last_volume"),
         when(col("mean_volume") =!= 0,
-          round((col("last_volume") - col("mean_volume")) / col("mean_volume") * 100 + lit(5e-9), 4))
+          r4((col("last_volume") - col("mean_volume")) / col("mean_volume") * 100))
           .as("volume_change_pct"))
       .orderBy(col("symbol"))
 
@@ -285,9 +287,9 @@ object Indicators {
         count(lit(1)).as("n_bars"),
         min(col("volume")).as("min_volume"), max(col("volume")).as("max_volume"))
       .select(col("symbol"), col("n_bars"), col("min_volume"), col("max_volume"),
-        round(element_at(col("q"), 1) + lit(5e-9), 4).as("p25"),
-        round(element_at(col("q"), 2) + lit(5e-9), 4).as("p50"),
-        round(element_at(col("q"), 3) + lit(5e-9), 4).as("p75"))
+        r4(element_at(col("q"), 1)).as("p25"),
+        r4(element_at(col("q"), 2)).as("p50"),
+        r4(element_at(col("q"), 3)).as("p75"))
       .orderBy(col("symbol"))
 
   /** Inverse of [[volumePivot]]: unpivot (melt) the wide day×hour matrix
@@ -352,7 +354,7 @@ object Indicators {
         sum(x * y).as("sxy"), sum(x * x).as("sx2"), sum(y * y).as("sy2"))
       .select(col("sym_a"), col("sym_b"), col("n"),
         when(denx > 0 && deny > 0,
-          round(num / sqrt(denx * deny) + lit(5e-9), 4)).as("corr"))
+          r4(num / sqrt(denx * deny))).as("corr"))
       .orderBy(col("sym_a"), col("sym_b"))
   }
 
@@ -367,8 +369,7 @@ object Indicators {
     bars.select(col("symbol"), col("bar_ts"), col("close"),
         max(col("close")).over(wPeak).as("peak"))
       .select(col("symbol"), col("bar_ts"), col("close"), col("peak"),
-        round((col("peak") - col("close")) / col("peak") * lit(100.0)
-          + lit(5e-9), 4).as("drawdown_pct"))
+        r4((col("peak") - col("close")) / col("peak") * lit(100.0)).as("drawdown_pct"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -389,8 +390,8 @@ object Indicators {
         (col("p75") + iqr * lit(1.5)).as("hi_fence"))
     bars.join(broadcast(fences), col("symbol") === col("f_symbol"))
       .select(col("symbol"), col("bar_ts"), col("volume"),
-        round(col("lo_fence") + lit(5e-9), 4).as("lo_fence"),
-        round(col("hi_fence") + lit(5e-9), 4).as("hi_fence"),
+        r4(col("lo_fence")).as("lo_fence"),
+        r4(col("hi_fence")).as("hi_fence"),
         (col("volume") < col("lo_fence") || col("volume") > col("hi_fence"))
           .as("is_outlier"))
       .orderBy(col("symbol"), col("bar_ts"))
@@ -415,7 +416,7 @@ object Indicators {
     bars.join(broadcast(stats), col("symbol") === col("s_symbol"))
       .filter(col("n") >= 2)
       .select(col("symbol"), col("bar_ts"), col("close"),
-        when(varr > 0, round(zRaw + lit(5e-9), 4)).as("z"),
+        when(varr > 0, r4(zRaw)).as("z"),
         (varr > 0 && abs(zRaw) > lit(thresh)).as("is_anomaly"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
@@ -444,11 +445,9 @@ object Indicators {
         // first seen when a zero tick landed as a day's FIRST bar at
         // 100x bench scale); NULL matches the oracle's CASE guards
         when(col("day_open") =!= 0.0,
-          round((col("day_close") - col("day_open")) / col("day_open") * lit(100.0)
-            + lit(5e-9), 4)).as("intraday_pct"),
+          r4((col("day_close") - col("day_open")) / col("day_open") * lit(100.0))).as("intraday_pct"),
         when(col("prev_close").isNotNull && col("prev_close") =!= 0.0,
-          round((col("day_open") - col("prev_close")) / col("prev_close") * lit(100.0)
-            + lit(5e-9), 4)).as("overnight_gap_pct"))
+          r4((col("day_open") - col("prev_close")) / col("prev_close") * lit(100.0))).as("overnight_gap_pct"))
       .orderBy(col("symbol"), col("bar_date"))
   }
 
@@ -477,7 +476,7 @@ object Indicators {
         sum(x).as("sx"), sum(y).as("sy"),
         sum(x * y).as("sxy"), sum(y * y).as("sy2"))
       .select(col("symbol"), col("n"),
-        when(den > 0, round(num / den + lit(5e-9), 4)).as("beta"))
+        when(den > 0, r4(num / den)).as("beta"))
       .orderBy(col("symbol"))
   }
 
@@ -488,9 +487,9 @@ object Indicators {
     val upper = max(col("high")).over(wr(n))
     val lower = min(col("low")).over(wr(n))
     bars.select(col("symbol"), col("bar_ts"), col("close"),
-        gated(n)(round(upper + lit(5e-9), 4)).as("dc_upper"),
-        gated(n)(round(lower + lit(5e-9), 4)).as("dc_lower"),
-        gated(n)(round((upper + lower) / 2 + lit(5e-9), 4)).as("dc_mid"))
+        gated(n)(r4(upper)).as("dc_upper"),
+        gated(n)(r4(lower)).as("dc_lower"),
+        gated(n)(r4((upper + lower) / 2)).as("dc_mid"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -522,9 +521,8 @@ object Indicators {
         when(col("rn") < n + 1, lit(null).cast("double"))
           .when(col("neg") === 0 && col("pos") === 0, lit(50.0))
           .when(col("neg") === 0, lit(100.0))
-          .otherwise(round(lit(100.0) - lit(100.0) /
-            (lit(1.0) + col("pos").cast("double") / col("neg").cast("double"))
-            + lit(5e-9), 4)).as("mfi"))
+          .otherwise(r4(lit(100.0) - lit(100.0) /
+            (lit(1.0) + col("pos").cast("double") / col("neg").cast("double")))).as("mfi"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -540,7 +538,7 @@ object Indicators {
     val prevOpen = lag(col("open"), 1).over(w)
     val prevClose = lag(col("close"), 1).over(w)
     bars.select(col("symbol"), col("bar_ts"), col("open"), col("close"),
-        round(body + lit(5e-9), 4).as("body"),
+        r4(body).as("body"),
         (rng > 0 && body * 10 <= rng).as("is_doji"),
         (rng > 0 && lowerWick >= body * 2 && upperWick <= body).as("is_hammer"),
         (prevClose.isNotNull && prevClose < prevOpen && col("close") > col("open") &&
@@ -615,11 +613,11 @@ object Indicators {
         lag(col("d_close"), 1).over(wd).as("pc"))
       .filter(col("ph").isNotNull)
       .select(col("symbol"), col("bar_date"),
-        round(p + lit(5e-9), 4).as("pivot"),
-        round(p * 2 - col("pl") + lit(5e-9), 4).as("r1"),
-        round(p * 2 - col("ph") + lit(5e-9), 4).as("s1"),
-        round(p + (col("ph") - col("pl")) + lit(5e-9), 4).as("r2"),
-        round(p - (col("ph") - col("pl")) + lit(5e-9), 4).as("s2"))
+        r4(p).as("pivot"),
+        r4(p * 2 - col("pl")).as("r1"),
+        r4(p * 2 - col("ph")).as("s1"),
+        r4(p + (col("ph") - col("pl"))).as("r2"),
+        r4(p - (col("ph") - col("pl"))).as("s2"))
       .orderBy(col("symbol"), col("bar_date"))
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parity.r4
+
 /** Second-wave technical indicators, extending the reference dashboard's
   * suite (reference app/dashboard.py:84-145) with the standard indicators
   * a user of a market-analytics engine expects next: Aroon, CCI, Chaikin
@@ -81,7 +83,7 @@ object IndicatorsExt {
         sum(col("y") * col("y")).over(fr).as("sy2"))
       .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") >= n && denx > 0 && deny > 0,
-          round(num / sqrt(denx * deny) + lit(5e-9), 4) + lit(0.0))
+          r4(num / sqrt(denx * deny)) + lit(0.0))
           .as("mkt_corr"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
@@ -100,13 +102,13 @@ object IndicatorsExt {
         (max(loKey).over(wr(n)) % PosBase).as("lo_pos"))
       .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") >= n,
-          round(lit(100.0) * (lit(n) - (col("rn") - col("hi_pos"))) / n + lit(5e-9), 4))
+          r4(lit(100.0) * (lit(n) - (col("rn") - col("hi_pos"))) / n))
           .as("aroon_up"),
         when(col("rn") >= n,
-          round(lit(100.0) * (lit(n) - (col("rn") - col("lo_pos"))) / n + lit(5e-9), 4))
+          r4(lit(100.0) * (lit(n) - (col("rn") - col("lo_pos"))) / n))
           .as("aroon_down"),
         when(col("rn") >= n,
-          round(lit(100.0) * (col("hi_pos") - col("lo_pos")) / n + lit(5e-9), 4) + lit(0.0))
+          r4(lit(100.0) * (col("hi_pos") - col("lo_pos")) / n) + lit(0.0))
           .as("aroon_osc"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
@@ -129,8 +131,8 @@ object IndicatorsExt {
           (acc, x) => acc + abs(x / lit(3.0) - col("sma_tp"))) / n).as("mad"))
       .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") >= n && col("mad") =!= 0.0,
-          round((col("tp3").cast("double") / lit(3.0) - col("sma_tp"))
-            / (lit(0.015) * col("mad")) + lit(5e-9), 4) + lit(0.0))
+          r4((col("tp3").cast("double") / lit(3.0) - col("sma_tp"))
+            / (lit(0.015) * col("mad"))) + lit(0.0))
           .as("cci"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
@@ -146,8 +148,8 @@ object IndicatorsExt {
         (mfm * col("volume").cast("double")).as("mfv"), col("volume"))
       .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") >= n,
-          round(sum(col("mfv")).over(wr(n))
-            / sum(col("volume")).over(wr(n)).cast("double") + lit(5e-9), 4) + lit(0.0))
+          r4(sum(col("mfv")).over(wr(n))
+            / sum(col("volume")).over(wr(n)).cast("double")) + lit(0.0))
           .as("cmf"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
@@ -172,8 +174,8 @@ object IndicatorsExt {
         ratio(7).as("a7"), ratio(14).as("a14"), ratio(28).as("a28"))
       .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") >= 29,
-          round(lit(100.0) * (lit(4.0) * col("a7") + lit(2.0) * col("a14") + col("a28"))
-            / lit(7.0) + lit(5e-9), 4))
+          r4(lit(100.0) * (lit(4.0) * col("a7") + lit(2.0) * col("a14") + col("a28"))
+            / lit(7.0)))
           .as("uo"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
@@ -199,9 +201,9 @@ object IndicatorsExt {
         when(col("rn") >= 11, avg(col("tr")).over(wr(10))).as("atr10"))
     atrSide
       .select(col("symbol"), col("bar_ts"), col("close"),
-        round(col("ema") + lit(5e-9), 4).as("kc_mid"),
-        when(col("rn") >= 11, round(col("ema") + lit(2.0) * col("atr10") + lit(5e-9), 4)).as("kc_upper"),
-        when(col("rn") >= 11, round(col("ema") - lit(2.0) * col("atr10") + lit(5e-9), 4)).as("kc_lower"))
+        r4(col("ema")).as("kc_mid"),
+        when(col("rn") >= 11, r4(col("ema") + lit(2.0) * col("atr10"))).as("kc_upper"),
+        when(col("rn") >= 11, r4(col("ema") - lit(2.0) * col("atr10"))).as("kc_lower"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -220,10 +222,10 @@ object IndicatorsExt {
       x => x,
       (e, x) => Array(e(1) * 0.5 + e(0) * 0.5, x(1), x(2), x(3)))
       .select(col("symbol"), col("bar_ts"),
-        round(col("ha_open_raw") + lit(5e-9), 4).as("ha_open"),
-        round(greatest(col("high"), col("ha_open_raw"), col("ha_close_raw")) + lit(5e-9), 4).as("ha_high"),
-        round(least(col("low"), col("ha_open_raw"), col("ha_close_raw")) + lit(5e-9), 4).as("ha_low"),
-        round(col("ha_close_raw") + lit(5e-9), 4).as("ha_close"))
+        r4(col("ha_open_raw")).as("ha_open"),
+        r4(greatest(col("high"), col("ha_open_raw"), col("ha_close_raw"))).as("ha_high"),
+        r4(least(col("low"), col("ha_open_raw"), col("ha_close_raw"))).as("ha_low"),
+        r4(col("ha_close_raw")).as("ha_close"))
       .orderBy(col("symbol"), col("bar_ts"))
 
   /** ADX(14) — Wilder's directional movement system as one [[Ema.fold]]
@@ -257,10 +259,10 @@ object IndicatorsExt {
         Array(d(0), d(1), d(2), d(2) * a + e(3) * b, str, spdm, smdm, x(0), x(1), x(2))
       })
       .select(col("symbol"), col("bar_ts"),
-        round(col("di_plus") + lit(5e-9), 4).as("di_plus"),
-        round(col("di_minus") + lit(5e-9), 4).as("di_minus"),
-        round(col("dx") + lit(5e-9), 4).as("dx"),
-        round(col("adx") + lit(5e-9), 4).as("adx"))
+        r4(col("di_plus")).as("di_plus"),
+        r4(col("di_minus")).as("di_minus"),
+        r4(col("dx")).as("dx"),
+        r4(col("adx")).as("adx"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -279,10 +281,9 @@ object IndicatorsExt {
         Array(e2 * a + e(0) * b, e(0), e1, e2)
       })
       .select(col("symbol"), col("bar_ts"),
-        round(col("ema") + lit(5e-9), 4).as("ema3"),
+        r4(col("ema")).as("ema3"),
         when(!isnan(col("p_ema")),
-          round(lit(100.0) * (col("ema") - col("p_ema")) / col("p_ema")
-            + lit(5e-9), 4)).as("trix"))
+          r4(lit(100.0) * (col("ema") - col("p_ema")) / col("p_ema"))).as("trix"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -316,7 +317,7 @@ object IndicatorsExt {
       x => Array(x(0), x(0), x(1)),
       (e, x) => Array(x(0) * a3 + e(0) * b3, x(0) * a10 + e(1) * b10, x(1)))
       .select(col("symbol"), col("bar_ts"), col("ad"),
-        round(col("e3") - col("e10") + lit(5e-9), 4).as("chaikin_osc"))
+        r4(col("e3") - col("e10")).as("chaikin_osc"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -335,12 +336,11 @@ object IndicatorsExt {
       .select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
         mid(9).as("tenkan"), mid(26).as("kijun"), mid(52).as("sb_raw"))
       .select(col("symbol"), col("bar_ts"),
-        round(col("tenkan") + lit(5e-9), 4).as("tenkan"),
-        round(col("kijun") + lit(5e-9), 4).as("kijun"),
-        round(lag((col("tenkan") + col("kijun")) / lit(2.0), 26).over(w)
-          + lit(5e-9), 4).as("senkou_a"),
-        round(lag(col("sb_raw"), 26).over(w) + lit(5e-9), 4).as("senkou_b"),
-        round(lead(col("close"), 26).over(w) + lit(5e-9), 4).as("chikou"))
+        r4(col("tenkan")).as("tenkan"),
+        r4(col("kijun")).as("kijun"),
+        r4(lag((col("tenkan") + col("kijun")) / lit(2.0), 26).over(w)).as("senkou_a"),
+        r4(lag(col("sb_raw"), 26).over(w)).as("senkou_b"),
+        r4(lead(col("close"), 26).over(w)).as("chikou"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -375,9 +375,9 @@ object IndicatorsExt {
       (nD * (nD - lit(1.0)))
     st.filter(col("n") >= 2)
       .select(col("symbol"), col("n"),
-        round(cov / lit(10000.0) + lit(5e-9), 4).as("autocov"),
+        r4(cov / lit(10000.0)).as("autocov"),
         when(cov < 0,
-          round(lit(2.0) * sqrt(-cov) / lit(100.0) + lit(5e-9), 4))
+          r4(lit(2.0) * sqrt(-cov) / lit(100.0)))
           .as("roll_spread"),
         (cov >= 0).as("no_bounce"))
       .orderBy(col("symbol"))
@@ -418,8 +418,7 @@ object IndicatorsExt {
         (col("lo").cast("double") / lit(100.0)).as("p05"),
         (col("hi").cast("double") / lit(100.0)).as("p95"),
         col("n_low"), col("n_high"),
-        round(col("sum_cl").cast("double") / (col("n") * lit(100.0))
-          + lit(5e-9), 4).as("winsor_mean"))
+        r4(col("sum_cl").cast("double") / (col("n") * lit(100.0))).as("winsor_mean"))
       .orderBy(col("symbol"))
   }
 
@@ -452,16 +451,16 @@ object IndicatorsExt {
     scanned.join(broadcast(stats), col("symbol") === col("s_symbol"))
       .filter(col("n") >= 2 && varr > 0)
       .select(col("symbol"), col("bar_ts"), col("close"),
-        round(col("ewma") + lit(5e-9), 4).as("ewma"),
-        round(mean + lit(5e-9), 4).as("center"),
-        round(mean + width + lit(5e-9), 4).as("ucl"),
-        round(mean - width + lit(5e-9), 4).as("lcl"),
+        r4(col("ewma")).as("ewma"),
+        r4(mean).as("center"),
+        r4(mean + width).as("ucl"),
+        r4(mean - width).as("lcl"),
         // flag on the 4dp-rounded-with-nudge values, the compare the
         // oracle makes: the flag agrees with the printed ewma/ucl/lcl
         // cells, and a last-ulp difference in either engine's band
         // arithmetic cannot flip it at the edge
-        (round(col("ewma") + lit(5e-9), 4) > round(mean + width + lit(5e-9), 4) ||
-          round(col("ewma") + lit(5e-9), 4) < round(mean - width + lit(5e-9), 4))
+        (r4(col("ewma")) > r4(mean + width) ||
+          r4(col("ewma")) < r4(mean - width))
           .as("out_of_control"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
@@ -485,9 +484,9 @@ object IndicatorsExt {
           Array(l1, b1)
         })
       .select(col("symbol"), col("bar_ts"),
-        round(col("level") + lit(5e-9), 4).as("level"),
-        round(col("trend") + lit(5e-9), 4).as("trend"),
-        round(col("level") + col("trend") + lit(5e-9), 4).as("forecast"))
+        r4(col("level")).as("level"),
+        r4(col("trend")).as("trend"),
+        r4(col("level") + col("trend")).as("forecast"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -525,9 +524,9 @@ object IndicatorsExt {
       .withColumn("sp", col("pref") - least(zero, min(col("pref")).over(wrun)))
       .withColumn("sn", greatest(zero, max(col("pref")).over(wrun)) - col("pref"))
     s.select(col("symbol"), col("bar_ts"), col("close"),
-        round(col("sp").cast("double") / (col("n") * lit(100.0)) + lit(5e-9), 4)
+        r4(col("sp").cast("double") / (col("n") * lit(100.0)))
           .as("cusum_pos"),
-        round(col("sn").cast("double") / (col("n") * lit(100.0)) + lit(5e-9), 4)
+        r4(col("sn").cast("double") / (col("n") * lit(100.0)))
           .as("cusum_neg"),
         (lit(20).cast("decimal(2,0)") * col("sp") > col("sc")).as("alarm_pos"),
         (lit(20).cast("decimal(2,0)") * col("sn") > col("sc")).as("alarm_neg"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parity.r4
+
 /** Market-calendar preprocessing (reference
   * src/preprocessing/preprocessing_pipeline.py).
   *
@@ -64,8 +66,8 @@ object Market {
     df.groupBy(col("symbol"), col(dateCol))
       .agg(max_by(col("close"), col("bar_ts")).as("eod_close"))
       .select(col("symbol"), col(dateCol),
-        round(sum(col("eod_close").cast("decimal(18,6)")).over(w).cast("double")
-            / count(col("eod_close")).over(w) + lit(5e-9), 4).as("eod_ma5"))
+        r4(sum(col("eod_close").cast("decimal(18,6)")).over(w).cast("double")
+            / count(col("eod_close")).over(w)).as("eod_ma5"))
   }
 
   /** Bars restricted to ET market hours. */
@@ -139,10 +141,8 @@ object Market {
     val eod = eodMa5On(mh, "et_date")
     mh.select(col("symbol"), col("bar_ts"), col("open"), col("high"),
         col("low"), col("close"), col("volume"), col("et_date"), col("et_time"),
-        round(sum(dec).over(w5).cast("double") / count(col("close")).over(w5)
-          + lit(5e-9), 4).as("ma5"),
-        round(sum(dec).over(wAll).cast("double") / count(col("close")).over(wAll)
-          + lit(5e-9), 4).as("cma"))
+        r4(sum(dec).over(w5).cast("double") / count(col("close")).over(w5)).as("ma5"),
+        r4(sum(dec).over(wAll).cast("double") / count(col("close")).over(wAll)).as("cma"))
       .join(eod, Seq("symbol", "et_date"))
       .select(col("symbol"), col("bar_ts"), col("open"), col("high"),
         col("low"), col("close"), col("volume"), col("et_date"), col("et_time"),

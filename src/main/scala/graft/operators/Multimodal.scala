@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parity.r4
+
 /** Multimodal-column plumbing: opaque binary payloads + typed metadata,
   * decoded per-partition in batches.
   *
@@ -345,12 +347,12 @@ object Multimodal {
     meta.groupBy(col("fmt"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("byte_len")).as("total_bytes"),
-        round(sum(col("width")).cast("double") / count(lit(1)) + lit(5e-9), 4)
+        r4(sum(col("width")).cast("double") / count(lit(1)))
           .as("avg_width"),
-        round(sum(col("height")).cast("double") / count(lit(1)) + lit(5e-9), 4)
+        r4(sum(col("height")).cast("double") / count(lit(1)))
           .as("avg_height"),
         sum(col("duration_ms")).as("total_duration_ms"),
-        round(sum(col("sample_rate")).cast("double") / count(lit(1)) + lit(5e-9), 4)
+        r4(sum(col("sample_rate")).cast("double") / count(lit(1)))
           .as("avg_sample_rate"))
       .orderBy(col("fmt"))
   }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parity.r4
+
 /** Range (interval) join: match each point row to the interval rows with
   * `lo <= point < hi`, optionally under extra equi-keys.
   *
@@ -74,9 +76,8 @@ object RangeJoin {
         equiKeys = Seq("symbol" -> "band_symbol"))
       .groupBy(col("symbol"), col("band"))
       .agg(count(lit(1)).as("n_bars"),
-        round(min(col("lo")) + lit(5e-9), 4).as("band_lo"),
-        round(sum(col("close").cast("decimal(18,6)")).cast("double") / count(lit(1))
-          + lit(5e-9), 4).as("avg_close"),
+        r4(min(col("lo"))).as("band_lo"),
+        r4(sum(col("close").cast("decimal(18,6)")).cast("double") / count(lit(1))).as("avg_close"),
         sum(col("volume")).cast("long").as("total_volume"))
       .orderBy(col("symbol"), col("band"))
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parity.r4
+
 /** Relational core: the BigQuery-SQL surface of the reference re-expressed
   * declaratively (ingest guards, dedup, time-range loads) plus the
   * general aggregate/join/window capabilities any engine user needs.
@@ -31,9 +33,9 @@ object Relational {
         round(sum(price), 2).cast("double").as("sum_base_price"),
         round(sum(discPrice), 2).cast("double").as("sum_disc_price"),
         round(sum((discPrice * taxF).cast("decimal(18,6)")), 2).cast("double").as("sum_charge"),
-        round(sum(qty).cast("double") / n + lit(5e-9), 4).as("avg_qty"),
-        round(sum(price).cast("double") / n + lit(5e-9), 4).as("avg_price"),
-        round(sum(col("l_discount").cast("decimal(18,6)")).cast("double") / n + lit(5e-9), 4).as("avg_disc"),
+        r4(sum(qty).cast("double") / n).as("avg_qty"),
+        r4(sum(price).cast("double") / n).as("avg_price"),
+        r4(sum(col("l_discount").cast("decimal(18,6)")).cast("double") / n).as("avg_disc"),
         n.as("count_order"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
   }
@@ -54,7 +56,7 @@ object Relational {
       .groupBy(col("r_name"), col("n_name"))
       .agg(
         round(sum(col("o_totalprice").cast("decimal(18,6)")), 2).cast("double").as("revenue"),
-        round(sum(col("o_totalprice").cast("decimal(18,6)")).cast("double") / count(lit(1)) + lit(5e-9), 4).as("avg_order"),
+        r4(sum(col("o_totalprice").cast("decimal(18,6)")).cast("double") / count(lit(1))).as("avg_order"),
         count(lit(1)).as("n_orders"))
       .orderBy(col("r_name"), col("n_name"))
 
@@ -235,13 +237,12 @@ object Relational {
     * the correctness claim. */
   def saltedSymbolJoin(events: DataFrame): DataFrame = {
     val stats = events.groupBy(col("event_type"))
-      .agg(round(sum(col("value").cast("decimal(18,6)")).cast("double") / count(lit(1))
-          + lit(5e-9), 4).as("sym_avg"),
+      .agg(r4(sum(col("value").cast("decimal(18,6)")).cast("double") / count(lit(1))).as("sym_avg"),
         count(lit(1)).as("sym_n"))
     Skew.saltedJoin(events, stats, "event_type", "event_id")
       .select(col("event_id"), col("ts"), col("event_type"), col("value"),
         col("sym_avg"), col("sym_n"),
-        round(col("value") - col("sym_avg") + lit(5e-9), 4).as("dev"))
+        r4(col("value") - col("sym_avg")).as("dev"))
       .orderBy(col("event_id"))
   }
 
@@ -296,7 +297,7 @@ object Relational {
         sum(col("is_new")).over(w.rowsBetween(Window.unboundedPreceding, 0)).as("session_id"))
       .groupBy(col("user_id"), col("session_id"))
       .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
-        count(lit(1)).as("n_events"), round(sum(col("value")) + lit(5e-9), 4).as("total_value"))
+        count(lit(1)).as("n_events"), r4(sum(col("value"))).as("total_value"))
       .orderBy(col("user_id"), col("session_id"))
   }
 
@@ -398,8 +399,7 @@ object Relational {
       .select(col("o_year"),
         round(col("nation_rev"), 2).cast("double").as("nation_revenue"),
         round(col("total_rev"), 2).cast("double").as("total_revenue"),
-        round(col("nation_rev").cast("double") / col("total_rev").cast("double")
-          + lit(5e-9), 4).as("mkt_share"))
+        r4(col("nation_rev").cast("double") / col("total_rev").cast("double")).as("mkt_share"))
       .orderBy(col("o_year"))
   }
 
@@ -484,7 +484,7 @@ object Relational {
         sum(when(col("l_quantity") <= col("p50_approx"), 1L).otherwise(0L)).as("rank_hi"))
     g.join(ranks, Seq("l_returnflag"))
       .select(col("l_returnflag"), col("n"),
-        round(col("p50_exact_raw") + lit(5e-9), 4).as("p50_exact"),
+        r4(col("p50_exact_raw")).as("p50_exact"),
         (col("rank_lo") * 100 <= col("n") * 51 &&
           col("rank_hi") * 100 >= col("n") * 49).as("approx_in_band"))
       .orderBy(col("l_returnflag"))
@@ -624,7 +624,7 @@ object Relational {
       .withColumn("gap_us", unix_micros(col("ts")) - col("last_click_us"))
       .select(col("user_id"), col("purchase_id"),
         col("ts").as("purchase_ts"),
-        round(col("value") + lit(5e-9), 4).as("value"),
+        r4(col("value")).as("value"),
         when(col("gap_us") <= winUs, col("last_click_id"))
           .as("attributed_click_id"),
         when(col("gap_us") <= winUs, col("gap_us")).as("gap_us"))
@@ -771,8 +771,7 @@ object Relational {
       .agg(count(lit(1)).as("n"))
       .withColumn("n_from", sum(col("n")).over(wp))
       .select(col("prev_type"), col("next_type"), col("n"),
-        round(col("n").cast("double") / col("n_from").cast("double")
-          + lit(5e-9), 4).as("frac"))
+        r4(col("n").cast("double") / col("n_from").cast("double")).as("frac"))
       .orderBy(col("prev_type"), col("next_type"))
   }
 
@@ -814,7 +813,7 @@ object Relational {
     val r3 = iterate(iterate(iterate(
       nodes.select(col("node"), lit(1000000L).as("r")))))
     r3.select(col("node").as("event_type"), col("r").as("rank_micro"),
-        round(col("r").cast("double") / lit(1000000.0) + lit(5e-9), 4)
+        r4(col("r").cast("double") / lit(1000000.0))
           .as("pagerank"))
       .orderBy(col("event_type"))
   }
@@ -837,8 +836,7 @@ object Relational {
       .agg(count(lit(1)).as("n_users"))
       .join(broadcast(sizes), Seq("cohort_date"))
       .select(col("cohort_date"), col("day_offset"), col("n_users"), col("cohort_size"),
-        round(col("n_users").cast("double") / col("cohort_size").cast("double")
-          + lit(5e-9), 4).as("retention_pct"))
+        r4(col("n_users").cast("double") / col("cohort_size").cast("double")).as("retention_pct"))
       .orderBy(col("cohort_date"), col("day_offset"))
   }
 
@@ -873,8 +871,8 @@ object Relational {
       .agg(count(lit(1)).as("n_small"),
         round(sum(col("l_extendedprice").cast("decimal(18,6)")), 2)
           .cast("double").as("small_revenue"),
-        round(first(col("qty_sum")).cast("double") /
-          first(col("cnt")).cast("double") + lit(5e-9), 4).as("avg_qty"))
+        r4(first(col("qty_sum")).cast("double") /
+          first(col("cnt")).cast("double")).as("avg_qty"))
       .orderBy(col("l_partkey"))
   }
 
@@ -902,8 +900,8 @@ object Relational {
         > lit(shareBp.toDouble / 10000.0))
       .select(col("l_partkey"),
         round(col("rev_exact"), 2).cast("double").as("revenue"),
-        round((col("rev_exact").cast("double") / col("tot_exact").cast("double"))
-          * 100 + lit(5e-9), 4).as("pct_of_total"))
+        r4((col("rev_exact").cast("double") / col("tot_exact").cast("double"))
+          * 100).as("pct_of_total"))
       .orderBy(col("l_partkey"))
   }
 
@@ -927,8 +925,8 @@ object Relational {
       .select(col("ship_month"),
         round(col("promo_exact"), 2).cast("double").as("promo_revenue"),
         round(col("total_exact"), 2).cast("double").as("total_revenue"),
-        round(col("promo_exact").cast("double") / col("total_exact").cast("double")
-          * 100 + lit(5e-9), 4).as("promo_pct"))
+        r4(col("promo_exact").cast("double") / col("total_exact").cast("double")
+          * 100).as("promo_pct"))
       .orderBy(col("ship_month"))
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parity.r4
+
 /** Semi-structured (JSON) column processing over the events table.
   *
   * The reference's entire ingest path is JSON-shaped: it parses the
@@ -54,7 +56,7 @@ object SemiStructured {
         // an ANSI long-sum overflow here would be an asymmetric failure
         // at corpus scale; the decimal→double cast is the same nearest
         // double as long→double for every exactly-representable sum.
-        round(sum(col("k").cast("decimal(38,0)")).cast("double") / count(col("k")) + lit(5e-9), 4).as("avg_k"),
+        r4(sum(col("k").cast("decimal(38,0)")).cast("double") / count(col("k"))).as("avg_k"),
         round(sum(col("value").cast("decimal(18,6)")), 2).cast("double").as("sum_value"))
       .orderBy(col("event_type"))
 
@@ -69,8 +71,8 @@ object SemiStructured {
       .groupBy(expr("k div 10 - CASE WHEN k % 10 < 0 THEN 1 ELSE 0 END").as("k_bucket"))
       .agg(
         count(lit(1)).as("n"),
-        round(sum(col("value").cast("decimal(18,6)")).cast("double") /
-          count(lit(1)) + lit(5e-9), 4).as("avg_value"))
+        r4(sum(col("value").cast("decimal(18,6)")).cast("double") /
+          count(lit(1))).as("avg_value"))
       .orderBy(col("k_bucket"))
 
   /** Top-3 most frequent k per event_type. Rank over the (type, k)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.operators.Parity.r4
 
 /** Similarity search over the `embeddings` table (Array[Float], dim 64).
   *
@@ -209,7 +210,7 @@ object Similarity {
     cand.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
       .select(col("q_id"), col("nn_id"),
-        round(col("cos") + lit(5e-9), 4).as("cos"), col("rk"))
+        r4(col("cos")).as("cos"), col("rk"))
       .orderBy(col("q_id"), col("rk"))
   }
 
@@ -349,8 +350,7 @@ object Similarity {
       .groupBy(col("cell"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"),
-        round(sum(col("n_chars")).cast("double") / count(lit(1)).cast("double")
-          + lit(5e-9), 4).as("avg_chars"),
+        r4(sum(col("n_chars")).cast("double") / count(lit(1)).cast("double")).as("avg_chars"),
         countDistinct(col("lang")).as("n_langs"))
       .orderBy(col("cell"), col("source"))
   }
@@ -389,7 +389,7 @@ object Similarity {
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
       .select(col("q_id"), col("nn_id"), col("cell"),
-        round(col("cos") + lit(5e-9), 4).as("cos"), col("rk"))
+        r4(col("cos")).as("cos"), col("rk"))
       .orderBy(col("q_id"), col("rk"))
   }
 
@@ -481,7 +481,7 @@ object Similarity {
       .filter(col("cos").isNotNull && col("cos") >= threshold)
       .distinct()
       .select(col("vec_a"), col("vec_b"),
-        round(col("cos") + lit(5e-9), 4).as("cos"))
+        r4(col("cos")).as("cos"))
       .orderBy(col("vec_a"), col("vec_b"))
   }
 
@@ -868,7 +868,7 @@ object Similarity {
     refined.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
       .select(col("q_id"), col("nn_id"),
-        round(col("cos") + lit(5e-9), 4).as("cos"), col("ark"), col("rk"))
+        r4(col("cos")).as("cos"), col("ark"), col("rk"))
       .orderBy(col("q_id"), col("rk"))
   }
 
@@ -1000,12 +1000,12 @@ object Similarity {
         coalesce(col("h_adc"), lit(0L)).as("hits_adc"),
         coalesce(col("h_ref"), lit(0L)).as("hits_refined"),
         coalesce(col("h_graph"), lit(0L)).as("hits_graph"),
-        round(coalesce(col("h_adc"), lit(0L)).cast("double")
-          / col("n_brute").cast("double") + lit(5e-9), 4).as("recall_adc"),
-        round(coalesce(col("h_ref"), lit(0L)).cast("double")
-          / col("n_brute").cast("double") + lit(5e-9), 4).as("recall_refined"),
-        round(coalesce(col("h_graph"), lit(0L)).cast("double")
-          / col("n_brute").cast("double") + lit(5e-9), 4).as("recall_graph"))
+        r4(coalesce(col("h_adc"), lit(0L)).cast("double")
+          / col("n_brute").cast("double")).as("recall_adc"),
+        r4(coalesce(col("h_ref"), lit(0L)).cast("double")
+          / col("n_brute").cast("double")).as("recall_refined"),
+        r4(coalesce(col("h_graph"), lit(0L)).cast("double")
+          / col("n_brute").cast("double")).as("recall_graph"))
       .orderBy(col("q_id"))
   }
 
@@ -1224,7 +1224,7 @@ object Similarity {
     beam.withColumn("rk", row_number().over(wb).cast("long"))
       .filter(col("rk") <= k)
       .select(col("q_id"), col("nn_id"),
-        round(col("cos") + lit(5e-9), 4).as("cos"), col("rk"))
+        r4(col("cos")).as("cos"), col("rk"))
       .orderBy(col("q_id"), col("rk"))
   }
 
@@ -1313,7 +1313,7 @@ object Similarity {
         struct(col("cos"), negate(col("vec_b")))).as("best"))
       .select(col("vec_a").as("vec_id"), col("cell"),
         col("best.dup_of").as("dup_of"),
-        round(col("best.cos") + lit(5e-9), 4).as("cos"))
+        r4(col("best.cos")).as("cos"))
       .orderBy(col("vec_id"))
   }
 
@@ -1327,7 +1327,7 @@ object Similarity {
     a.join(b, col("b_id") === col("vec_b"))
       .select(col("vec_a"), col("vec_b"), expr("cosine_sim(va, vb)").as("cos"))
       .filter(col("cos") >= threshold)
-      .select(col("vec_a"), col("vec_b"), round(col("cos") + lit(5e-9), 4).as("cos"))
+      .select(col("vec_a"), col("vec_b"), r4(col("cos")).as("cos"))
       .orderBy(col("vec_a"), col("vec_b"))
   }
 }

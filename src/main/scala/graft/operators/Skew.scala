@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parity.r4
+
 /** Skew-handling utilities for hot join keys.
   *
   * AQE's skew-join split handles sort-merge skew at runtime; salting is
@@ -58,9 +60,9 @@ object Skew {
       .select(col(key), col("cnt"),
         expr("(cnt * 1000000L) DIV n_rows").as("share_ppm"),
         col("n_keys"), col("n_rows"), col("max_cnt"),
-        round(col("p50_raw") + lit(5e-9), 4).as("p50_cnt"),
-        round(col("p99_raw") + lit(5e-9), 4).as("p99_cnt"),
-        round(col("max_cnt").cast("double") / col("p50_raw") + lit(5e-9), 4)
+        r4(col("p50_raw")).as("p50_cnt"),
+        r4(col("p99_raw")).as("p99_cnt"),
+        r4(col("max_cnt").cast("double") / col("p50_raw"))
           .as("skew_ratio"))
       .orderBy(col("cnt").desc, col(key))
   }

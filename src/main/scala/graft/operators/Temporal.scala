@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parity.r4
+
 /** Time-dimension warehouse operators over the raw tick stream: TWAP,
   * SCD Type-2 interval builds, rolling active-user counts, and the
   * algebraic partial-aggregate merge behind incremental materialized
@@ -49,8 +51,8 @@ object Temporal {
         sum((col("pc") * col("dur_us")).cast("decimal(38,0)")).as("pv"))
       .select(col("symbol"), col("day"), col("n_ticks"), col("dur_total"),
         when(col("dur_total") > 0,
-          round(col("pv").cast("double") / col("dur_total").cast("double")
-            / lit(100.0) + lit(5e-9), 4)).as("twap"))
+          r4(col("pv").cast("double") / col("dur_total").cast("double")
+            / lit(100.0))).as("twap"))
       .orderBy(col("symbol"), col("day"))
   }
 
@@ -149,7 +151,7 @@ object Temporal {
         // q_large_orders device). The cast is exact for |total| < 2^53/100.
         col("total").cast("double").as("total"),
         col("vmin"), col("vmax"),
-        round(col("total").cast("double") / col("n_rows") + lit(5e-9), 4).as("vavg"))
+        r4(col("total").cast("double") / col("n_rows")).as("vavg"))
       .orderBy(col("event_type"), col("day"))
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parity.r4
+
 /** Text-analysis operators for LLM-data pipelines over `documents`.
   *
   * All heuristics are deliberately expressible as codegen'd SQL
@@ -65,10 +67,9 @@ object TextAnalysis {
         sort_array(collect_list(struct(col("w"), col("c")))).as("arr"))
       .crossJoin(broadcast(tot))
       .select(col("doc_id"), col("n_tokens"),
-        round(log(col("t").cast("double"))
+        r4(log(col("t").cast("double"))
           - expr("aggregate(arr, cast(0.0 as double), (acc, s) -> acc + ln(cast(s.c as double)))")
-            / col("n_tokens").cast("double")
-          + lit(5e-9), 4).as("lm_score"))
+            / col("n_tokens").cast("double")).as("lm_score"))
     docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"), col("lm_score"))
@@ -137,7 +138,7 @@ object TextAnalysis {
         col("s.n_tokens").as("n_tokens"),
         col("s.n_unk").as("n_unk"),
         when(col("s.n_words") > 0,
-          round(col("s.n_unk").cast("double") / col("s.n_words") + lit(5e-9), 4))
+          r4(col("s.n_unk").cast("double") / col("s.n_words")))
           .otherwise(lit(0.0)).as("oov_rate"))
       .orderBy(col("doc_id"))
   }
@@ -160,11 +161,9 @@ object TextAnalysis {
       .select(col("source"), col("n_docs"), col("n_words"),
         col("n_tokens"), col("n_unk"),
         when(col("n_words") > 0,
-          round(col("n_unk").cast("double") / col("n_words").cast("double")
-            + lit(5e-9), 4)).otherwise(lit(0.0)).as("oov_rate"),
+          r4(col("n_unk").cast("double") / col("n_words").cast("double"))).otherwise(lit(0.0)).as("oov_rate"),
         when(col("n_words") > 0,
-          round(col("n_tokens").cast("double") / col("n_words").cast("double")
-            + lit(5e-9), 4)).otherwise(lit(0.0)).as("fertility"))
+          r4(col("n_tokens").cast("double") / col("n_words").cast("double"))).otherwise(lit(0.0)).as("fertility"))
       .orderBy(col("source"))
   }
 
@@ -179,13 +178,13 @@ object TextAnalysis {
       .select(col("doc_id"),
         nChars.as("n_chars_calc"), nTok.as("n_tokens"),
         nStop.as("n_stopwords"), nPunct.as("n_punct"),
-        when(nTok > 0, round(nNonWs.cast("double") / nTok + lit(5e-9), 4)).as("avg_word_len"),
-        when(nChars > 0, round(nPunct.cast("double") / nChars + lit(5e-9), 4)).as("punct_ratio"),
-        when(nTok > 0, round(nStop.cast("double") / nTok + lit(5e-9), 4)).as("stop_ratio"),
+        when(nTok > 0, r4(nNonWs.cast("double") / nTok)).as("avg_word_len"),
+        when(nChars > 0, r4(nPunct.cast("double") / nChars)).as("punct_ratio"),
+        when(nTok > 0, r4(nStop.cast("double") / nTok)).as("stop_ratio"),
         when(nTok > 0 && nChars > 0,
-          round(lit(0.4) * (nStop.cast("double") / nTok)
+          r4(lit(0.4) * (nStop.cast("double") / nTok)
             + lit(0.3) * least(nTok.cast("double") / 100, lit(1.0))
-            + lit(0.3) * (lit(1.0) - nPunct.cast("double") / nChars) + lit(5e-9), 4))
+            + lit(0.3) * (lit(1.0) - nPunct.cast("double") / nChars)))
           .as("quality_score"))
       .orderBy(col("doc_id"))
   }
@@ -237,11 +236,10 @@ object TextAnalysis {
     base.join(bigrams, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_words"),
         when(col("n_words") > 0,
-          round((col("n_words") - col("n_distinct")).cast("double") / col("n_words")
-            + lit(5e-9), 4)).as("dup_word_frac"),
+          r4((col("n_words") - col("n_distinct")).cast("double") / col("n_words"))).as("dup_word_frac"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         when(col("n_bigrams") > 0,
-          round(col("top_bigram_n").cast("double") / col("n_bigrams") + lit(5e-9), 4))
+          r4(col("top_bigram_n").cast("double") / col("n_bigrams")))
           .as("top_bigram_frac"))
       .orderBy(col("doc_id"))
   }
@@ -305,11 +303,9 @@ object TextAnalysis {
         count(lit(1)).as("n_distinct"),
         sum(col("tf") * col("tf")).as("sum_tf2"))
       .select(col("doc_id"), col("n_tokens"), col("n_distinct"),
-        round(col("n_distinct").cast("double") / col("n_tokens").cast("double")
-          + lit(5e-9), 4).as("ttr"),
-        round(lit(1.0) - col("sum_tf2").cast("double")
-          / (col("n_tokens") * col("n_tokens")).cast("double")
-          + lit(5e-9), 4).as("gini"))
+        r4(col("n_distinct").cast("double") / col("n_tokens").cast("double")).as("ttr"),
+        r4(lit(1.0) - col("sum_tf2").cast("double")
+          / (col("n_tokens") * col("n_tokens")).cast("double")).as("gini"))
       .orderBy(col("doc_id"))
   }
 
@@ -416,7 +412,7 @@ object TextAnalysis {
     }.reduce(_ + _)
     base.crossJoin(broadcast(stats))
       .select(Seq(col("doc_id"), col("dl"),
-        round(score + lit(5e-9), 4).as("score")) ++
+        r4(score).as("score")) ++
         terms.map(t => col(s"tf_$t")): _*)
       .filter(terms.map(t => col(s"tf_$t")).reduce(_ + _) > 0)
       .orderBy(col("score").desc, col("doc_id"))
@@ -434,7 +430,7 @@ object TextAnalysis {
     docs.cube(col("source"), col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).cast("long").as("total_chars"),
-        round(sum(col("n_chars")).cast("double") / count(lit(1)) + lit(5e-9), 4).as("avg_chars"),
+        r4(sum(col("n_chars")).cast("double") / count(lit(1))).as("avg_chars"),
         grouping(col("source")).cast("long").as("g_source"),
         grouping(col("lang")).cast("long").as("g_lang"))
       .select(coalesce(col("source"), lit("ALL")).as("source"),
@@ -494,8 +490,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_ngrams"),
         sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L)).as("n_novel"))
       .select(col("doc_id"), col("n_ngrams"), col("n_novel"),
-        round(col("n_novel").cast("double") / col("n_ngrams").cast("double")
-          + lit(5e-9), 4).as("novelty"))
+        r4(col("n_novel").cast("double") / col("n_ngrams").cast("double")).as("novelty"))
       .orderBy(col("doc_id"))
   }
 
@@ -529,7 +524,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"), sum(col("ws_tokens")).as("total_tokens"))
       .select(col("bucket"), (col("bucket") * binWidth).as("bucket_lo"),
         col("n_docs"), col("total_tokens"),
-        round(col("total_tokens").cast("double") / col("n_docs").cast("double")
-          + lit(5e-9), 4).as("avg_tokens"))
+        r4(col("total_tokens").cast("double") / col("n_docs").cast("double")).as("avg_tokens"))
       .orderBy(col("bucket"))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parity.r4
+
 /** Training-data export operators: the steps between a cleaned corpus and
   * a training run at 100 TB.
   *
@@ -115,7 +117,7 @@ object TrainingData {
     docs.join(broadcast(withRate), Seq("source"))
       .select(col("doc_id"), col("source"), col("n_source"),
         bucket.as("bucket"),
-        round(col("rate") + lit(5e-9), 4).as("rate"),
+        r4(col("rate")).as("rate"),
         (bucket.cast("double") < col("rate") * 100).as("keep"))
       .orderBy(col("doc_id"))
   }
@@ -133,7 +135,7 @@ object TrainingData {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("tokens")).as("pack_tokens"))
       .select(col("shard"), col("pack_id"), col("n_docs"), col("pack_tokens"),
-        round(col("pack_tokens").cast("double") / packTokens + lit(5e-9), 4)
+        r4(col("pack_tokens").cast("double") / packTokens)
           .as("fill"))
       .orderBy(col("shard"), col("pack_id"))
 
@@ -336,8 +338,8 @@ object TrainingData {
       .join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_ngrams"),
         coalesce(col("n_in_corpus"), lit(0L)).as("n_in_corpus"),
-        round(coalesce(col("n_in_corpus"), lit(0L)).cast("double")
-          / col("n_ngrams").cast("double") + lit(5e-9), 4).as("overlap_frac"))
+        r4(coalesce(col("n_in_corpus"), lit(0L)).cast("double")
+          / col("n_ngrams").cast("double")).as("overlap_frac"))
       .orderBy(col("doc_id"))
   }
 
@@ -430,8 +432,7 @@ object TrainingData {
       .select(col("doc_id"),
         coalesce(col("n_feats"), lit(0L)).as("n_feats"),
         coalesce(col("score_nano"), lit(0L)).as("score_nano"),
-        round(coalesce(col("score_nano"), lit(0L)).cast("double") / lit(1e9)
-          + lit(5e-9), 4).as("score"),
+        r4(coalesce(col("score_nano"), lit(0L)).cast("double") / lit(1e9)).as("score"),
         (coalesce(col("score_nano"), lit(0L)) > 0L).as("pred_keep"))
       .orderBy(col("doc_id"))
   }
@@ -524,7 +525,7 @@ object TrainingData {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_feats"), sum(col("w_nano")).as("log_w_nano"))
       .select(col("doc_id"), col("n_feats"), col("log_w_nano"),
-        round(col("log_w_nano").cast("double") / lit(1e9) + lit(5e-9), 4).as("log_w"))
+        r4(col("log_w_nano").cast("double") / lit(1e9)).as("log_w"))
       .orderBy(col("log_w_nano").desc, col("doc_id"))
       .limit(k)
   }

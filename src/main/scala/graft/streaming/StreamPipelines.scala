@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Parity.r4
 import graft.operators.Scope
 
 /** Structured Streaming pipelines mirroring the reference's streaming
@@ -77,7 +78,7 @@ object StreamPipelines {
     events
       .groupBy(window(col("ts"), "10 minutes").as("win"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")) + lit(5e-9), 4).as("sum_value"),
+        r4(sum(col("value"))).as("sum_value"),
         min(col("value")).as("min_value"),
         max(col("value")).as("max_value"))
       .select(col("win.start").as("win_start"), col("event_type"),
@@ -102,8 +103,7 @@ object StreamPipelines {
     events
       .groupBy(col("user_id"), session_window(col("ts"), gap).as("sw"))
       .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value").cast("decimal(18,6)")).cast("double")
-          + lit(5e-9), 4).as("total_value"))
+        r4(sum(col("value").cast("decimal(18,6)")).cast("double")).as("total_value"))
       .select(col("user_id"), col("sw.start").as("session_start"),
         col("sw.end").as("session_end"), col("n_events"), col("total_value"))
 
@@ -130,8 +130,7 @@ object StreamPipelines {
       .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("win"),
         col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value").cast("decimal(18,6)")).cast("double")
-          + lit(5e-9), 4).as("sum_value"),
+        r4(sum(col("value").cast("decimal(18,6)")).cast("double")).as("sum_value"),
         min(col("value")).as("min_value"),
         max(col("value")).as("max_value"))
       .select(col("win.start").as("win_start"), col("win.end").as("win_end"),
