@@ -16,12 +16,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * vector into `dim` (cent_id, d, x) rows, per-dim `round(avg(x), 6)`,
   * then re-collected the array — a dim× row amplification plus TWO
   * shuffles per Lloyd iteration. This buffer keeps one running
-  * double[dim] sum + count per group, merges element-wise, and rounds
-  * each mean exactly as Spark SQL's `round(_, 6)` does (BigDecimal
-  * HALF_UP on the double's decimal representation), so the result is
-  * identical to the exploded form up to the same summation-order drift
+  * double[dim] sum and one non-null count per dimension, merges
+  * element-wise, and finishes each dimension as Spark SQL's
+  * `round(avg(v[i]), 6)` does: null elements and null vectors are
+  * skipped, a dimension with no value is null, a NaN or ±Inf mean comes
+  * back unchanged, and a finite one rounds BigDecimal HALF_UP on the
+  * double's decimal representation. The result equals the per-dimension
+  * `array(round(avg(v[0]), 6), …)` up to the same summation-order drift
   * the 6dp rounding is there to absorb (the determinism device the
-  * Lloyd oracle mirrors). One shuffle, no amplification. */
+  * Lloyd oracle mirrors); a group with no non-null vector has no
+  * dimension and is null. One shuffle, no amplification. */
 case class VecMeanAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
@@ -38,25 +42,28 @@ case class VecMeanAgg(
     case t => TypeCheckResult.TypeCheckFailure(
       s"vec_mean6 requires array<double>, got ${t.catalogString}")
   }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "vec_mean6"
 
-  override def createAggregationBuffer(): VecMeanAgg.Buf = VecMeanAgg.Buf(null, 0L)
+  override def createAggregationBuffer(): VecMeanAgg.Buf = VecMeanAgg.Buf(null, null)
 
   override def update(buf: VecMeanAgg.Buf, input: InternalRow): VecMeanAgg.Buf = {
     val v = child.eval(input)
     if (v == null) return buf
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
-    val sums = if (buf.sums == null) new Array[Double](n) else buf.sums
+    val b = if (buf.sums == null) VecMeanAgg.Buf(new Array[Double](n), new Array[Long](n)) else buf
     // Registered as a general session function, so mixed-length input is
     // reachable — fail fast instead of silently truncating dimensions.
-    if (n != sums.length) throw new IllegalArgumentException(
-      s"vec_mean6: vector length $n != group's first vector length ${sums.length}")
+    if (n != b.sums.length) throw new IllegalArgumentException(
+      s"vec_mean6: vector length $n != group's first vector length ${b.sums.length}")
     var i = 0
-    while (i < n) { sums(i) += arr.getDouble(i); i += 1 }
-    VecMeanAgg.Buf(sums, buf.count + 1)
+    while (i < n) {
+      if (!arr.isNullAt(i)) { b.sums(i) += arr.getDouble(i); b.counts(i) += 1 }
+      i += 1
+    }
+    b
   }
 
   override def merge(a: VecMeanAgg.Buf, b: VecMeanAgg.Buf): VecMeanAgg.Buf = {
@@ -65,42 +72,45 @@ case class VecMeanAgg(
     if (a.sums.length != b.sums.length) throw new IllegalArgumentException(
       s"vec_mean6: cannot merge buffers of length ${a.sums.length} and ${b.sums.length}")
     var i = 0
-    while (i < a.sums.length) { a.sums(i) += b.sums(i); i += 1 }
-    VecMeanAgg.Buf(a.sums, a.count + b.count)
+    while (i < a.sums.length) { a.sums(i) += b.sums(i); a.counts(i) += b.counts(i); i += 1 }
+    a
   }
 
   override def eval(buf: VecMeanAgg.Buf): Any = {
-    if (buf.sums == null || buf.count == 0) return null
-    val out = new Array[Double](buf.sums.length)
+    if (buf.sums == null) return null
+    val out = new Array[Any](buf.sums.length)
     var i = 0
     while (i < out.length) {
-      // exactly Spark SQL round(x, 6): HALF_UP on the decimal repr
-      out(i) = BigDecimal(buf.sums(i) / buf.count)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      if (buf.counts(i) > 0) {
+        // exactly Spark SQL round(avg, 6): a non-finite mean passes
+        // through, a finite one rounds HALF_UP on the decimal repr
+        val m = buf.sums(i) / buf.counts(i)
+        out(i) = if (m.isNaN || m.isInfinite) m
+          else BigDecimal(m).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      }
       i += 1
     }
     new GenericArrayData(out)
   }
 
   override def serialize(buf: VecMeanAgg.Buf): Array[Byte] = {
-    val n = if (buf.sums == null) 0 else buf.sums.length
-    val bb = ByteBuffer.allocate(8 + 4 + 8 * n)
-    bb.putLong(buf.count).putInt(n)
+    val n = if (buf.sums == null) -1 else buf.sums.length
+    val bb = ByteBuffer.allocate(4 + 16 * math.max(n, 0))
+    bb.putInt(n)
     var i = 0
-    while (i < n) { bb.putDouble(buf.sums(i)); i += 1 }
+    while (i < n) { bb.putDouble(buf.sums(i)).putLong(buf.counts(i)); i += 1 }
     bb.array()
   }
 
   override def deserialize(bytes: Array[Byte]): VecMeanAgg.Buf = {
     val bb = ByteBuffer.wrap(bytes)
-    val count = bb.getLong()
     val n = bb.getInt()
-    if (n == 0) VecMeanAgg.Buf(null, count)
+    if (n < 0) VecMeanAgg.Buf(null, null)
     else {
-      val sums = new Array[Double](n)
+      val b = VecMeanAgg.Buf(new Array[Double](n), new Array[Long](n))
       var i = 0
-      while (i < n) { sums(i) = bb.getDouble(); i += 1 }
-      VecMeanAgg.Buf(sums, count)
+      while (i < n) { b.sums(i) = bb.getDouble(); b.counts(i) = bb.getLong(); i += 1 }
+      b
     }
   }
 
@@ -111,7 +121,7 @@ case class VecMeanAgg(
 }
 
 object VecMeanAgg {
-  /** Running element-wise sums (sized lazily from the first vector) and
-    * the contributing row count. */
-  case class Buf(sums: Array[Double], count: Long)
+  /** Running element-wise sums and non-null counts, sized lazily from
+    * the first non-null vector (both null until then). */
+  case class Buf(sums: Array[Double], counts: Array[Long])
 }

@@ -11,21 +11,23 @@ import org.apache.spark.sql.functions._
   * same bars from the tick-level `events` table (`event_type` ≡ symbol,
   * `value` ≡ trade price, one row ≡ one tick).
   *
-  * Scale notes: one hash-partitioned aggregate on (symbol, bucket) with
+  * One bar rule for batch and streaming: ticks group by Spark's
+  * event-time `window(ts, "5 minutes")`, whose epoch-aligned start is
+  * `bar_ts` — the same bar the DuckDB oracle's integer floor
+  * (`epoch_us(ts) // 300000000`) lands on. `StreamPipelines.barsOhlcvStream`
+  * is this plan over a watermarked stream. A tick with a null `ts`
+  * belongs to no window and forms no bar. open/close are `min_by`/`max_by`
+  * on the tick time, streaming-safe aggregates whose partial state is one
+  * (value, ts) pair per bar.
+  *
+  * Scale notes: one hash-partitioned aggregate on (symbol, window) with
   * map-side partial aggregation; key cardinality is symbols × buckets so
-  * there is no skew, and the groupBy output is already partitioned for
-  * the downstream per-symbol window pipelines.
+  * there is no skew.
   */
 object Bars {
-  /** 5 minutes in microseconds; bucket floor is exact integer math so the
-    * DuckDB oracle (`epoch_us(ts) // 300000000`) lands on identical bars. */
-  val BucketMicros: Long = 300000000L
-
   def ohlcv(events: DataFrame): DataFrame =
     events
-      .withColumn("bar_ts",
-        expr(s"timestamp_micros((unix_micros(ts) div $BucketMicros) * $BucketMicros)"))
-      .groupBy(col("event_type").as("symbol"), col("bar_ts"))
+      .groupBy(col("event_type").as("symbol"), window(col("ts"), "5 minutes").as("win"))
       .agg(
         min_by(col("value"), col("ts")).as("open"),
         max(col("value")).as("high"),
@@ -33,6 +35,8 @@ object Bars {
         max_by(col("value"), col("ts")).as("close"),
         count(lit(1)).as("volume"),
         sum(col("value")).as("vsum"))
+      .select(col("symbol"), col("win.start").as("bar_ts"), col("open"),
+        col("high"), col("low"), col("close"), col("volume"), col("vsum"))
 
   /** OHLC consistency predicate (reference
     * src/preprocessing/preprocessing_pipeline.py:132-136): positive

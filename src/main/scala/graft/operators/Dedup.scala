@@ -845,8 +845,7 @@ object Dedup {
         coalesce(col("triangles"), lit(0L)).as("triangles"))
       .select(col("doc_id"), col("degree"), col("triangles"),
         when(col("degree") >= 2,
-          r4(lit(2.0) * col("triangles")
-            / (col("degree") * (col("degree") - lit(1.0)))))
+          r4(lit(2.0) * col("triangles") / (col("degree") * (col("degree") - lit(1.0)))))
           .as("local_cc"))
       .orderBy(col("doc_id"))
   }

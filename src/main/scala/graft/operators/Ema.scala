@@ -17,8 +17,8 @@ import graft.operators.Parity.r4
   * a symbol's 5-minute series grows with its history, not with tick
   * volume, so one task per symbol folds it in bar_ts order with the
   * oracle's own float ops — bit-identical to the sequential recursion.
-  * It is the batch form of the per-key state the streaming twin
-  * (`StreamPipelines.macdStream`) keeps in `flatMapGroupsWithState`.
+  * `StreamPipelines.macdStream` steps the same [[macdInit]]/[[macdStep]]
+  * pair over per-key `flatMapGroupsWithState` state.
   */
 object Ema extends Serializable {
   private val A12 = 2.0 / 13.0; private val B12 = 11.0 / 13.0
@@ -67,22 +67,27 @@ object Ema extends Serializable {
         outCols.zipWithIndex.map { case (n, j) => col("es")(j).as(n) }: _*)
   }
 
-  /** MACD(12,26,9) as one [[fold]]: EMA12/EMA26 of close and the EMA9
-    * signal of their difference advance together per bar. Three
+  /** MACD(12,26,9)'s recursion over one close per bar, the [[fold]]
+    * pair [[macd]] runs and `StreamPipelines.macdStream` steps per
+    * micro-batch. State: macd, signal | EMA12, EMA26; EMA12/EMA26 of
+    * close and the EMA9 signal of their difference advance together. */
+  val macdInit: Array[Double] => Array[Double] =
+    x => { val m = x(0) - x(0); Array(m, m, x(0), x(0)) }
+  val macdStep: (Array[Double], Array[Double]) => Array[Double] =
+    (e, x) => {
+      val e12 = x(0) * A12 + e(2) * B12
+      val e26 = x(0) * A26 + e(3) * B26
+      val m = e12 - e26
+      Array(m, m * A9 + e(1) * B9, e12, e26)
+    }
+
+  /** MACD(12,26,9) as one [[fold]] of [[macdInit]]/[[macdStep]]. Three
     * exchanges (bars aggregate, symbol group, output sort), no persist.
     * The float ops are the oracle's sequential fold with its 11/13-style
     * β literals, and hist = macd − signal is the same double
     * subtraction. */
   def macd(bars: DataFrame): DataFrame =
-    fold(bars, Seq("close"), Seq("m", "s"))(
-      // state: macd, signal | EMA12, EMA26
-      x => { val m = x(0) - x(0); Array(m, m, x(0), x(0)) },
-      (e, x) => {
-        val e12 = x(0) * A12 + e(2) * B12
-        val e26 = x(0) * A26 + e(3) * B26
-        val m = e12 - e26
-        Array(m, m * A9 + e(1) * B9, e12, e26)
-      })
+    fold(bars, Seq("close"), Seq("m", "s"))(macdInit, macdStep)
       .select(col("symbol"), col("bar_ts"),
         r4(col("m")).as("macd"),
         r4(col("s")).as("macd_signal"),

@@ -174,8 +174,7 @@ object IndicatorsExt {
         ratio(7).as("a7"), ratio(14).as("a14"), ratio(28).as("a28"))
       .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") >= 29,
-          r4(lit(100.0) * (lit(4.0) * col("a7") + lit(2.0) * col("a14") + col("a28"))
-            / lit(7.0)))
+          r4(lit(100.0) * (lit(4.0) * col("a7") + lit(2.0) * col("a14") + col("a28")) / lit(7.0)))
           .as("uo"))
       .orderBy(col("symbol"), col("bar_ts"))
   }

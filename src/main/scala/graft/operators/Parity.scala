@@ -3,12 +3,10 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{lit, round}
 
-/** The cross-engine 4dp rounding rule, written once. Prices carry two
-  * decimals, so averages and ratios often sit exactly on a round-4
-  * midpoint, where Spark's HALF_UP and DuckDB's round can land on
-  * different sides of a value one ulp off the tie. Both engines add the
-  * same 5e-9 nudge before rounding, so each lands on the same side; the
-  * DuckDB oracle writes the nudge in SQL text (`round(x + 5e-9, 4)`). */
+/** The cross-engine 4dp rounding rule, written once. Two-decimal prices
+  * put averages and ratios on round-4 midpoints, where the engines can
+  * round a value one ulp off the tie to different sides; both add the
+  * same 5e-9 nudge first (the DuckDB oracle as `round(x + 5e-9, 4)`). */
 object Parity {
   def r4(c: Column): Column = round(c + lit(5e-9), 4)
 }

@@ -871,8 +871,7 @@ object Relational {
       .agg(count(lit(1)).as("n_small"),
         round(sum(col("l_extendedprice").cast("decimal(18,6)")), 2)
           .cast("double").as("small_revenue"),
-        r4(first(col("qty_sum")).cast("double") /
-          first(col("cnt")).cast("double")).as("avg_qty"))
+        r4(first(col("qty_sum")).cast("double") / first(col("cnt")).cast("double")).as("avg_qty"))
       .orderBy(col("l_partkey"))
   }
 

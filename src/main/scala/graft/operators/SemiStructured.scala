@@ -71,8 +71,7 @@ object SemiStructured {
       .groupBy(expr("k div 10 - CASE WHEN k % 10 < 0 THEN 1 ELSE 0 END").as("k_bucket"))
       .agg(
         count(lit(1)).as("n"),
-        r4(sum(col("value").cast("decimal(18,6)")).cast("double") /
-          count(lit(1))).as("avg_value"))
+        r4(sum(col("value").cast("decimal(18,6)")).cast("double") / count(lit(1))).as("avg_value"))
       .orderBy(col("k_bucket"))
 
   /** Top-3 most frequent k per event_type. Rank over the (type, k)

@@ -51,8 +51,7 @@ object Temporal {
         sum((col("pc") * col("dur_us")).cast("decimal(38,0)")).as("pv"))
       .select(col("symbol"), col("day"), col("n_ticks"), col("dur_total"),
         when(col("dur_total") > 0,
-          r4(col("pv").cast("double") / col("dur_total").cast("double")
-            / lit(100.0))).as("twap"))
+          r4(col("pv").cast("double") / col("dur_total").cast("double") / lit(100.0))).as("twap"))
       .orderBy(col("symbol"), col("day"))
   }
 
@@ -255,27 +254,23 @@ object Temporal {
     * final state is needed — at 100 TB the difference is a full sort
     * vs a combiner). */
   def cdcApply(events: DataFrame): DataFrame =
-    events.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_ops"),
-        sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_deletes"),
-        max_by(struct(col("event_type"), col("value"), col("ts")),
-          struct(col("ts"), col("event_id"))).as("last"))
+    cdcPartial(events)
       .filter(col("last.event_type") =!= "error")
       .select(col("user_id"), col("last.value").as("value"),
         col("last.ts").as("updated_at"), col("n_ops"), col("n_deletes"))
       .orderBy(col("user_id"))
 
-  /** Daily dimension snapshot — the warehouse "as-of end of day D" view
-    * of per-user state: for every user and every day from the user's
-    * first active day through the global max day, the latest event_type
-    * at or before that day's end. The per-pair formulation (every
-    * snapshot day probing every earlier event) is O(days × events);
-    * this plan is O(events + users·days): the stream collapses to ONE
-    * row per (user, day) first (map-side `max_by` on the deterministic
-    * (ts, event_id) order), the dense day grid explodes from per-user
-    * bounds (global max day is a one-row broadcast), and state rolls
-    * forward with a running `last(ignoreNulls)` — per-user partitions
-    * bounded by the calendar length, never by event volume. */
+  /** Per-user CDC partial of [[cdcApply]] and of each micro-batch of
+    * `StreamPipelines.cdcMergeBatch`: op and delete counts, and `last`,
+    * the (ts, event_id, event_type, value) row of greatest (ts, event_id),
+    * so `greatest` over two partials' `last` keeps the same last writer. */
+  def cdcPartial(events: DataFrame): DataFrame =
+    events.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_ops"),
+        sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_deletes"),
+        max_by(struct(col("ts"), col("event_id"), col("event_type"), col("value")),
+          struct(col("ts"), col("event_id"))).as("last"))
+
   /** SCD2 snapshot DIFF — "what changed between two as-of dates", the
     * audit a warehouse runs after a backfill: per user, the dimension
     * state (last event_type at-or-before the cutoff, (ts, event_id)
@@ -303,6 +298,17 @@ object Temporal {
       .orderBy(col("user_id"))
   }
 
+  /** Daily dimension snapshot — the warehouse "as-of end of day D" view
+    * of per-user state: for every user and every day from the user's
+    * first active day through the global max day, the latest event_type
+    * at or before that day's end. The per-pair formulation (every
+    * snapshot day probing every earlier event) is O(days × events);
+    * this plan is O(events + users·days): the stream collapses to ONE
+    * row per (user, day) first (map-side `max_by` on the deterministic
+    * (ts, event_id) order), the dense day grid explodes from per-user
+    * bounds (global max day is a one-row broadcast), and state rolls
+    * forward with a running `last(ignoreNulls)` — per-user partitions
+    * bounded by the calendar length, never by event volume. */
   def dimSnapshot(events: DataFrame): DataFrame = {
     val perDay = events
       .groupBy(col("user_id"), to_date(col("ts")).as("day"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Parity.r4
-import graft.operators.Scope
+import graft.operators.{Bars, Ema, Scope, Temporal}
 
 /** Structured Streaming pipelines mirroring the reference's streaming
   * path (Pub/Sub → transform → BigQuery; reference
@@ -14,6 +14,9 @@ import graft.operators.Scope
   * declarative transforms run in batch and streaming, so correctness is
   * oracle-gated in batch (`q_stream_window`) and the streaming behavior
   * (watermarks, dedup, state) is spec-tested with memory sources/sinks.
+  * Every rule the oracle checks is written once in `graft.operators`
+  * and called from here: the bars, the MACD recursion and the CDC
+  * partial aggregate.
   */
 object StreamPipelines {
 
@@ -44,33 +47,11 @@ object StreamPipelines {
         lit("{}").as("props"))
   }
 
-  /** Tick→5-min OHLCV bars as ONE plan for batch and stream — the
-    * reference's actual ingestion shape (5-min bars per symbol,
-    * reference src/ingestion/stocks_pipeline.py:138-175) computed
-    * stream-natively. The 5-minute event-time window starts are
-    * epoch-aligned, exactly [[graft.operators.Bars.ohlcv]]'s integer
-    * bucket floor, so the streaming bars are cell-identical to the
-    * batch resample (spec-proven); open/close come from min_by/max_by
-    * on the tick timestamp, which are streaming-safe declarative
-    * aggregates (partial state = one (value, ts) pair per bar). */
-  def barsOhlcv(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "5 minutes").as("win"),
-        col("event_type").as("symbol"))
-      .agg(min_by(col("value"), col("ts")).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), col("ts")).as("close"),
-        count(lit(1)).as("volume"),
-        sum(col("value")).as("vsum"))
-      .select(col("symbol"), col("win.start").as("bar_ts"), col("open"),
-        col("high"), col("low"), col("close"), col("volume"), col("vsum"))
-
-  /** Streaming variant of [[barsOhlcv]] with a watermark: bar state
-    * expires 30 minutes after its window closes — bounded keyed state
-    * at any stream length. */
+  /** [[graft.operators.Bars.ohlcv]] over a watermarked stream: bar
+    * state expires 30 minutes after its window closes — bounded keyed
+    * state at any stream length. */
   def barsOhlcvStream(events: DataFrame): DataFrame =
-    barsOhlcv(events.withWatermark("ts", "30 minutes"))
+    Bars.ohlcv(events.withWatermark("ts", "30 minutes"))
 
   /** Tumbling 10-min window aggregate per symbol; identical semantics in
     * batch and streaming (the `queries` entry runs it in batch). */
@@ -234,7 +215,7 @@ object StreamPipelines {
     Scope {
       val b = Scope.persist(batch)
       b.write.mode("overwrite").parquet(s"$outDir/raw/batch_id=$batchId")
-      graft.operators.Bars.ohlcv(b).write.mode("overwrite")
+      Bars.ohlcv(b).write.mode("overwrite")
         .parquet(s"$outDir/processed/batch_id=$batchId")
     }
   }
@@ -243,12 +224,12 @@ object StreamPipelines {
     * last-writer-wins semantics run stream-native, the reference
     * loader's upsert path (reference src/loader/bigquery_loader.py:211
     * buffered upsert callback) as a foreachBatch MERGE into a parquet
-    * state table. Per micro-batch: ONE map-side-combining `max_by`
-    * reduce collapses the batch's changelog to one row per user (the
-    * q_cdc_apply combiner — never a per-key sort), then a single
-    * full-outer MERGE against the previous state on `user_id` folds it
-    * in: op counts add, the surviving row is `greatest` over the
-    * (ts, event_id)-ordered last-row struct, so out-of-order keys
+    * state table. Per micro-batch, q_cdc_apply's own map-side-combining
+    * reduce ([[graft.operators.Temporal.cdcPartial]]) collapses the
+    * batch's changelog to one row per user (never a per-key sort), then
+    * a single full-outer MERGE against the previous state on `user_id`
+    * folds it in: op counts add, the surviving row is `greatest` over
+    * the (ts, event_id)-ordered last-row struct, so out-of-order keys
     * ACROSS batches resolve exactly like rows within one batch.
     *
     * The state table is GENERATION-CHAINED for exactly-once semantics
@@ -270,11 +251,7 @@ object StreamPipelines {
       retainGens: Int = 4): Unit = {
     val spark = batch.sparkSession
     val root = s"$outDir/state"
-    val delta = batch.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_ops"),
-        sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_deletes"),
-        max_by(struct(col("ts"), col("event_id"), col("event_type"), col("value")),
-          struct(col("ts"), col("event_id"))).as("last"))
+    val delta = Temporal.cdcPartial(batch)
     val prevGens = cdcGens(spark, root).filter(_ < batchId)
     val prev =
       if (prevGens.isEmpty) delta.limit(0)
@@ -345,20 +322,8 @@ object StreamPipelines {
   /** Stream-stream join: purchases attributed to a preceding click by the
     * same user within 30 minutes (watermarked range condition so state is
     * bounded on both sides). */
-  def clickAttribution(events: DataFrame): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("c_event"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("p_event"), col("value").as("p_value"))
-      .withWatermark("p_ts", "1 hour")
-    purchases.join(clicks,
-      expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 30 minutes"))
-      .select(col("p_user").as("user_id"), col("c_event"), col("p_event"),
-        col("c_ts"), col("p_ts"), col("p_value"))
-  }
+  def clickAttribution(events: DataFrame): DataFrame =
+    attribution(events, "inner")
 
   /** LEFT-OUTER stream-stream join — [[clickAttribution]]'s join with
     * the purchase side PRESERVED: matched rows emit immediately;
@@ -370,7 +335,10 @@ object StreamPipelines {
     * bookkeeping at eviction time, so the 100 TB state bound is
     * unchanged — this is the join a funnel pipeline needs when
     * "purchase with no preceding click" is itself the signal. */
-  def clickAttributionOuter(events: DataFrame): DataFrame = {
+  def clickAttributionOuter(events: DataFrame): DataFrame =
+    attribution(events, "leftOuter")
+
+  private def attribution(events: DataFrame, joinType: String): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
         col("event_id").as("c_event"))
@@ -381,47 +349,36 @@ object StreamPipelines {
       .withWatermark("p_ts", "1 hour")
     purchases.join(clicks,
       expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 30 minutes"),
-      "leftOuter")
+      joinType)
       .select(col("p_user").as("user_id"), col("c_event"), col("p_event"),
         col("c_ts"), col("p_ts"), col("p_value"))
   }
 
   case class BarIn(symbol: String, bar_ts: java.sql.Timestamp, close: Double)
-  case class EmaState(e12: Double, e26: Double, sig: Double, started: Boolean)
   case class MacdOut(symbol: String, bar_ts: java.sql.Timestamp,
       macd: Double, macd_signal: Double, macd_hist: Double)
 
-  /** Streaming MACD(12,26,9): per-symbol EMA recursion state carried
-    * across micro-batches via flatMapGroupsWithState — the streaming
-    * twin of the batch per-symbol fold (graft.operators.Ema.macd).
-    * Within a micro-batch rows fold in bar_ts order; with in-order
-    * arrival the emitted values equal the batch recursion exactly
-    * (spec-proven at 4dp across a two-batch replay). */
+  /** Streaming MACD(12,26,9): per-symbol state carried across
+    * micro-batches via flatMapGroupsWithState — each bar advances
+    * [[graft.operators.Ema.macdInit]]/[[graft.operators.Ema.macdStep]],
+    * the recursion the batch [[graft.operators.Ema.macd]] folds, over
+    * the same `Array[Double]` state. Within a micro-batch rows fold in
+    * bar_ts order; with in-order arrival the emitted values equal the
+    * batch recursion exactly (spec-proven at 4dp across a two-batch
+    * replay). */
   def macdStream(bars: Dataset[BarIn]): Dataset[MacdOut] = {
     val spark = bars.sparkSession
     import spark.implicits._
-    val A12 = 2.0 / 13.0; val B12 = 11.0 / 13.0
-    val A26 = 2.0 / 27.0; val B26 = 25.0 / 27.0
-    val A9 = 2.0 / 10.0; val B9 = 8.0 / 10.0
 
     def fn(sym: String, rows: Iterator[BarIn],
-        state: GroupState[EmaState]): Iterator[MacdOut] = {
-      var st = state.getOption.orNull
+        state: GroupState[Array[Double]]): Iterator[MacdOut] = {
+      var e = state.getOption.orNull
       val out = rows.toSeq.sortBy(_.bar_ts.getTime).map { b =>
-        if (st == null) {
-          // e12 = e26 = x0 → macd 0; the signal seeds with that macd
-          st = EmaState(b.close, b.close, 0.0, started = true)
-          MacdOut(sym, b.bar_ts, 0.0, 0.0, 0.0)
-        } else {
-          val e12 = b.close * A12 + st.e12 * B12
-          val e26 = b.close * A26 + st.e26 * B26
-          val m = e12 - e26
-          val sig = m * A9 + st.sig * B9
-          st = EmaState(e12, e26, sig, started = true)
-          MacdOut(sym, b.bar_ts, m, sig, m - sig)
-        }
+        val x = Array(b.close)
+        e = if (e == null) Ema.macdInit(x) else Ema.macdStep(e, x)
+        MacdOut(sym, b.bar_ts, e(0), e(1), e(0) - e(1))
       }
-      if (st != null) state.update(st)
+      if (e != null) state.update(e)
       out.iterator
     }
 

@@ -34,6 +34,24 @@ class BarsIndicatorsSpec extends SparkSpec {
     assert(first.getAs[Long]("volume") === 4L)
   }
 
+  test("bars: a tick with a null ts forms no bar and leaves every other bar unchanged") {
+    import spark.implicits._
+    val rows = Seq(
+      (1L, "2024-01-01 10:01:00", "A", 10.0),
+      (2L, "2024-01-01 10:04:00", "A", 12.0),
+      (3L, "2024-01-01 10:07:00", "B", 5.0))
+    // one null-ts tick on a symbol that has bars, one on a symbol that has none
+    val noTs = Seq((4L, None: Option[Timestamp], 7L, "A", 99.0, "{}"),
+      (5L, None: Option[Timestamp], 7L, "C", 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    def bars(df: DataFrame) = Bars.ohlcv(df).orderBy("symbol", "bar_ts").collect().map(_.toSeq)
+    val got = bars(ticks(rows).unionByName(noTs))
+    assert(got === bars(ticks(rows)))
+    assert(got.map(r => (r(0), r(1), r(6))).toSeq === Seq(
+      ("A", Timestamp.valueOf("2024-01-01 10:00:00"), 2L),
+      ("B", Timestamp.valueOf("2024-01-01 10:05:00"), 1L)))
+  }
+
   test("bars invariants on real data: high >= open/close >= low, volume > 0") {
     val b = Bars.ohlcv(Tables.events(spark, sf()))
     val bad = b.filter(col("high") < col("low") || col("open") > col("high") ||

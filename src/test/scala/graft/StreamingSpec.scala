@@ -642,8 +642,8 @@ class StreamingSpec extends SparkSpec {
         r.getAs[Double]("high"), r.getAs[Double]("low"),
         r.getAs[Double]("close"), r.getAs[Long]("volume")))
     val streamed = shape(spark.table("bars_out"))
-    // the streaming window starts must equal the batch integer bucket
-    // floor — same rows through graft.operators.Bars.ohlcv
+    // the watermarked stream must emit the same bars as the batch
+    // graft.operators.Bars.ohlcv over the same rows
     val batchRef = shape(graft.operators.Bars.ohlcv(rows.toDF())
       .withColumnRenamed("bar_ts", "bar_ts"))
     assert(streamed.toSeq === batchRef.toSeq)

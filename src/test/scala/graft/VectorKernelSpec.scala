@@ -14,7 +14,9 @@ import graft.functions.GraftFunctions
   * scalacheck-generated arrays: NaN, ±Inf, null elements, null arrays,
   * ragged, empty and all-zero. `zip_with` pads the shorter array with
   * nulls and a null term nulls the sum, so both kernels return null on
-  * ragged input or a null element; cosine is also null on a zero norm. */
+  * ragged input or a null element; cosine is also null on a zero norm.
+  * The `vec_mean6` aggregate against its per-dimension
+  * `round(avg(v[i]), 6)` form on the same kind of elements. */
 class VectorKernelSpec extends SparkSpec {
   private type Vec = Seq[java.lang.Double]
 
@@ -114,4 +116,56 @@ class VectorKernelSpec extends SparkSpec {
             s"${kernels(k)} on ${pairs(id)}: got ${got(id)(k)}, reference ${want(k)}")
       }
     }
+
+  // vec_mean6: groups of 3-vectors, the named degenerate groups, then a
+  // fixed-seed random sample
+  private val Dim = 3
+  private val group: Gen[Seq[Vec]] = for {
+    n <- Gen.choose(1, 8)
+    vs <- Gen.listOfN(n, Gen.frequency(10 -> vec(Dim), 1 -> Gen.const(null: Vec)))
+  } yield vs
+  private val groups: Seq[Seq[Vec]] = Seq(
+    Seq(v(1.0, null, 2.0), v(3.0, 4.0, null)), // null elements are skipped
+    Seq(v(null, null, null), v(1.0, null, 5.0)), // dimension 1 has no value
+    Seq(v(Double.NaN, 1.0, 1.0), v(1.0, 1.0, 1.0)),
+    Seq(v(Double.PositiveInfinity, 1.0, Double.NegativeInfinity), v(1.0, 1.0, 1.0)),
+    Seq(v(Double.PositiveInfinity, 0.0, 0.0), v(Double.NegativeInfinity, 0.0, 0.0)),
+    Seq(null, v(0.0000005, -0.0000005, 2.5)), // null array; 6dp midpoints
+    Seq(null, null)) ++ // no vector: empty group
+    Gen.listOfN(60, group).pureApply(Gen.Parameters.default, Seed(20261019L))
+
+  private val meanSchema = StructType(Seq(StructField("k", IntegerType),
+    StructField("v", ArrayType(DoubleType))))
+
+  private def meanInput(): DataFrame = spark.createDataFrame(
+    java.util.Arrays.asList(groups.zipWithIndex.flatMap { case (vs, k) => vs.map(Row(k, _)) }: _*),
+    meanSchema).repartition(4) // partial buffers serialize and merge
+
+  // a group with no non-null vector has no dimension: null, not Dim nulls
+  private val meanReference =
+    "CASE WHEN count(v) = 0 THEN NULL ELSE array(" +
+      (0 until Dim).map(i => s"round(avg(v[$i]), 6)").mkString(", ") + ") END"
+
+  private def means(df: DataFrame, agg: String): Map[Int, Option[Seq[Option[Double]]]] =
+    df.groupBy(col("k")).agg(expr(agg)).collect().map { r =>
+      r.getInt(0) -> Option(r.getSeq[java.lang.Double](1)).map(_.map(x => Option(x).map(_.doubleValue)))
+    }.toMap
+
+  test("vec_mean6 equals per-dimension round(avg, 6) on NaN, ±Inf, null elements and empty groups") {
+    GraftFunctions.register(spark)
+    val df = meanInput()
+    val got = means(df, "vec_mean6(v)")
+    val ref = means(df, meanReference)
+    assert(got.size === groups.size && ref.size === groups.size)
+    for ((k, want) <- ref) {
+      val ok = (got(k), want) match {
+        case (Some(g), Some(w)) => g.length == w.length && g.zip(w).forall { case (x, y) => same(x, y) }
+        case (g, w) => g == w
+      }
+      assert(ok, s"group ${groups(k)}: got ${got(k)}, reference $want")
+    }
+    // an aggregate over no rows at all
+    val none = df.filter(lit(false)).agg(expr("vec_mean6(v)"), expr(meanReference)).head()
+    assert(none.isNullAt(0) && none.isNullAt(1))
+  }
 }
