@@ -645,16 +645,6 @@ object OracleSql {
         SELECT r.a, e.dst FROM reach r JOIN e ON e.src = r.b),
       lab AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a)"""
 
-  /** Full cluster query — shared VERBATIM by q_dedup_clusters and
-    * q_dedup_clusters_lss: both Spark algorithms reach the same
-    * fixpoint, so they share one oracle. */
-  private val clusterSelectSql: String = s"""
-      WITH RECURSIVE $clusterLabCtes
-      SELECT doc_id, cluster_id,
-        count(*) OVER (PARTITION BY cluster_id)::BIGINT AS cluster_size,
-        (doc_id = cluster_id) AS is_canonical
-      FROM lab ORDER BY doc_id"""
-
   /** CTE chain ending in `flags(doc_id, too_short, word_len_bad,
     * punct_heavy, repetitive)` — the quality-filter rules over the same
     * 4dp-rounded signals as q_text_quality / q_repetition; shared by
@@ -1241,11 +1231,12 @@ object OracleSql {
     // connected components over the LSH pair graph: DuckDB reaches the
     // min-label fixpoint via a recursive transitive closure; the Spark
     // side iterates min-label propagation to the same fixpoint
-    "q_dedup_clusters" -> clusterSelectSql,
-
-    // same fixpoint, different physical algorithm (large-star/small-star
-    // contraction) — deliberately shares the q_dedup_clusters oracle
-    "q_dedup_clusters_lss" -> clusterSelectSql,
+    "q_dedup_clusters" -> s"""
+      WITH RECURSIVE $clusterLabCtes
+      SELECT doc_id, cluster_id,
+        count(*) OVER (PARTITION BY cluster_id)::BIGINT AS cluster_size,
+        (doc_id = cluster_id) AS is_canonical
+      FROM lab ORDER BY doc_id""",
 
     "q_dedup_simhash" -> {
       val votes = (0 until 60).map(i =>
@@ -3095,14 +3086,14 @@ object OracleSql {
 
   /** Multi-table LSH oracle: mirrors Similarity.{corpusBuckets,
     * queryProbes} — identical ±1 sign constants, identical fold order
-    * (list_reduce from a prepended 0.0 ≡ the native LshBuckets loop),
+    * (list_reduce from a prepended 0.0 ≡ LshPlanes.project's loop),
     * identical (|proj|, bit) margin ranking for the probe flips. */
   /** Shared multi-table LSH corpus CTEs: p1 (projection lists), p2
     * (per-table buckets), bk (one row per vector per table). */
   private def lshBkCtes: String = {
     import graft.operators.Similarity._
     def signList(t: Int, j: Int) = (0 until Dim)
-      .map(d => if (lshSign(t, j, d) > 0) "1.0" else "-1.0")
+      .map(d => if (graft.functions.LshPlanes.sign(t, j, d) > 0) "1.0" else "-1.0")
       .mkString("[", ", ", "]")
     def ptExpr(t: Int) = (0 until LshBits)
       .map(j => dotSql("v", signList(t, j))).mkString("[", ", ", "]")

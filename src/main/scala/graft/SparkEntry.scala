@@ -191,7 +191,6 @@ object SparkEntry {
     "q_dedup_minhash_pairs" -> ((s, d) => Dedup.minhashLshPairs(Tables.documents(s, d))),
     "q_ngram_containment" -> ((s, d) => Dedup.ngramContainment(Tables.documents(s, d))),
     "q_dedup_clusters" -> ((s, d) => Dedup.dedupClusters(Tables.documents(s, d))),
-    "q_dedup_clusters_lss" -> ((s, d) => Dedup.dedupClustersLSS(Tables.documents(s, d))),
     "q_cluster_stats" -> ((s, d) => Dedup.clusterStats(Tables.documents(s, d))),
     "q_seg_dedup" -> ((s, d) => Dedup.segDedup(Tables.documents(s, d))),
     "q_intradoc_repeats" -> ((s, d) => Dedup.intradocRepeats(Tables.documents(s, d))),

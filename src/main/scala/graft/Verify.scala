@@ -29,7 +29,7 @@ object Verify {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       // the scope releases each query's persisted intermediates, so the
-      // 213-query dump session stays flat
+      // 212-query dump session stays flat
       try Scope {
         val out = fn(spark, sfDir)
         // Dump tz-naive timestamps: the session is UTC, and DuckDB's

@@ -6,14 +6,17 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
-/** Shared ±1 hyperplane sign matrix for the multi-table LSH family —
-  * md5-derived so the DuckDB oracle inlines identical constants (see
-  * graft.operators.Similarity.lshSign). Flattened [t][j][d] row-major. */
+/** Shared ±1 hyperplane sign matrix for the multi-table LSH family,
+  * md5-derived so the DuckDB oracle inlines identical constants.
+  * Flattened [t][j][d] row-major. */
 object LshPlanes {
   val Dim = 64
   val Bits = 11
   val Tables = 12
 
+  /** Deterministic ±1 hyperplane signs: sign(t,j,d) = +1 iff the first
+    * 32 md5 bits of the string (t·100000 + j·64 + d) are even. Table 0
+    * reproduces the round-1 single-table signs. */
   def sign(t: Int, j: Int, d: Int): Double = {
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(String.valueOf(t * 100000 + j * 64 + d).getBytes("UTF-8"))
@@ -30,72 +33,83 @@ object LshPlanes {
     }
     a
   }
+
+  /** The Tables × Bits projections of `v` onto the planes, [t][j]
+    * row-major — each accumulated ascending-index from 0.0 with ±1.0
+    * multiplies, bit-identical to the
+    * `aggregate(zip_with(v, signs, (x, s) -> x * s), 0D, (a, p) -> a + p)`
+    * fold and to the oracle's list_reduce. Null where that fold is
+    * null: unless `v` has exactly [[Dim]] elements, none of them null
+    * (`zip_with` pads a shorter side with nulls, and a null term nulls
+    * the sum). */
+  def project(v: ArrayData): Array[Double] = {
+    if (v.numElements() != Dim) return null
+    var d = 0
+    while (d < Dim) { if (v.isNullAt(d)) return null; d += 1 }
+    val s = flat
+    val out = new Array[Double](Tables * Bits)
+    var k = 0
+    while (k < out.length) {
+      var p = 0.0
+      val base = k * Dim
+      d = 0
+      while (d < Dim) { p += v.getDouble(d) * s(base + d); d += 1 }
+      out(k) = p
+      k += 1
+    }
+    out
+  }
 }
 
-/** All per-table LSH bucket ids of one vector in ONE fused expression —
-  * returns array<bigint> of LshPlanes.Tables buckets.
-  *
-  * A 12-table × 11-bit signature as 132 separate dot-product folds
-  * makes the Catalyst tree so large that per-query analysis+codegen
-  * dominates the runtime; this expression keeps the tree at one node and
-  * runs the triple loop in generated code. Projection accumulation is
-  * ascending-index from 0.0 with ±1.0 multiplies — bit-identical to the
-  * `aggregate(zip_with(...))` fold and to the oracle's list_reduce. */
-case class LshBuckets(child: Expression) extends UnaryExpression {
-  import LshPlanes._
+/** A fused LSH kernel over one `array<double>` vector ([[LshBuckets]],
+  * [[LshProjections]]): both derive from [[LshPlanes.project]], and
+  * interpreted eval and the generated code both call the one
+  * [[compute]], so the paths cannot disagree. A 12-table × 11-bit
+  * signature as 132 separate dot-product folds makes the Catalyst tree
+  * so large that per-query analysis+codegen dominates the runtime; a
+  * kernel keeps the tree at one node. */
+abstract class LshKernel extends UnaryExpression {
+  /** The kernel's value for a non-null vector; null is SQL NULL. */
+  def compute(v: ArrayData): ArrayData
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure("lsh_buckets requires array<double>")
+    case _ => TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<double>")
   }
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = ctx.addReferenceObj("kernel", this)
+    nullSafeCodeGen(ctx, ev, v =>
+      s"""
+        ${ev.value} = $kernel.compute($v);
+        ${ev.isNull} = ${ev.value} == null;
+      """)
+  }
+}
+
+/** All per-table LSH bucket ids of one vector: array<bigint> of
+  * LshPlanes.Tables buckets, bit j of bucket t set iff projection
+  * (t, j) is > 0 in SQL order, where NaN sorts above every number (as
+  * the fold's `p > 0` and the oracle's `CASE WHEN p > 0` read it). */
+case class LshBuckets(child: Expression) extends LshKernel {
+  import LshPlanes._
+
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "lsh_buckets"
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val s = flat
-    val n = math.min(v.numElements(), Dim)
+  def compute(v: ArrayData): ArrayData = {
+    val p = project(v)
+    if (p == null) return null
     val out = new Array[Long](Tables)
-    var t = 0
-    while (t < Tables) {
-      var b = 0L; var j = 0
-      while (j < Bits) {
-        var p = 0.0; var d = 0
-        val base = (t * Bits + j) * Dim
-        while (d < n) { p += v.getDouble(d) * s(base + d); d += 1 }
-        if (p > 0) b |= (1L << j)
-        j += 1
-      }
-      out(t) = b
-      t += 1
+    var k = 0
+    while (k < p.length) {
+      if (p(k) > 0 || java.lang.Double.isNaN(p(k))) out(k / Bits) |= 1L << (k % Bits)
+      k += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sRef = ctx.addReferenceObj("lshSigns", flat, "double[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val out = ctx.freshName("out")
-      val t = ctx.freshName("t"); val j = ctx.freshName("j")
-      val d = ctx.freshName("d"); val p = ctx.freshName("p")
-      val b = ctx.freshName("b"); val n = ctx.freshName("n")
-      val base = ctx.freshName("base")
-      s"""
-        int $n = Math.min($v.numElements(), $Dim);
-        long[] $out = new long[$Tables];
-        for (int $t = 0; $t < $Tables; $t++) {
-          long $b = 0L;
-          for (int $j = 0; $j < $Bits; $j++) {
-            double $p = 0.0;
-            int $base = ($t * $Bits + $j) * $Dim;
-            for (int $d = 0; $d < $n; $d++) { $p += $v.getDouble($d) * $sRef[$base + $d]; }
-            if ($p > 0) $b |= (1L << $j);
-          }
-          $out[$t] = $b;
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -104,65 +118,19 @@ case class LshBuckets(child: Expression) extends UnaryExpression {
 
 /** All per-table projection vectors of one vector — array<array<double>>
   * of Tables × Bits raw projections, for the query side's margin-ranked
-  * multiprobe (same fused loop as [[LshBuckets]]). */
-case class LshProjections(child: Expression) extends UnaryExpression {
+  * multiprobe. */
+case class LshProjections(child: Expression) extends LshKernel {
   import LshPlanes._
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure("lsh_proj requires array<double>")
-  }
   override def dataType: DataType =
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
   override def prettyName: String = "lsh_proj"
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val s = flat
-    val n = math.min(v.numElements(), Dim)
-    val out = new Array[Any](Tables)
-    var t = 0
-    while (t < Tables) {
-      val pj = new Array[Double](Bits)
-      var j = 0
-      while (j < Bits) {
-        var p = 0.0; var d = 0
-        val base = (t * Bits + j) * Dim
-        while (d < n) { p += v.getDouble(d) * s(base + d); d += 1 }
-        pj(j) = p
-        j += 1
-      }
-      out(t) = new GenericArrayData(pj)
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sRef = ctx.addReferenceObj("lshSigns", flat, "double[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val out = ctx.freshName("out")
-      val pj = ctx.freshName("pj")
-      val t = ctx.freshName("t"); val j = ctx.freshName("j")
-      val d = ctx.freshName("d"); val p = ctx.freshName("p")
-      val n = ctx.freshName("n")
-      val base = ctx.freshName("base")
-      s"""
-        int $n = Math.min($v.numElements(), $Dim);
-        Object[] $out = new Object[$Tables];
-        for (int $t = 0; $t < $Tables; $t++) {
-          double[] $pj = new double[$Bits];
-          for (int $j = 0; $j < $Bits; $j++) {
-            double $p = 0.0;
-            int $base = ($t * $Bits + $j) * $Dim;
-            for (int $d = 0; $d < $n; $d++) { $p += $v.getDouble($d) * $sRef[$base + $d]; }
-            $pj[$j] = $p;
-          }
-          $out[$t] = new org.apache.spark.sql.catalyst.util.GenericArrayData($pj);
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
+  def compute(v: ArrayData): ArrayData = {
+    val p = project(v)
+    if (p == null) return null
+    new GenericArrayData(Array.tabulate[Any](Tables)(t =>
+      new GenericArrayData(java.util.Arrays.copyOfRange(p, t * Bits, (t + 1) * Bits))))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -35,56 +35,28 @@ case class PolyHash(child: Expression) extends UnaryExpression {
 
 object PolyHash {
   /** Shared by interpreted eval and the generated code. `ascii(c)` is
-    * the code point of the character, so iterate code points — decoded
-    * directly from the UTF8String's bytes (no per-row String copy; the
-    * toString allocation showed up as the residual cost on large
-    * normalized documents). Falls back to the String path on a
-    * malformed sequence so the result stays bit-identical to
-    * `codePointAt` (whose decoder substitutes U+FFFD) on any input. */
+    * the code point of the character, so fold code points, decoded by
+    * [[CodePoints]] without allocating on well-formed input; a
+    * malformed string folds the JDK decoder's code points instead, so
+    * the result stays bit-identical to `codePointAt` (whose decoder
+    * substitutes U+FFFD) on any input. */
   def compute(s: UTF8String): Long = {
     val n = s.numBytes
     var acc = 0L
     var i = 0
     while (i < n) {
-      val b0 = s.getByte(i) & 0xFF
-      var cp = 0
-      var len = 0
-      if (b0 < 0x80) { cp = b0; len = 1 }
-      else if (b0 < 0xC2) return computeSlow(s) // continuation/overlong lead
-      else if (b0 < 0xE0) { cp = b0 & 0x1F; len = 2 }
-      else if (b0 < 0xF0) { cp = b0 & 0x0F; len = 3 }
-      else if (b0 < 0xF5) { cp = b0 & 0x07; len = 4 }
-      else return computeSlow(s)
-      if (i + len > n) return computeSlow(s)
-      var j = 1
-      while (j < len) {
-        val bj = s.getByte(i + j) & 0xFF
-        if ((bj & 0xC0) != 0x80) return computeSlow(s)
-        cp = (cp << 6) | (bj & 0x3F)
-        j += 1
-      }
-      // Overlong encodings and surrogate code points are malformed UTF-8:
-      // Java's decoder replaces them, so defer to it for bit-equality.
-      if ((len == 2 && cp < 0x80) || (len == 3 && (cp < 0x800 || (cp >= 0xD800 && cp <= 0xDFFF))) ||
-          (len == 4 && (cp < 0x10000 || cp > 0x10FFFF))) return computeSlow(s)
-      acc = (acc * 31L + cp) % 4294967296L
-      i += len
+      val c = CodePoints.at(s, i)
+      if (c < 0) return fold(CodePoints.jdk(s))
+      acc = (acc * 31L + (c >>> 3)) % 4294967296L
+      i += (c & 7).toInt
     }
     acc
   }
 
-  /** Reference path: materialize the String and walk `codePointAt`,
-    * matching the original ascii()-fold semantics on malformed input. */
-  private def computeSlow(s: UTF8String): Long = {
-    val str = s.toString
+  private def fold(cps: Array[Int]): Long = {
     var acc = 0L
     var i = 0
-    val n = str.length
-    while (i < n) {
-      val cp = str.codePointAt(i)
-      acc = (acc * 31L + cp) % 4294967296L
-      i += Character.charCount(cp)
-    }
+    while (i < cps.length) { acc = (acc * 31L + cps(i)) % 4294967296L; i += 1 }
     acc
   }
 }

@@ -59,53 +59,9 @@ case class WinnowFps(child: Expression, k: Int, w: Int)
 object WinnowFps {
   private val Mask = 0xFFFFFFFFL
 
-  /** Code points of the string — fast byte-walk decode; falls back to
-    * the JDK decoder (U+FFFD substitution) on a malformed sequence so
-    * the values match `ascii()` on any input, as [[PolyHash]] does. */
-  private def codePoints(s: UTF8String): Array[Int] = {
-    val n = s.numBytes
-    val out = new Array[Int](n) // upper bound; trimmed below
-    var m = 0
-    var i = 0
-    while (i < n) {
-      val b0 = s.getByte(i) & 0xFF
-      var cp = 0
-      var len = 0
-      if (b0 < 0x80) { cp = b0; len = 1 }
-      else if (b0 < 0xC2) return codePointsSlow(s)
-      else if (b0 < 0xE0) { cp = b0 & 0x1F; len = 2 }
-      else if (b0 < 0xF0) { cp = b0 & 0x0F; len = 3 }
-      else if (b0 < 0xF5) { cp = b0 & 0x07; len = 4 }
-      else return codePointsSlow(s)
-      if (i + len > n) return codePointsSlow(s)
-      var j = 1
-      while (j < len) {
-        val bj = s.getByte(i + j) & 0xFF
-        if ((bj & 0xC0) != 0x80) return codePointsSlow(s)
-        cp = (cp << 6) | (bj & 0x3F)
-        j += 1
-      }
-      out(m) = cp; m += 1
-      i += len
-    }
-    if (m == out.length) out else java.util.Arrays.copyOf(out, m)
-  }
-
-  private def codePointsSlow(s: UTF8String): Array[Int] = {
-    val str = s.toString
-    val out = new Array[Int](str.codePointCount(0, str.length))
-    var i = 0; var m = 0
-    while (i < str.length) {
-      val cp = str.codePointAt(i)
-      out(m) = cp; m += 1
-      i += Character.charCount(cp)
-    }
-    out
-  }
-
   /** One pass: rolling gram hashes + deque window minima + distinct. */
   def compute(s: UTF8String, k: Int, w: Int): GenericArrayData = {
-    val cp = codePoints(s)
+    val cp = CodePoints.of(s)
     val n = cp.length
     if (n < k + w - 1) return new GenericArrayData(Array.empty[Long])
     val m = n - k + 1

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** Lineage-truncation policy for iterative fixpoints (dedup clustering,
-  * LSS contraction, Lloyd refinement).
+  * Lloyd refinement).
   *
   * Default: `localCheckpoint` — executor-local blocks, no
   * serialization to a remote store, the right trade single-tenant and

@@ -150,15 +150,7 @@ object Dedup {
     * that exact dedup ([[exactDocs]]) already catches cheaply. */
   def minhashLshPairs(docs: DataFrame, bands: Int = 16, r: Int = 4,
       maxBucket: Int = 64): DataFrame =
-    minhashLshPairsUnordered(docs, bands, r, maxBucket)
-      .orderBy(col("doc_a"), col("doc_b"))
-
-  /** [[minhashLshPairs]] without the deterministic output sort — the
-    * input for consumers ([[dedupClusters]]) that immediately re-shuffle
-    * the pairs (the range exchange + sort would be dead work). */
-  private def minhashLshPairsUnordered(docs: DataFrame, bands: Int = 16,
-      r: Int = 4, maxBucket: Int = 64): DataFrame =
-    pairsFromSig(minhashArray(docs, bands * r), bands, r, maxBucket)
+    dedupPairGraph(docs, bands, r, maxBucket).orderBy(col("doc_a"), col("doc_b"))
 
   /** LSH banding pairs from a precomputed signature frame — split out so
     * callers that also need the signatures ([[minhashEstimate]]) reuse
@@ -253,39 +245,33 @@ object Dedup {
     * convergence detected by an order-independent (count,
     * bit_xor(xxhash64(doc, label))) signature — overflow-safe under ANSI
     * where a label sum is not — so each iteration costs one join + two
-    * tiny aggregates. Iteration
-    * count is the cluster diameter — near-dup clusters are shallow
-    * (template families hub through their most-copied member), so a
-    * handful of passes closes 100 TB-scale graphs too; for
-    * adversarially long path graphs the known fix is the large-star /
-    * small-star contraction (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC'14), which squares the convergence
-    * rate with the same per-round join shape. The driver-side loop is
-    * inherent to iterative graph algorithms (each round's result gates
-    * the next); per-round work is fully distributed and the previous
-    * round's cache is released every step. */
+    * tiny aggregates. Iteration count is the cluster diameter:
+    * near-dup clusters are shallow (template families hub through their
+    * most-copied member), so a handful of passes closes 100 TB-scale
+    * graphs too. A pair graph deeper than `maxIter` fails loudly with
+    * `IllegalStateException` instead of returning unconverged labels;
+    * a caller that expects long chains passes a larger `maxIter`. The
+    * driver-side loop is inherent to iterative graph algorithms (each
+    * round's result gates the next); per-round work is fully
+    * distributed and the previous round's cache is released every
+    * step. */
   def dedupClusters(docs: DataFrame, maxIter: Int = 50): DataFrame =
-    dedupClustersUnordered(docs, maxIter).orderBy(col("doc_id"))
+    dedupClustersFromPairs(dedupPairGraph(docs), docs.select(col("doc_id")), maxIter)
+      .orderBy(col("doc_id"))
 
-  /** The near-dup candidate pair graph, compute-once form: the
-    * UNORDERED distinct (doc_a, doc_b) pairs every cluster-family
-    * consumer starts from. A real pipeline derives min-label clusters
-    * ([[dedupClustersFromPairs]]) and the large-star/small-star variant
-    * ([[dedupClustersLSSFromPairs]]) from ONE materialization of this
-    * frame (localCheckpoint/persist it first) instead of re-running
-    * shingling + MinHash + banding once per consumer — the standalone
-    * oracle queries deliberately pay the full derivation each so their
-    * timings stay isolated and comparable. */
+  /** The near-dup candidate pair graph: the UNORDERED distinct
+    * (doc_a, doc_b) pairs every cluster-family consumer starts from
+    * ([[minhashLshPairs]] without its output sort, which a consumer
+    * that re-shuffles the pairs would only throw away). A pipeline with
+    * several consumers materializes this frame once
+    * (localCheckpoint/persist it first) and derives each of them
+    * ([[dedupClustersFromPairs]], [[clusterLabelsFromPairs]]) from it
+    * instead of re-running shingling + MinHash + banding per consumer;
+    * the standalone oracle queries deliberately pay the full derivation
+    * each so their timings stay isolated and comparable. */
   def dedupPairGraph(docs: DataFrame, bands: Int = 16, r: Int = 4,
       maxBucket: Int = 64): DataFrame =
-    minhashLshPairsUnordered(docs, bands, r, maxBucket)
-
-  /** [[dedupClusters]] without the deterministic output sort — for
-    * consumers ([[clusterStats]]) that immediately re-aggregate, where
-    * the range exchange + sort would be dead work. */
-  private def dedupClustersUnordered(docs: DataFrame, maxIter: Int = 50): DataFrame =
-    dedupClustersFromPairs(minhashLshPairsUnordered(docs),
-      docs.select(col("doc_id")), maxIter)
+    pairsFromSig(minhashArray(docs, bands * r), bands, r, maxBucket)
 
   /** Min-label-propagation clusters from a PRECOMPUTED pair graph —
     * the compute-once entry point ([[dedupPairGraph]] doc). `pairs`
@@ -383,102 +369,6 @@ object Dedup {
         (col("doc_id") === col("cluster_id")).as("is_canonical"))
   }
 
-  /** One large-star round (Kiveris et al., SoCC'14): every node u links
-    * each LARGER neighbor v to m = min(Γ(u) ∪ {u}). Edges stay in the
-    * canonical (a > b) orientation since v > u ≥ m. */
-  private def largeStar(edges: DataFrame): DataFrame = {
-    val nbrs = edges.select(col("a").as("u"), col("b").as("v"))
-      .union(edges.select(col("b").as("u"), col("a").as("v")))
-    val m = nbrs.groupBy(col("u"))
-      .agg(least(min(col("v")), first(col("u"))).as("m"))
-    nbrs.join(m, Seq("u"))
-      .filter(col("v") > col("u") && col("v") =!= col("m"))
-      .select(col("v").as("a"), col("m").as("b"))
-      .distinct()
-  }
-
-  /** One small-star round: orient edges toward the larger endpoint; every
-    * node u links its smaller neighborhood (and itself) to its minimum. */
-  private def smallStar(edges: DataFrame): DataFrame = {
-    val nbrs = edges.select(col("a").as("u"), col("b").as("v")) // a > b already
-    val m = nbrs.groupBy(col("u")).agg(min(col("v")).as("m"))
-    val linkNbrs = nbrs.join(m, Seq("u"))
-      .filter(col("v") =!= col("m"))
-      .select(col("v").as("a"), col("m").as("b"))
-    val linkSelf = m.select(col("u").as("a"), col("m").as("b"))
-    linkNbrs.union(linkSelf).filter(col("a") =!= col("b")).distinct()
-  }
-
-  /** Connected components via ALTERNATING large-star/small-star
-    * contraction — the O(log n)-round formulation for graphs whose
-    * diameter defeats per-hop min-label propagation ([[dedupClusters]]'s
-    * loop runs one round per hop; a 10⁶-long chain of near-dup docs
-    * would need 10⁶ rounds there but ~20 here). Each round is two
-    * groupBy-join passes over the (shrinking) edge list; convergence =
-    * edge multiset unchanged (count + order-independent hash sum).
-    * Returns (id, label) with label = component minimum; throws
-    * `IllegalStateException` if no fixpoint is reached in `maxIter`
-    * rounds. */
-  def connectedComponentsLSS(edges0: DataFrame, ids: DataFrame,
-      maxIter: Int = 30): DataFrame = {
-    // localCheckpoint (not bare persist): each round's logical plan
-    // embeds the previous round's SEVERAL times (neighbor union + min
-    // join), so lineage grows exponentially with rounds — truncating it
-    // per round is the standard iterative-graph pattern (at cluster
-    // scale, a reliable checkpoint dir plays this role). Blocks are
-    // reclaimed by the ContextCleaner once the round's frame is
-    // unreferenced.
-    // truncateLazy: the sig action below materializes each round's
-    // checkpoint in the same job (one job per round, not two)
-    var edges = Checkpoints.truncateLazy(edges0
-      .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct())
-    def sig(df: DataFrame): (Long, Long) = {
-      // order-independent set signature: count + XOR of per-edge hashes
-      // (xor, unlike sum, cannot overflow under ANSI mode)
-      val r = df.agg(count(lit(1)), expr("bit_xor(xxhash64(a, b))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var prev = sig(edges)
-    var it = 0
-    var converged = prev._1 == 0L
-    while (!converged && it < maxIter) {
-      val next = Checkpoints.truncateLazy(smallStar(largeStar(edges)))
-      val s = sig(next)
-      edges = next
-      converged = s == prev
-      prev = s
-      it += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"large-star/small-star contraction did not converge in $maxIter rounds")
-    // stars: every non-minimum node holds exactly one outgoing (a → min).
-    // The returned plan reads the last round's checkpoint blocks (held
-    // alive by the plan's RDD reference).
-    val ptr = edges.groupBy(col("a")).agg(min(col("b")).as("label"))
-      .select(col("a").as("id"), col("label"))
-    ids.join(ptr, Seq("id"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-  }
-
-  /** [[dedupClusters]] computed by [[connectedComponentsLSS]] — same
-    * output contract and the SAME DuckDB oracle (both reach the unique
-    * min-label fixpoint), different physical algorithm. */
-  def dedupClustersLSS(docs: DataFrame): DataFrame =
-    dedupClustersLSSFromPairs(minhashLshPairsUnordered(docs),
-      docs.select(col("doc_id")))
-      .orderBy(col("doc_id"))
-
-  /** Large-star/small-star clusters from a PRECOMPUTED pair graph —
-    * the compute-once LSS entry point (see [[dedupPairGraph]]). Same
-    * unordered output contract as [[dedupClustersFromPairs]]. */
-  def dedupClustersLSSFromPairs(pairs: DataFrame, ids: DataFrame): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
-    val labels = connectedComponentsLSS(edges, ids.select(col("doc_id").as("id")))
-    annotateClusters(
-      labels.select(col("id").as("doc_id"), col("label").as("cluster_id")))
-  }
-
   /** 60-bit SimHash over distinct unigram tokens (md5-derived 60-bit
     * token hashes; bit i set iff the +1/−1 vote sum over tokens > 0).
     * The vote fold runs in the ONE fused native aggregate
@@ -564,8 +454,7 @@ object Dedup {
     * shuffle) never happens. Exactly one doc per cluster is canonical
     * (the min label), so the arithmetic identities are exact. */
   def clusterStats(docs: DataFrame): DataFrame =
-    clusterLabelsFromPairs(minhashLshPairsUnordered(docs),
-      docs.select(col("doc_id")))
+    clusterLabelsFromPairs(dedupPairGraph(docs), docs.select(col("doc_id")))
       .groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
       .select(col("cluster_size"), col("n_clusters"),

@@ -105,13 +105,6 @@ object Similarity {
     embeddings.select(col("vec_id"), vecd(col("embedding")).as("v"))
   }
 
-  /** Deterministic ±1 hyperplane signs (delegates to the sign matrix the
-    * fused expressions embed): sign(t,j,d) = +1 iff the first 32 md5
-    * bits of the string (t·100000 + j·64 + d) are even. Table 0
-    * reproduces the round-1 single-table signs. */
-  def lshSign(t: Int, j: Int, d: Int): Double =
-    graft.functions.LshPlanes.sign(t, j, d)
-
   /** Corpus side: one (t, bucket) row per vector per table, via the ONE
     * fused [[graft.functions.LshBuckets]] expression — 132 separate
     * dot-product expressions made the Catalyst tree so large that

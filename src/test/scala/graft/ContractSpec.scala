@@ -1,8 +1,9 @@
 package graft
 
-/** Driver-contract guards: every declared operator must carry an oracle
-  * and a PLANS.md row, and none may silently regress to an empty result
-  * (the hash gate would "pass" an empty-vs-empty compare). */
+/** Contract guards: every declared operator must carry an oracle,
+  * a PLANS.md row and a BENCH_FULL.json timing, and none may silently
+  * regress to an empty result (the hash gate would "pass" an
+  * empty-vs-empty compare). */
 class ContractSpec extends SparkSpec {
 
   test("every query has an oracle and every oracle has a query") {
@@ -17,6 +18,15 @@ class ContractSpec extends SparkSpec {
     val declared = SparkEntry.queries.keySet
     assert(rows.sorted === declared.toList.sorted,
       s"stale rows: ${rows.toSet -- declared}; missing rows: ${declared -- rows}")
+  }
+
+  test("BENCH_FULL.json times every query and no other") {
+    import scala.jdk.CollectionConverters._
+    val timed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File("BENCH_FULL.json")).get("queries").fieldNames().asScala.toList
+    val declared = SparkEntry.queries.keySet
+    val (stale, missing) = (timed.toSet -- declared, declared -- timed)
+    assert(stale.isEmpty && missing.isEmpty, s"stale keys: $stale; missing keys: $missing")
   }
 
   test("every query returns rows at sf0.001") {

@@ -58,28 +58,12 @@ class NearestCellSpec extends SparkSpec {
     java.util.Arrays.asList(cases.map { case (n, v, cs, _) => Row(n, v, cs) }: _*),
     schema)
 
-  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
-    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def sameD2(a: Double, b: Double) = java.lang.Double.compare(a, b) == 0
 
-  for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false"))
+  for ((mode, wholeStage) <- codegenModes)
     test(s"nearest_cell: NaN ranks last, null/ragged cells are skipped ($mode)") {
       GraftFunctions.register(spark)
-      // ConvertToLocalRelation would evaluate the projection at planning
-      // time (interpreted) — exclude it so the row path is the mode's own
-      withConfs(
-        "spark.sql.codegen.factoryMode" -> mode,
-        "spark.sql.codegen.wholeStage" -> wholeStage,
-        "spark.sql.optimizer.excludedRules" ->
-          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation") {
+      inCodegenMode(mode, wholeStage) {
         val df = input().select(col("name"), expr("nearest_cell(v, cells)").as("nc"))
         val fused = PlanAudit.executedNodes(df.queryExecution.executedPlan)
           .exists(_.isInstanceOf[WholeStageCodegenExec])

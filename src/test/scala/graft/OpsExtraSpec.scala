@@ -239,6 +239,18 @@ class OpsExtraSpec extends SparkSpec {
     assert(folds.getLong(0) === folds.getLong(1))
     assert(folds.getLong(2) === folds.getLong(3))
     assert(folds.getLong(4) === folds.getLong(5))
+    // malformed UTF-8 (overlong, surrogate, above U+10FFFF) spliced into
+    // ASCII: the kernel on the raw bytes equals the ascii() fold over
+    // the JDK-decoded string
+    val spliced = StringKernelSpec.spliced
+      .map { case (name, b) => (name, b, new String(b, java.nio.charset.StandardCharsets.UTF_8)) }
+      .toDF("name", "bytes", "decoded")
+      .select(col("name"), expr("poly_hash(cast(bytes AS STRING))"),
+        expr("aggregate(sequence(1, length(decoded)), CAST(0 AS BIGINT), " +
+          "(acc, i) -> (acc * 31 + ascii(substring(decoded, i, 1))) % 4294967296)"))
+      .collect()
+    assert(spliced.length === StringKernelSpec.spliced.length)
+    spliced.foreach(r => assert(r.getLong(1) === r.getLong(2), r.getString(0)))
   }
 
   test("saltedJoin equals the plain join") {

@@ -159,28 +159,6 @@ class RangeChunkSpec extends SparkSpec {
     assert(out(5L).getAs[Boolean]("repetitive") && !out(5L).getAs[Boolean]("keep"))
   }
 
-  test("large-star/small-star components equal min-label propagation on the real graph") {
-    import graft.operators.Dedup
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val a = Dedup.dedupClusters(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).sortBy(_._1)
-    spark.catalog.clearCache()
-    val b = Dedup.dedupClustersLSS(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).sortBy(_._1)
-    assert(a.toSeq === b.toSeq)
-  }
-
-  test("LSS contraction closes a 64-node path graph (diameter >> rounds)") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val edges = (1L until 64L).map(i => (i, i + 1)).toDF("a", "b")
-    val ids = (1L to 64L).toDF("id")
-    val labels = Dedup.connectedComponentsLSS(edges, ids, maxIter = 15).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    // min-label propagation would need 63 rounds; LSS must finish in <=15
-    assert(labels.forall(_._2 === 1L), s"unconverged: ${labels.filter(_._2 != 1L).take(5).toSeq}")
-  }
-
   test("connected components throw on a path graph longer than maxIter and converge at the default") {
     import spark.implicits._
     import graft.operators.Dedup
@@ -191,14 +169,8 @@ class RangeChunkSpec extends SparkSpec {
     val minLabel = intercept[IllegalStateException](
       Dedup.clusterLabelsFromPairs(pairs, ids, maxIter = 3))
     assert(minLabel.getMessage.contains("3 rounds"), minLabel.getMessage)
-    val edges = pairs.toDF("a", "b")
-    val lss = intercept[IllegalStateException](
-      Dedup.connectedComponentsLSS(edges, ids.toDF("id"), maxIter = 1))
-    assert(lss.getMessage.contains("1 rounds"), lss.getMessage)
     assert(Dedup.clusterLabelsFromPairs(pairs, ids).collect()
       .forall(_.getAs[Long]("cluster_id") == 1L))
-    assert(Dedup.connectedComponentsLSS(edges, ids.toDF("id")).collect()
-      .forall(_.getAs[Long]("label") == 1L))
   }
 
   test("funnel enforces strict stage ordering per user") {

@@ -118,12 +118,10 @@ class Round5OpsSpec extends SparkSpec {
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
         r.getAs[Long]("cluster_size"), r.getAs[Boolean]("is_canonical"))
-    // …and derive both cluster consumers from it.
+    // …and derive the cluster consumer from it.
     val labels = Dedup.dedupClustersFromPairs(pairs, ids)
     assert(labels.collect().map(key).sortBy(_._1).toSeq ===
       Dedup.dedupClusters(d).collect().map(key).toSeq)
-    assert(Dedup.dedupClustersLSSFromPairs(pairs, ids).collect().map(key).sortBy(_._1).toSeq ===
-      Dedup.dedupClustersLSS(d).collect().map(key).toSeq)
   }
 
   test("rfm distributed ranks equal window ntile on randomized populations") {

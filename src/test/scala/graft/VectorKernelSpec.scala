@@ -71,16 +71,6 @@ class VectorKernelSpec extends SparkSpec {
       s"ELSE ${fold("x * y")} / (${norm("a")} * ${norm("b")}) END",
     fold("(x - y) * (x - y)"))
 
-  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
-    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def rows(exprs: Seq[String]): Map[Int, Seq[Option[Double]]] = {
     val df = input().select(col("id") +: exprs.map(expr): _*)
     df.collect().map { r =>
@@ -94,16 +84,10 @@ class VectorKernelSpec extends SparkSpec {
     case _ => false
   }
 
-  for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false"))
+  for ((mode, wholeStage) <- codegenModes)
     test(s"cosine_sim and dist2 equal their zip_with folds on degenerate arrays ($mode)") {
       GraftFunctions.register(spark)
-      // ConvertToLocalRelation would evaluate the projection at planning
-      // time (interpreted) — exclude it so the row path is the mode's own
-      withConfs(
-        "spark.sql.codegen.factoryMode" -> mode,
-        "spark.sql.codegen.wholeStage" -> wholeStage,
-        "spark.sql.optimizer.excludedRules" ->
-          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation") {
+      inCodegenMode(mode, wholeStage) {
         val native = input().select(kernels.map(expr): _*)
         val fused = PlanAudit.executedNodes(native.queryExecution.executedPlan)
           .exists(_.isInstanceOf[WholeStageCodegenExec])
