@@ -1,20 +1,60 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions.{col, expr, lit}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table loaders for the driver-generated test tables.
   * Declarative reads keep filter/column pushdown available to Catalyst;
   * at cluster scale the same call reads a partitioned directory tree.
+  *
+  * Schema memo: Spark infers a parquet schema by reading footers in a
+  * job of its own, on every `spark.read.parquet`. [[table]] keeps the
+  * last inferred schema per path with what it was inferred from: the
+  * leaf files (path, length, mtime) of the read's file index and the
+  * session's `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*`
+  * settings. A read whose own file index lists the same files, under the
+  * same settings, takes the known schema and starts no job; any change
+  * infers again and replaces the entry.
   */
 object Tables {
   val All: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private final case class Inferred(files: Seq[(String, Long, Long)],
+      conf: Map[String, String], schema: StructType)
+  private val inferred = new ConcurrentHashMap[String, Inferred]()
+
+  private def parquetConf(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+
+  /** The leaf files the read's own file index listed. */
+  private def leafFiles(df: DataFrame): Seq[(String, Long, Long)] =
+    df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }.flatMap {
+      case HadoopFsRelation(idx: PartitioningAwareFileIndex, _, _, _, _, _) =>
+        idx.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      case _ => Nil
+    }.sorted
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val conf = parquetConf(spark)
+    Option(inferred.get(path)).filter(_.conf == conf)
+      .map(m => m -> spark.read.schema(m.schema).parquet(path))
+      .collect { case (m, df) if leafFiles(df) == m.files => df }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        inferred.put(path, Inferred(leafFiles(df), conf, df.schema))
+        df
+      }
+  }
 
   /** `spark.sql.legacy.parquet.nanosAsLong` has NO per-read option form
     * (ParquetOptions carries only compression/mergeSchema/rebase keys) —

@@ -19,18 +19,37 @@ import graft.operators.Parity.r4
   *  - all derived doubles are rounded to 4dp at the output edge only.
   *  - every division is explicitly guarded (no engine-specific x/0).
   *
-  * Scale notes: every indicator is a window over
-  * `PARTITION BY symbol ORDER BY bar_ts` — a single hash exchange on
-  * symbol feeds the whole suite, frames are row-bounded (no unbounded
-  * buffering except the cumulative VWAP prefix sums), and everything stays
-  * inside whole-stage codegen (no UDFs). One window task per symbol is
-  * the scale unit, as for [[Ema.fold]]: a symbol's 5-minute series grows
-  * with wall-clock time, not tick volume (at most 105,120 bars a year;
-  * 8,640 in the reference's 30-day bar retention).
+  * Scale notes: the rolling indicators are windows over
+  * `PARTITION BY symbol ORDER BY bar_ts` with output ordered by
+  * (symbol, bar_ts), so one range exchange on symbol and one sort
+  * ([[bySymbol]]) feed both their windows and their output order; frames
+  * are row-bounded (no unbounded buffering except running sums), and
+  * everything stays inside whole-stage codegen (no UDFs). One window
+  * task per symbol is the scale unit, as for [[Ema.fold]]: a symbol's
+  * 5-minute series grows with wall-clock time, not tick volume (at most
+  * 105,120 bars a year; 8,640 in the reference's 30-day bar retention).
   */
 object Indicators {
 
   private val w = Window.partitionBy(col("symbol")).orderBy(col("bar_ts"))
+
+  /** The per-symbol series layout: the bars through ONE range(symbol)
+    * exchange and ONE sort by (symbol, bar_ts). Range partitioning on
+    * symbol satisfies a `partitionBy(symbol)` window's clustering and,
+    * symbol being the prefix of (symbol, bar_ts), that sort's global
+    * order; the sort in turn orders every `orderBy(bar_ts)` window and
+    * the output `orderBy(symbol, bar_ts)`, which Spark then drops as
+    * already satisfied. Rule: call it at the head of a function whose
+    * EVERY window is `partitionBy(symbol).orderBy(bar_ts)` and whose
+    * output is `orderBy(symbol, bar_ts)`, with no join between the two
+    * (a join discards the sort). The function then plans 2 exchanges
+    * (bars aggregate, this) instead of 3 (plus a hash(symbol) window
+    * exchange and the output's range exchange), and its one sort is the
+    * one its windows had. Not for `Bars.ohlcv`: aggregate panels and
+    * per-batch streaming bars have no window to feed. */
+  private[operators] def bySymbol(bars: DataFrame): DataFrame =
+    bars.repartitionByRange(col("symbol")).orderBy(col("symbol"), col("bar_ts"))
+
   private val wDate = Window.partitionBy(col("symbol"), col("bar_date")).orderBy(col("bar_ts"))
 
   /** Per-date rolling-5 moving average + per-date cumulative average of
@@ -62,19 +81,27 @@ object Indicators {
   private def davg(c: Column, n: Int): Column =
     sum(c.cast("decimal(18,6)")).over(wr(n)).cast("double") / n
 
-  /** SMA 20/50/200 (reference app/dashboard.py:98,104-105). */
-  def sma(bars: DataFrame): DataFrame =
-    bars.select(col("symbol"), col("bar_ts"), col("close"),
-        gated(20)(r4(davg(col("close"), 20))).as("sma20"),
-        gated(50)(r4(davg(col("close"), 50))).as("sma50"),
-        gated(200)(r4(davg(col("close"), 200))).as("sma200"))
+  /** SMA 20/50/200 (reference app/dashboard.py:98,104-105) in O(1) per
+    * row: each n-row DECIMAL(18,6) sum is the running DECIMAL prefix sum
+    * minus its own `lag(·, n)` (0 before row n), an exact subtraction
+    * with the same value, hence the same double, as [[davg]]'s frame sum. */
+  def sma(bars: DataFrame): DataFrame = {
+    val pre = col("pre")
+    def mean(n: Int): Column =
+      gated(n)(r4((pre - coalesce(lag(pre, n).over(w), lit(0))).cast("double") / n))
+    bySymbol(bars)
+      .select(col("symbol"), col("bar_ts"), col("close"),
+        sum(col("close").cast("decimal(18,6)")).over(wCum).as("pre"))
+      .select(col("symbol"), col("bar_ts"), col("close"),
+        mean(20).as("sma20"), mean(50).as("sma50"), mean(200).as("sma200"))
       .orderBy(col("symbol"), col("bar_ts"))
+  }
 
   /** Bollinger bands: SMA20 ± 2 × sample stddev (app/dashboard.py:97-101). */
   def bollinger(bars: DataFrame): DataFrame = {
     val sma20 = davg(col("close"), 20)
     val sd = stddev_samp(col("close")).over(wr(20))
-    bars.select(col("symbol"), col("bar_ts"), col("close"),
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("close"),
         gated(20)(r4(sma20)).as("sma20"),
         gated(20)(r4(sma20 + sd * 2)).as("bb_upper"),
         gated(20)(r4(sma20 - sd * 2)).as("bb_lower"))
@@ -88,7 +115,7 @@ object Indicators {
     val delta = col("close") - lag(col("close"), 1).over(w)
     val gain = when(delta > 0, delta).otherwise(lit(0.0))
     val loss = when(delta < 0, -delta).otherwise(lit(0.0))
-    bars.select(col("symbol"), col("bar_ts"), col("close"),
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("close"),
         gain.as("gain"), loss.as("loss"), rn.as("rn"))
       .select(col("symbol"), col("bar_ts"), col("close"),
         avg(col("gain")).over(wr(14)).as("avg_gain"),
@@ -111,7 +138,7 @@ object Indicators {
       greatest(col("high") - col("low"),
         abs(col("high") - prevClose),
         abs(col("low") - prevClose)))
-    bars.select(col("symbol"), col("bar_ts"), tr.as("tr"), rn.as("rn"))
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), tr.as("tr"), rn.as("rn"))
       .select(col("symbol"), col("bar_ts"), r4(col("tr")).as("tr"),
         when(col("rn") >= 15, r4(avg(col("tr")).over(wr(14)))).as("atr"))
       .orderBy(col("symbol"), col("bar_ts"))
@@ -124,7 +151,7 @@ object Indicators {
     val k = when(rn < 14, lit(null))
       .when(hi14 === lo14, lit(null))
       .otherwise((col("close") - lo14) / (hi14 - lo14) * 100)
-    bars.select(col("symbol"), col("bar_ts"), k.as("k_raw"), rn.as("rn"))
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), k.as("k_raw"), rn.as("rn"))
       .select(col("symbol"), col("bar_ts"), r4(col("k_raw")).as("stoch_k"),
         when(col("rn") >= 16 && count(col("k_raw")).over(wr(3)) === 3,
           r4(avg(col("k_raw")).over(wr(3)))).as("stoch_d"))
@@ -133,7 +160,7 @@ object Indicators {
 
   /** Cumulative VWAP per symbol (app/dashboard.py:377). */
   def vwap(bars: DataFrame): DataFrame =
-    bars.select(col("symbol"), col("bar_ts"), col("close"), col("volume"),
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("close"), col("volume"),
         r4(sum(col("close").cast("decimal(18,6)") * col("volume")).over(wCum).cast("double") /
           sum(col("volume")).over(wCum)).as("vwap"))
       .orderBy(col("symbol"), col("bar_ts"))
@@ -141,7 +168,7 @@ object Indicators {
   /** Rate-of-change(10) and Momentum(10) (app/dashboard.py:503-504). */
   def momentum(bars: DataFrame): DataFrame = {
     val lag10 = lag(col("close"), 10).over(w)
-    bars.select(col("symbol"), col("bar_ts"), col("close"),
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("close"),
         when(lag10.isNotNull && lag10 =!= 0,
           r4((col("close") / lag10 - 1) * 100)).as("roc"),
         r4(col("close") - lag10).as("mom"))
@@ -155,7 +182,7 @@ object Indicators {
     val signed = when(delta > 0, col("volume"))
       .when(delta < 0, -col("volume"))
       .otherwise(lit(0L))
-    bars.select(col("symbol"), col("bar_ts"), col("close"), col("volume"),
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("close"), col("volume"),
         signed.as("signed_vol"))
       .select(col("symbol"), col("bar_ts"), col("close"), col("volume"),
         sum(col("signed_vol")).over(wCum).cast("long").as("obv"))
@@ -170,7 +197,7 @@ object Indicators {
     val r = when(rn < 14, lit(null))
       .when(hi14 === lo14, lit(null))
       .otherwise(r4((hi14 - col("close")) / (hi14 - lo14) * -100))
-    bars.select(col("symbol"), col("bar_ts"), col("close"), r.as("williams_r"))
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("close"), r.as("williams_r"))
       .orderBy(col("symbol"), col("bar_ts"))
   }
 
@@ -312,8 +339,9 @@ object Indicators {
     * The (volume, bar_ts) compound order makes every row a unique peer,
     * so percent_rank = (rank−1)/(n−1) and cume_dist = rank/n are exact
     * small-integer ratios — bit-identical across engines with no
-    * rounding needed. One hash exchange on symbol, same as the rest of
-    * the indicator suite. */
+    * rounding needed. One hash exchange on symbol for the window: its
+    * (volume, bar_ts) order is not the output's, so it is not on the
+    * [[bySymbol]] layout. */
   def windowRanks(bars: DataFrame): DataFrame = {
     val wv = Window.partitionBy(col("symbol")).orderBy(col("volume"), col("bar_ts"))
     bars.select(col("symbol"), col("bar_ts"), col("volume"),
@@ -362,11 +390,11 @@ object Indicators {
     * percentage fall from it — the risk metric a dashboard plots under
     * the price chart. `peak` is a running max (exact, no float drift);
     * the ratio is computed in one association order mirrored by the
-    * oracle and is ≥ 0 by construction (no signed-zero hazard). Same
-    * single symbol-hash exchange as the rest of the indicator suite. */
+    * oracle and is ≥ 0 by construction (no signed-zero hazard). On the
+    * [[bySymbol]] layout like the rest of the rolling indicators. */
   def drawdown(bars: DataFrame): DataFrame = {
     val wPeak = w.rowsBetween(Window.unboundedPreceding, 0)
-    bars.select(col("symbol"), col("bar_ts"), col("close"),
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("close"),
         max(col("close")).over(wPeak).as("peak"))
       .select(col("symbol"), col("bar_ts"), col("close"), col("peak"),
         r4((col("peak") - col("close")) / col("peak") * lit(100.0)).as("drawdown_pct"))
@@ -486,7 +514,7 @@ object Indicators {
   def donchian(bars: DataFrame, n: Int = 20): DataFrame = {
     val upper = max(col("high")).over(wr(n))
     val lower = min(col("low")).over(wr(n))
-    bars.select(col("symbol"), col("bar_ts"), col("close"),
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("close"),
         gated(n)(r4(upper)).as("dc_upper"),
         gated(n)(r4(lower)).as("dc_lower"),
         gated(n)(r4((upper + lower) / 2)).as("dc_mid"))
@@ -506,7 +534,7 @@ object Indicators {
   def mfi(bars: DataFrame, n: Int = 14): DataFrame = {
     val tp3 = (col("high") + col("low") + col("close")).cast("decimal(18,6)")
     val zero = lit(0).cast("decimal(38,6)")
-    val base = bars.select(col("symbol"), col("bar_ts"), col("volume"),
+    val base = bySymbol(bars).select(col("symbol"), col("bar_ts"), col("volume"),
       tp3.as("tp3"), lag(tp3, 1).over(w).as("prev_tp3"), rn.as("rn"))
     val mf = (col("tp3") * col("volume")).cast("decimal(38,6)")
     val flows = base.select(col("symbol"), col("bar_ts"), col("rn"),
@@ -537,7 +565,7 @@ object Indicators {
     val lowerWick = least(col("open"), col("close")) - col("low")
     val prevOpen = lag(col("open"), 1).over(w)
     val prevClose = lag(col("close"), 1).over(w)
-    bars.select(col("symbol"), col("bar_ts"), col("open"), col("close"),
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("open"), col("close"),
         r4(body).as("body"),
         (rng > 0 && body * 10 <= rng).as("is_doji"),
         (rng > 0 && lowerWick >= body * 2 && upperWick <= body).as("is_hammer"),
@@ -559,7 +587,7 @@ object Indicators {
       col("close") > prev && col("close") > next
     val lo = prev.isNotNull && next.isNotNull &&
       col("close") < prev && col("close") < next
-    bars.select(col("symbol"), col("bar_ts"), col("close"),
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("close"),
         hi.as("swing_high"), lo.as("swing_low"))
       .filter(col("swing_high") || col("swing_low"))
       .orderBy(col("symbol"), col("bar_ts"))

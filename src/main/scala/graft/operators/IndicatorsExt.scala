@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Indicators.bySymbol
 import graft.operators.Parity.r4
 
 /** Second-wave technical indicators, extending the reference dashboard's
@@ -12,7 +13,9 @@ import graft.operators.Parity.r4
   * Money Flow, Ultimate Oscillator, Keltner channels, and Heikin-Ashi
   * candles. Same contract as [[Indicators]]: one window task per symbol
   * over 5-min bars, row-bounded frames, divisions guarded, doubles rounded
-  * 4dp at the output edge only.
+  * 4dp at the output edge only. The rolling windows whose output is
+  * ordered by (symbol, bar_ts) take their bars through
+  * [[Indicators.bySymbol]]'s one range(symbol) exchange and sort.
   *
   * Cross-engine parity devices used here (SURVEY.md §5):
   *  - Aroon's rolling argmax/argmin positions are encoded into ONE BIGINT
@@ -95,7 +98,7 @@ object IndicatorsExt {
   def aroon(bars: DataFrame, n: Int = 25): DataFrame = {
     val hiKey = cents(col("high")) * PosBase + col("rn")
     val loKey = (lit(CentCap) - cents(col("low"))) * PosBase + col("rn")
-    bars.select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
         col("high"), col("low"))
       .select(col("symbol"), col("bar_ts"), col("close"), col("rn"),
         (max(hiKey).over(wr(n)) % PosBase).as("hi_pos"),
@@ -120,7 +123,7 @@ object IndicatorsExt {
     * order on both engines. */
   def cci(bars: DataFrame, n: Int = 20): DataFrame = {
     val tp3 = (col("high") + col("low") + col("close")).cast("decimal(18,6)")
-    bars.select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
         tp3.as("tp3"))
       .select(col("symbol"), col("bar_ts"), col("close"), col("rn"), col("tp3"),
         (sum(col("tp3")).over(wr(n)).cast("double") / lit(3.0 * n)).as("sma_tp"),
@@ -144,7 +147,7 @@ object IndicatorsExt {
     val mfm = when(col("high") > col("low"),
       ((col("close") - col("low")) - (col("high") - col("close")))
         / (col("high") - col("low"))).otherwise(lit(0.0))
-    bars.select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
         (mfm * col("volume").cast("double")).as("mfv"), col("volume"))
       .select(col("symbol"), col("bar_ts"), col("close"),
         when(col("rn") >= n,
@@ -168,7 +171,7 @@ object IndicatorsExt {
       val st = sum(col("tr")).over(wr(n))
       when(st > 0, sum(col("bp")).over(wr(n)) / st)
     }
-    bars.select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
+    bySymbol(bars).select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
         bp.as("bp"), tr.as("tr"))
       .select(col("symbol"), col("bar_ts"), col("close"), col("rn"),
         ratio(7).as("a7"), ratio(14).as("a14"), ratio(28).as("a28"))
@@ -331,7 +334,7 @@ object IndicatorsExt {
     def mid(n: Int): Column =
       when(rn >= n, (max(col("high")).over(wr(n)) +
         min(col("low")).over(wr(n))) / lit(2.0))
-    bars
+    bySymbol(bars)
       .select(col("symbol"), col("bar_ts"), col("close"), rn.as("rn"),
         mid(9).as("tenkan"), mid(26).as("kijun"), mid(52).as("sb_raw"))
       .select(col("symbol"), col("bar_ts"),
@@ -514,10 +517,10 @@ object IndicatorsExt {
       sum(c.cast("decimal(38,0)")).as("sc"))
     val wrun = w.rowsBetween(Window.unboundedPreceding, 0)
     val zero = lit(0).cast("decimal(38,0)")
-    val joined = bars.join(broadcast(st), Seq("symbol"))
+    val joined = bySymbol(bars.join(broadcast(st), Seq("symbol"))
       .select(col("symbol"), col("bar_ts"), col("close"), col("n"), col("sc"),
         (col("n").cast("decimal(19,0)") * c.cast("decimal(18,0)") - col("sc"))
-          .cast("decimal(38,0)").as("dev"))
+          .cast("decimal(38,0)").as("dev")))
     val p = joined.withColumn("pref", sum(col("dev")).over(wrun))
     val s = p
       .withColumn("sp", col("pref") - least(zero, min(col("pref")).over(wrun)))

@@ -1,13 +1,17 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, functions}
 import org.apache.spark.sql.catalyst.expressions.aggregate.ApproximatePercentile
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec,
+  ObjectHashAggregateExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
 
-import graft.operators.Scope
+import graft.operators.{Bars, Indicators, Scope}
 
 /** Gates the scale contract that no query plan contains a window
   * operator with an empty partitionSpec — each such operator funnels
@@ -33,7 +37,7 @@ class PlanShapeSpec extends SparkSpec {
     "q_ann_ivf_lloyd", "q_ann_ivf", "q_drawdown", "q_topk_per_group",
     "q_quantiles", "q_up_streaks", "q_swing_points", "q_asof_join",
     "q_attribution", "q_gap_fill", "q_preprocess_mavg", "q_macd",
-    // the per-symbol indicator windows: one (symbol) hash exchange each
+    // the per-symbol indicator windows: one range(symbol) exchange each
     "q_sma", "q_bollinger", "q_rsi", "q_atr", "q_stochastic",
     "q_williams_r", "q_donchian", "q_mfi", "q_momentum", "q_obv", "q_vwap",
     "q_cusum", "q_aroon", "q_cci", "q_cmf", "q_ultimate_osc",
@@ -241,15 +245,88 @@ class PlanShapeSpec extends SparkSpec {
     exchangeGate(name, bound, "per-symbol fold")
 
   // Every rolling indicator is ONE set of windows over the per-symbol
-  // series: the bars aggregate, the (symbol) window exchange and the
-  // output sort, plus the rolling correlation's per-bar_ts index
-  // aggregate. No slack: a range-partitioned or chunked second path
-  // trips these.
+  // series: at most the bars aggregate, the (symbol) window exchange and
+  // the output sort, plus the rolling correlation's per-bar_ts index
+  // aggregate. A chunked second path trips these; the series-layout
+  // gates below hold the converted indicators one exchange lower.
   for ((name, bound) <- Seq("q_rsi" -> 3, "q_atr" -> 3,
       "q_stochastic" -> 3, "q_williams_r" -> 3, "q_donchian" -> 3,
       "q_mfi" -> 3, "q_momentum" -> 3, "q_aroon" -> 3, "q_cci" -> 3,
       "q_cmf" -> 3, "q_ultimate_osc" -> 3, "q_rolling_corr" -> 4))
     exchangeGate(name, bound, "per-symbol window")
+
+  // The series layout (`Indicators.bySymbol`): one range(symbol)
+  // exchange serves both the windows and the output order, so each of
+  // these plans the bars aggregate's exchange and that one, plus
+  // q_cusum's per-symbol totals aggregate. No slack: a window on a hash
+  // exchange of its own, or an output sort that needs a second
+  // exchange, trips these.
+  for ((name, bound) <- Seq("q_sma" -> 2, "q_bollinger" -> 2, "q_rsi" -> 2,
+      "q_atr" -> 2, "q_stochastic" -> 2, "q_vwap" -> 2, "q_momentum" -> 2,
+      "q_obv" -> 2, "q_williams_r" -> 2, "q_donchian" -> 2, "q_mfi" -> 2,
+      "q_drawdown" -> 2, "q_candles" -> 2, "q_swing_points" -> 2,
+      "q_aroon" -> 2, "q_cci" -> 2, "q_cmf" -> 2, "q_ultimate_osc" -> 2,
+      "q_ichimoku" -> 2, "q_cusum" -> 3))
+    exchangeGate(name, bound, "series layout")
+
+  /** Memory-consuming operators (Sort, HashAggregate,
+    * ObjectHashAggregate) in each stage of `root`, a stage being the
+    * subtree between exchanges. Each such operator in a task takes its
+    * own execution memory, so a stage's count bounds its task's peak. */
+  private def stageConsumers(root: SparkPlan): Seq[Int] = {
+    val stages = mutable.Buffer[Int]()
+    def count(p: SparkPlan): Int = {
+      val self = p match {
+        case _: SortExec | _: HashAggregateExec | _: ObjectHashAggregateExec => 1
+        case _ => 0
+      }
+      self + p.children.map {
+        case e: Exchange => stages += count(e.child); 0
+        case c => count(c)
+      }.sum
+    }
+    stages += count(root)
+    stages.toSeq
+  }
+
+  private def maxStageConsumers(df: => DataFrame): Int = {
+    val aqe = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.getOption(aqe)
+    try Scope {
+      spark.conf.set(aqe, "false")
+      stageConsumers(df.queryExecution.executedPlan).max
+    } finally saved.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+  }
+
+  // The dashboard panels' (and the other series-layout indicators')
+  // peak task memory, structurally: the most memory consumers any one
+  // stage of the AQE-off plan holds, pinned at the counts measured
+  // before the series layout. A window panel sorts alone in its stage;
+  // an aggregate panel's partial aggregate shares a stage with the bars'
+  // final aggregate. A layout that moves the window sort (or a panel's
+  // aggregate) into the stage that aggregates the bars trips these.
+  private val stageBound = Seq("q_sma" -> 1, "q_bollinger" -> 1, "q_rsi" -> 1,
+    "q_macd" -> 1, "q_atr" -> 1, "q_stochastic" -> 1, "q_vwap" -> 1,
+    "q_momentum" -> 1, "q_summary_stats" -> 2, "q_latest_metrics" -> 2,
+    "q_weekly_range" -> 2, "q_volume_heatmap" -> 2,
+    "q_obv" -> 1, "q_williams_r" -> 1, "q_donchian" -> 1, "q_mfi" -> 1,
+    "q_drawdown" -> 1, "q_candles" -> 1, "q_swing_points" -> 1,
+    "q_aroon" -> 1, "q_cci" -> 1, "q_cmf" -> 1, "q_ultimate_osc" -> 1,
+    "q_ichimoku" -> 1, "q_cusum" -> 2)
+
+  for ((name, bound) <- stageBound)
+    test(s"$name holds at most $bound memory consumers in any stage") {
+      val n = maxStageConsumers(SparkEntry.queries(name)(spark, sf()))
+      assert(n <= bound, s"$name puts $n memory consumers in one stage (> $bound)")
+    }
+
+  test("the stage gate sees a range exchange on the ticks: q_rsi's sorts join its aggregates") {
+    // the rejected layout: range(symbol) below the bars aggregate lets
+    // the partial and final aggregates and the window sort share a task
+    val n = maxStageConsumers(Indicators.rsi(Bars.ohlcv(
+      Tables.events(spark, sf()).repartitionByRange(functions.col("event_type")))))
+    assert(n > stageBound.toMap.apply("q_rsi"), s"range-on-ticks q_rsi holds $n per stage")
+  }
 
   // Round-14 fused nearest-cell assignment (NearestCell): the IVF/PQ
   // assignment passes need no exchange, so these bounds sit at the

@@ -39,6 +39,14 @@ def normalize(df):
     return df
 
 
+def default_memory_limit():
+    """Half of the machine's physical memory (Linux MemTotal), in whole
+    GB: room for the Spark JVM and the page cache beside DuckDB."""
+    import os
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // 2 ** 31)}GB"
+
+
 def main():
     sfdir, outdir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
@@ -48,7 +56,7 @@ def main():
     # of being OOM-killed (a killed process silently loses every
     # remaining query in the invocation). Override via GRAFT_DUCKDB_MEM.
     import os as _os
-    con.execute(f"SET memory_limit='{_os.environ.get('GRAFT_DUCKDB_MEM', '48GB')}'")
+    con.execute(f"SET memory_limit='{_os.environ.get('GRAFT_DUCKDB_MEM', default_memory_limit())}'")
     con.execute("SET temp_directory='/tmp/duckdb_spill'")
     import os
     for t in TABLES:
